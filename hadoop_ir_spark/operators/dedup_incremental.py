@@ -9,7 +9,8 @@ The persisted **dedup index** is a snapshot-partitioned parquet
 fingerprint store: one directory per table, one ``snap=<id>`` subdir
 per accepted snapshot, and an atomically-swapped ``MANIFEST.json``
 naming the visible snapshot ids (plus the last applied streaming batch
-id — the restart-safety cursor). Eight tables:
+id — the restart-safety cursor). Seventeen tables (``_ALL_TABLES``):
+the sixteen below plus ``tombstones``, described after them.
 
 - ``content_hashes(docno, content_hash)`` — md5 of the raw text, the
   exact-duplicate path (also the only path that can catch docs too
@@ -243,6 +244,14 @@ _SORT_KEYS = {
 _ALL_TABLES = (*INDEX_TABLES, EMBEDDINGS_TABLE, ANN_CENTROIDS, ANN_ASSIGN,
                ANN_CODEBOOK, ANN_CODES, SQ_BOUNDS, SQ_CODES, CC_LABELS,
                CC_ALIAS, TOMBSTONES)
+
+# trained manifest block -> (artifact snap key, per-doc table, per-doc
+# snaps key, the call that trains it)
+_TRAINED = {
+    "ann": ("centroid_snap", ANN_ASSIGN, "assign_snaps", "train_ann_index"),
+    "pq": ("codebook_snap", ANN_CODES, "code_snaps", "train_pq_index"),
+    "sq": ("bounds_snap", SQ_CODES, "code_snaps", "train_sq_index"),
+}
 
 
 def _norm(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -549,6 +558,16 @@ def _live_rows_tomb(spark: SparkSession, index_dir: str, table: str,
             .drop("_snap", "_tsnap"))
 
 
+def _block_rows(spark: SparkSession, index_dir: str, man: dict, blk: str,
+                vis: list[int]) -> DataFrame | None:
+    """The live per-doc rows of trained block ``blk`` (``ann_assign``,
+    ``ann_codes`` or ``sq_codes``): its visible snaps, every visible
+    tombstone applied."""
+    _, table, snaps_key, _ = _TRAINED[blk]
+    return _live_rows_tomb(spark, index_dir, table,
+                           [s for s in man[blk][snaps_key] if s in vis], vis)
+
+
 def _delta_log(spark: SparkSession, index_dir: str, table: str,
                snaps=None) -> DataFrame:
     """The raw count-delta log of ``table`` over the visible snaps —
@@ -590,36 +609,17 @@ def load_dedup_index(spark: SparkSession, index_dir: str,
     if emb is not None:
         out[EMBEDDINGS_TABLE] = emb
     man = _read_manifest(index_dir)
-    if man.get("ann"):
-        vis = _visible_snaps(index_dir, snaps)
-        if man["ann"]["centroid_snap"] in vis:
-            out[ANN_CENTROIDS] = _ann_centroid_frame(spark, index_dir,
-                                                     man)
-            assign = _live_rows_tomb(
-                spark, index_dir, ANN_ASSIGN,
-                [s for s in man["ann"]["assign_snaps"] if s in vis], vis)
-            if assign is not None:
+    vis = list(man["snaps"]) if snaps is None else list(snaps)
+    for blk, artifact, read in (("ann", ANN_CENTROIDS, _ann_centroid_frame),
+                                ("pq", ANN_CODEBOOK, _pq_codebook_frame),
+                                ("sq", SQ_BOUNDS, _sq_bounds_frame)):
+        if man.get(blk) and man[blk][_TRAINED[blk][0]] in vis:
+            out[artifact] = read(spark, index_dir, man)
+            rows = _block_rows(spark, index_dir, man, blk, vis)
+            if rows is not None:
                 # the src training-provenance tag (r12) is maintenance
                 # metadata for ann_health, not logical index content
-                out[ANN_ASSIGN] = assign.drop("src")
-    if man.get("pq"):
-        vis = _visible_snaps(index_dir, snaps)
-        if man["pq"]["codebook_snap"] in vis:
-            out[ANN_CODEBOOK] = _pq_codebook_frame(spark, index_dir, man)
-            codes = _live_rows_tomb(
-                spark, index_dir, ANN_CODES,
-                [s for s in man["pq"]["code_snaps"] if s in vis], vis)
-            if codes is not None:
-                out[ANN_CODES] = codes.drop("src")
-    if man.get("sq"):
-        vis = _visible_snaps(index_dir, snaps)
-        if man["sq"]["bounds_snap"] in vis:
-            out[SQ_BOUNDS] = _sq_bounds_frame(spark, index_dir, man)
-            sqc = _live_rows_tomb(
-                spark, index_dir, SQ_CODES,
-                [s for s in man["sq"]["code_snaps"] if s in vis], vis)
-            if sqc is not None:
-                out[SQ_CODES] = sqc.drop("src")
+                out[_TRAINED[blk][1]] = rows.drop("src")
     if man.get("cc"):
         try:
             out[CC_LABELS] = cc_labels_frame(spark, index_dir, snaps)
@@ -1693,93 +1693,6 @@ def train_ann_index(spark: SparkSession, index_dir: str, *,
     att.commit(_mut)
 
 
-def _filter_docnos(filter_docs: DataFrame) -> DataFrame:
-    """Normalize a caller-supplied metadata-filter allowlist to a
-    distinct single-column (docno) frame: the column named ``docno`` if
-    present, else the frame's first column. The serving paths apply it
-    as a semi-join on docno — a plain (non-broadcast-forced) join, so
-    AQE broadcasts a small allowlist (a tenant, a date range) while a
-    corpus-scale one shuffle-hash-joins against the already-bounded
-    candidate set; either way the filter never widens a plan."""
-    col = ("docno" if "docno" in filter_docs.columns
-           else filter_docs.columns[0])
-    return filter_docs.select(F.col(col).alias("docno")).distinct()
-
-
-def indexed_ann_topk(queries: DataFrame, index_dir: str, *,
-                     k: int = 10, nprobe: int = 4,
-                     qid_col: str = "qid", vec_col: str = "embedding",
-                     filter_docs: DataFrame | None = None,
-                     snaps=None) -> DataFrame:
-    """IVF approximate top-k served ENTIRELY from the persisted index:
-    (qid, docno, cosine, rank) — probe the ``nprobe`` centroids nearest
-    each query, score only live vectors assigned to those lists. Same
-    probe/rank semantics as ``similarity.ivf_topk`` (rounded cosine,
-    docno-desc tie-break), but assignment comes from the ``ann_assign``
-    table instead of a per-session re-derivation — the fold/retraction
-    story is the store's, and the only old-side touches are the pruned
-    centroid_id equi-join on ann_assign (range-partitioned on
-    centroid_id, ~nprobe/|C| of the files) plus the embedding fetch for
-    the candidate docnos.
-
-    ``filter_docs`` (r12) is metadata-filtered vector search: an
-    allowlist frame (docno, or first column) semi-joined into the
-    candidate set BEFORE the embedding fetch — the filtered search is
-    exact over the probed lists (every allowed candidate in a probed
-    list is scored; results are the true filtered top-k of the probed
-    set), and the fetch/score cost SHRINKS with filter selectivity.
-    This is the pre-filter strategy; the post-filter trap (filtering a
-    fixed-size unfiltered shortlist) exists only on the shortlist-based
-    ``indexed_ivfpq_topk`` path, where both modes are offered and
-    ``ann_recall_filtered`` measures the gap."""
-    from hadoop_ir_spark.operators.dedup import cosine_expr
-
-    spark = queries.sparkSession
-    man = _read_manifest(index_dir)
-    if not man.get("ann"):
-        raise ValueError(
-            f"dedup index at {index_dir} has no trained ANN index — run "
-            f"train_ann_index first")
-    snaps = _visible_snaps(index_dir, snaps)
-    if man["ann"]["centroid_snap"] not in snaps:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir}: the trained centroid snap "
-            f"{man['ann']['centroid_snap']} is not in the visible snaps "
-            f"{snaps}")
-    cents = _ann_centroid_frame(spark, index_dir, man)
-    assign_snaps = [s for s in man["ann"]["assign_snaps"] if s in snaps]
-    assign = _live_rows_tomb(spark, index_dir, ANN_ASSIGN,
-                             assign_snaps, snaps)
-    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE, snaps)
-    if assign is None or emb is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible ann_assign/"
-            f"embeddings data for snaps {snaps}")
-
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       F.col(vec_col).alias("qv"))
-    qprobe = q.crossJoin(F.broadcast(cents)).select(
-        "qid", "qv", "centroid_id",
-        cosine_expr(F.col("qv"), F.col("cv")).alias("csim"))
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"),
-                                           F.asc("centroid_id"))
-    probes = (qprobe.withColumn("_r", F.row_number().over(wq))
-              .filter(F.col("_r") <= nprobe)
-              .select("qid", "qv", "centroid_id"))
-    cand = assign.join(F.broadcast(probes), "centroid_id")
-    if filter_docs is not None:
-        cand = cand.join(_filter_docnos(filter_docs), "docno", "semi")
-    cand = cand.join(emb.select("docno", F.col("embedding").alias("v")),
-                     "docno")
-    scored = cand.select(
-        "qid", "docno",
-        F.round(cosine_expr(F.col("v"), F.col("qv")), 6).alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                          F.desc("docno"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
 def _pq_codebook_frame(spark: SparkSession, index_dir: str,
                        man: dict) -> DataFrame:
     """The trained sub-codebook table (s, code, cv) — read from the snap
@@ -1896,10 +1809,8 @@ def train_pq_index(spark: SparkSession, index_dir: str, *,
         # the documented "IVF retrain invalidates residual codes"
         # invariant, enforced loudly instead of by prose.
         ivf_gen = man["ann"].get("generation", 0)
-        vis = list(man["snaps"])
-        assign = _live_rows_tomb(
-            spark, index_dir, ANN_ASSIGN,
-            [s for s in man["ann"]["assign_snaps"] if s in vis], vis)
+        assign = _block_rows(spark, index_dir, man, "ann",
+                             list(man["snaps"]))
         emb = _residual_frame(emb, assign,
                               _ann_centroid_frame(spark, index_dir, man))
     if codebook is None:
@@ -1932,296 +1843,6 @@ def train_pq_index(spark: SparkSession, index_dir: str, *,
         return mn
 
     att.commit(_mut)
-
-
-def indexed_pq_topk(queries: DataFrame, index_dir: str, *,
-                    k: int = 10, qid_col: str = "qid",
-                    vec_col: str = "embedding",
-                    snaps=None) -> DataFrame:
-    """PQ/ADC approximate top-k served ENTIRELY from the persisted
-    index: (qid, docno, approx_d2, rank) — build the per-query lookup
-    table against the persisted codebook (broadcast, ≤ m·k rows per
-    query), integer-sum the per-subspace distances over the live
-    ``ann_codes`` rows, rank ascending (nearest first, docno-desc
-    tie-break). Same LUT/rank semantics as ``similarity.pq_topk``, but
-    the corpus-side codes come from the store instead of a per-session
-    re-encode — the scan touches only (docno, s, code) ints, never a
-    raw vector, and retraction is the store's tombstones."""
-    from hadoop_ir_spark.operators import similarity
-
-    spark = queries.sparkSession
-    man = _read_manifest(index_dir)
-    if not man.get("pq"):
-        raise ValueError(
-            f"dedup index at {index_dir} has no trained PQ index — run "
-            f"train_pq_index first")
-    if man["pq"].get("residual"):
-        raise ValueError(
-            f"dedup index at {index_dir} carries RESIDUAL PQ codes "
-            f"(x − c(x)) — a flat ADC scan cannot score them without "
-            f"each doc's coarse centroid; use indexed_ivfpq_topk")
-    vis = _visible_snaps(index_dir, snaps)
-    if man["pq"]["codebook_snap"] not in vis:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir}: the trained codebook snap "
-            f"{man['pq']['codebook_snap']} is not in the visible snaps "
-            f"{vis}")
-    cb = _pq_codebook_frame(spark, index_dir, man)
-    code_snaps = [s for s in man["pq"]["code_snaps"] if s in vis]
-    codes = _live_rows_tomb(spark, index_dir, ANN_CODES, code_snaps, vis)
-    if codes is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible ann_codes data "
-            f"for snaps {vis}")
-    lut = similarity.pq_lut(queries, cb, m=man["pq"]["m"],
-                            qid_col=qid_col, vec_col=vec_col,
-                            dims=man["pq"]["dims"])
-    return (similarity.pq_topk(
-        codes.withColumnRenamed("docno", "vec_id"), lut, k=k)
-        .withColumnRenamed("vec_id", "docno"))
-
-
-def ivfpq_ranked_probes(queries: DataFrame, index_dir: str, *,
-                        qid_col: str = "qid",
-                        vec_col: str = "embedding") -> DataFrame:
-    """The FULL per-query centroid ranking ``(qid, qv, centroid_id,
-    _r)`` — the subtree every ``indexed_ivfpq_topk`` call re-derives
-    before filtering ``_r <= nprobe``. An nprobe SWEEP (the
-    ``ann_recall_sweep`` catalog query) ranks once, materializes this
-    frame, and hands it to each arm via ``ranked_probes=`` so the four
-    arms share one ranking instead of four identical
-    crossJoin+window subtrees (r13, VERDICT r12 #7). |queries| x |C|
-    rows — the same size the per-arm subtree always produced."""
-    from hadoop_ir_spark.operators.dedup import cosine_expr
-
-    spark = queries.sparkSession
-    man = _read_manifest(index_dir)
-    cents = _ann_centroid_frame(spark, index_dir, man)
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       F.col(vec_col).alias("qv"))
-    qprobe = q.crossJoin(F.broadcast(cents)).select(
-        "qid", "qv", "centroid_id",
-        cosine_expr(F.col("qv"), F.col("cv")).alias("csim"))
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"),
-                                           F.asc("centroid_id"))
-    return (qprobe.withColumn("_r", F.row_number().over(wq))
-            .select("qid", "qv", "centroid_id", "_r"))
-
-
-def indexed_ivfpq_topk(queries: DataFrame, index_dir: str, *,
-                       k: int = 10, nprobe: int = 4,
-                       refine: int | None = None,
-                       qid_col: str = "qid",
-                       vec_col: str = "embedding",
-                       filter_docs: DataFrame | None = None,
-                       filter_mode: str = "pre",
-                       ranked_probes: DataFrame | None = None,
-                       snaps=None) -> DataFrame:
-    """IVF-PQ approximate top-k — the composition of the store's two
-    persisted indexes and the 100 TB serving path: probe the ``nprobe``
-    centroids nearest each query (``ann_centroids``), restrict to live
-    vectors assigned to those lists (``ann_assign``, range-partitioned
-    on centroid_id so ~nprobe/|C| of the files are read), then score
-    ONLY those candidates via the compressed ADC scan (``ann_codes``
-    joined to the broadcast per-query LUT — 2 ints per subspace, never
-    a raw vector). Returns (qid, docno, approx_d2, rank), ranked by
-    ascending quantized distance with docno-desc tie-break — the PQ
-    family's semantics restricted to the IVF candidate set. Both
-    indexes fold O(snapshot) and retract through the shared tombstones,
-    so the composed query inherits the store's whole maintenance story.
-
-    ``refine`` (VERDICT r10 #1) adds the exact re-rank stage production
-    IVF-PQ serving runs: keep the top ``refine`` ADC candidates per
-    query (same ordering, so the shortlist is deterministic), fetch
-    their TRUE vectors via a pruned docno equi-join on the store's own
-    ``embeddings`` table — O(|queries|·refine) rows, the only raw
-    vectors the query ever touches — and re-rank by exact rounded
-    cosine with the standard docno-desc tie-break. Returns (qid, docno,
-    cosine, rank) in that mode: the recall the codebook quantization
-    loses is recovered at the cost of one bounded fetch
-    (``ann_recall_ivfpq`` in the catalog measures the gap).
-
-    ``filter_docs`` + ``filter_mode`` (r12) is metadata-filtered vector
-    search, the production trade every filtered-ANN system exposes:
-
-    - ``"pre"`` (default): the allowlist is semi-joined into the probed
-      candidate set BEFORE the ADC scan — every allowed candidate in a
-      probed list is scored, results are the true filtered top-k of the
-      probed set, and the compressed scan SHRINKS with filter
-      selectivity. Filtered recall matches unfiltered recall.
-    - ``"post"``: the ADC shortlist is drawn UNFILTERED (top ``refine``
-      — or top ``k`` when no refine stage — by quantized distance) and
-      the allowlist is applied to that fixed-size shortlist afterwards:
-      allowed docs pushed out of the shortlist by disallowed ones are
-      LOST, so queries may return fewer than k rows and recall decays
-      with filter selectivity. This is the mode a filter-oblivious
-      index forces; ``refine`` doubles as its oversampling mitigation
-      (draw refine ≫ k, then filter + exact re-rank).
-
-    ``ann_recall_filtered`` in the catalog measures pre vs post recall
-    against the brute-force filtered ground truth at every SF. The
-    allowlist join is a plain semi-join on docno (AQE broadcasts small
-    allowlists; corpus-scale ones shuffle-hash against the bounded
-    candidate/shortlist side)."""
-    from hadoop_ir_spark.operators import similarity
-    from hadoop_ir_spark.operators.dedup import cosine_expr
-
-    spark = queries.sparkSession
-    man = _read_manifest(index_dir)
-    if not man.get("ann") or not man.get("pq"):
-        raise ValueError(
-            f"dedup index at {index_dir} needs BOTH trained indexes for "
-            f"IVF-PQ — run train_ann_index and train_pq_index first")
-    vis = _visible_snaps(index_dir, snaps)
-    for blk, key in (("ann", "centroid_snap"), ("pq", "codebook_snap")):
-        if man[blk][key] not in vis:
-            raise FileNotFoundError(
-                f"dedup index at {index_dir}: trained {blk} snap "
-                f"{man[blk][key]} is not in the visible snaps {vis}")
-    if man["pq"].get("residual"):
-        # staleness guard (r12, VERDICT r11 #1): residual codes encode
-        # x − c(x) against the centroid GENERATION recorded at PQ-train
-        # time; an IVF retrain bumps the store's generation and orphans
-        # them (decoding old residuals against new centroids is silently
-        # wrong ADC arithmetic). Refuse loudly, naming the repair.
-        pq_gen = man["pq"].get("ivf_generation", 0)
-        ann_gen = man["ann"].get("generation", 0)
-        if pq_gen != ann_gen:
-            raise ValueError(
-                f"dedup index at {index_dir}: the residual PQ codes "
-                f"were trained against IVF centroid generation "
-                f"{pq_gen} but the store now serves generation "
-                f"{ann_gen} — an IVF retrain invalidates residual "
-                f"codes (they encode x − c_old(x)); run "
-                f"train_pq_index(retrain=True, residual=True) to "
-                f"re-encode (maintain_dedup_index retrains both in "
-                f"the safe order)")
-    cents = _ann_centroid_frame(spark, index_dir, man)
-    assign = _live_rows_tomb(
-        spark, index_dir, ANN_ASSIGN,
-        [s for s in man["ann"]["assign_snaps"] if s in vis], vis)
-    codes = _live_rows_tomb(
-        spark, index_dir, ANN_CODES,
-        [s for s in man["pq"]["code_snaps"] if s in vis], vis)
-    if assign is None or codes is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible ann_assign/"
-            f"ann_codes data for snaps {vis}")
-
-    fd = None
-    if filter_docs is not None:
-        if filter_mode not in ("pre", "post"):
-            raise ValueError(
-                f"filter_mode must be 'pre' or 'post', got "
-                f"{filter_mode!r}")
-        fd = _filter_docnos(filter_docs)
-
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       F.col(vec_col).alias("qv"))
-    qprobe = q.crossJoin(F.broadcast(cents)).select(
-        "qid", "qv", "centroid_id",
-        cosine_expr(F.col("qv"), F.col("cv")).alias("csim"))
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"),
-                                           F.asc("centroid_id"))
-    probes = (qprobe.withColumn("_r", F.row_number().over(wq))
-              .filter(F.col("_r") <= nprobe)
-              .select("qid", "qv", "centroid_id"))
-    if ranked_probes is not None:
-        # pre-ranked (qid, qv, centroid_id, _r) from ivfpq_ranked_probes
-        # — identical ranking, shared across an nprobe sweep's arms
-        # instead of re-deriving the crossJoin+window subtree per arm
-        probes = (ranked_probes.filter(F.col("_r") <= nprobe)
-                  .select("qid", "qv", "centroid_id"))
-    mm, dims = man["pq"]["m"], man["pq"]["dims"]
-    if man["pq"].get("residual"):
-        # IVFADC residual path (r11): the codes encode x − c(x), so the
-        # ADC table is per (query, PROBED centroid) — rq = q − c, LUT
-        # over rq's sub-slices (|q|·nprobe·m·k rows, broadcast), and
-        # each candidate joins the LUT row of its OWN list. Same
-        # quantized-integer d2 arithmetic as similarity.pq_lut.
-        sub = dims // mm
-        rq = (probes.join(F.broadcast(cents), "centroid_id")
-              .select("qid", "centroid_id",
-                      F.zip_with(F.col("qv").cast("array<double>"),
-                                 F.col("cv"),
-                                 lambda a, b: a - b).alias("_rq")))
-        qs = rq.select(
-            "qid", "centroid_id",
-            similarity._sub_slices(F.col("_rq"), mm, sub, "qv")
-            .alias("_e")).select("qid", "centroid_id",
-                                 F.col("_e.s").alias("s"),
-                                 F.col("_e.qv").alias("qv"))
-        d2 = (similarity.dot_expr(F.col("qv"), F.col("qv"))
-              - F.lit(2.0) * similarity.dot_expr(F.col("qv"),
-                                                 F.col("cv"))
-              + similarity.dot_expr(F.col("cv"), F.col("cv")))
-        lut = qs.join(F.broadcast(_pq_codebook_frame(
-            spark, index_dir, man)), "s").select(
-            "qid", "centroid_id", "s", "code",
-            F.floor(d2 * 1e6 + F.lit(0.5)).cast("long").alias("d2_i"))
-        cand = assign.join(F.broadcast(probes.select(
-            "qid", "centroid_id")), "centroid_id").select(
-            "qid", "docno", "centroid_id")
-        if fd is not None and filter_mode == "pre":
-            cand = cand.join(fd, "docno", "semi")
-        scored = (codes.join(cand, "docno")
-                  .join(F.broadcast(lut),
-                        ["qid", "centroid_id", "s", "code"])
-                  .groupBy("qid", "docno")
-                  .agg(F.sum("d2_i").alias("_di")))
-    else:
-        cand = assign.join(F.broadcast(probes.select(
-            "qid", "centroid_id")), "centroid_id").select("qid", "docno")
-        if fd is not None and filter_mode == "pre":
-            cand = cand.join(fd, "docno", "semi")
-        lut = similarity.pq_lut(queries, _pq_codebook_frame(
-            spark, index_dir, man), m=mm, qid_col=qid_col,
-            vec_col=vec_col, dims=dims)
-        scored = (codes.join(cand, "docno")
-                  .join(F.broadcast(lut), ["qid", "s", "code"])
-                  .groupBy("qid", "docno")
-                  .agg(F.sum("d2_i").alias("_di")))
-    w = Window.partitionBy("qid").orderBy(F.asc("_di"), F.desc("docno"))
-    if refine is None:
-        out = (scored.withColumn("rank", F.row_number().over(w))
-               .filter(F.col("rank") <= k))
-        if fd is not None and filter_mode == "post":
-            # the post-filter trap, faithfully: the top-k shortlist is
-            # drawn filter-blind, THEN filtered — survivors re-numbered
-            # (same (_di, docno) ordering), queries may return < k rows.
-            out = (out.join(fd, "docno", "semi")
-                   .withColumn("rank", F.row_number().over(w)))
-        return out.select("qid", "docno",
-                          F.round(F.col("_di").cast("double") / 1e6, 6)
-                          .alias("approx_d2"),
-                          F.col("rank").cast("int").alias("rank"))
-    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE, vis)
-    if emb is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible embeddings data "
-            f"for the refine stage (snaps {vis})")
-    shortlist = (scored.withColumn("_r", F.row_number().over(w))
-                 .filter(F.col("_r") <= int(refine))
-                 .select("qid", "docno"))
-    if fd is not None and filter_mode == "post":
-        # post-filter with oversampling: the refine-sized shortlist is
-        # drawn filter-blind, the allowlist prunes it, and the exact
-        # re-rank runs on the survivors — refine ≫ k is the standard
-        # mitigation for post-filter recall decay.
-        shortlist = shortlist.join(fd, "docno", "semi")
-    exact = (shortlist
-             .join(emb.select("docno", F.col("embedding").alias("v")),
-                   "docno")
-             .join(F.broadcast(q.select("qid", "qv")), "qid")
-             .select("qid", "docno",
-                     F.round(cosine_expr(F.col("v"), F.col("qv")), 6)
-                     .alias("cosine")))
-    w2 = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                           F.desc("docno"))
-    return (exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("qid", "docno", "cosine",
-                    F.col("rank").cast("int").alias("rank")))
 
 
 # ---------------------------------------------------------------------------
@@ -2345,24 +1966,267 @@ def train_sq_index(spark: SparkSession, index_dir: str, *,
     att.commit(_mut)
 
 
-def _sq_live_codes(spark: SparkSession, index_dir: str, man: dict,
-                   snaps=None):
-    """(vis, codes): the live SQ code rows under the usual visibility /
-    tombstone discipline, with the trained-artifact snap checked."""
-    vis = _visible_snaps(index_dir, snaps)
-    if man["sq"]["bounds_snap"] not in vis:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir}: the trained sq bounds snap "
-            f"{man['sq']['bounds_snap']} is not in the visible snaps "
-            f"{vis}")
-    codes = _live_rows_tomb(
-        spark, index_dir, SQ_CODES,
-        [s for s in man["sq"]["code_snaps"] if s in vis], vis)
-    if codes is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible sq_codes data "
-            f"for snaps {vis}")
-    return vis, codes
+# ---------------------------------------------------------------------------
+# ANN serving: one pipeline for every persisted codec. The public
+# ``indexed_*`` functions and ``ivfpq_ranked_probes`` are thin wrappers
+# over ``_serve_gate`` and ``_serve``.
+# ---------------------------------------------------------------------------
+
+def _filter_docnos(filter_docs: DataFrame) -> DataFrame:
+    """Normalize a caller-supplied metadata-filter allowlist to a
+    distinct single-column (docno) frame: the column named ``docno`` if
+    present, else the frame's first column."""
+    col = ("docno" if "docno" in filter_docs.columns
+           else filter_docs.columns[0])
+    return filter_docs.select(F.col(col).alias("docno")).distinct()
+
+
+def _serve_gate(index_dir: str, blocks: tuple, snaps=None,
+                filter_mode: str = "pre") -> tuple[dict, list[int]]:
+    """(manifest, visible snaps) for a serve over the trained ``blocks``,
+    from one read of the manifest. Refuses with ValueError a bad
+    ``filter_mode``, an untrained block (naming its ``train_*`` call)
+    and residual PQ codes served flat or against a retrained IVF
+    generation; with FileNotFoundError a trained artifact snap outside
+    the visible snaps."""
+    if filter_mode not in ("pre", "post"):
+        raise ValueError(
+            f"filter_mode must be 'pre' or 'post', got {filter_mode!r}")
+    man = _read_manifest(index_dir)
+    missing = [_TRAINED[b][3] for b in blocks if not man.get(b)]
+    if missing:
+        raise ValueError(
+            f"dedup index at {index_dir} lacks a trained index this serve "
+            f"needs — run {' and '.join(missing)} first")
+    vis = list(man["snaps"]) if snaps is None else list(snaps)
+    for b in blocks:
+        sid = man[b][_TRAINED[b][0]]
+        if sid not in vis:
+            raise FileNotFoundError(
+                f"dedup index at {index_dir}: the trained {b} snap {sid} "
+                f"is not in the visible snaps {vis}")
+    if "pq" in blocks and man["pq"].get("residual"):
+        if "ann" not in blocks:
+            raise ValueError(
+                f"dedup index at {index_dir} carries RESIDUAL PQ codes "
+                f"(x − c(x)) — a flat ADC scan cannot score them without "
+                f"each doc's coarse centroid; use indexed_ivfpq_topk")
+        # residual codes encode x − c(x) against the centroid generation
+        # stamped at PQ-train time; decoding them against retrained
+        # centroids is silently wrong ADC arithmetic
+        pq_gen = man["pq"].get("ivf_generation", 0)
+        ann_gen = man["ann"].get("generation", 0)
+        if pq_gen != ann_gen:
+            raise ValueError(
+                f"dedup index at {index_dir}: the residual PQ codes "
+                f"were trained against IVF centroid generation "
+                f"{pq_gen} but the store now serves generation "
+                f"{ann_gen} — an IVF retrain invalidates residual "
+                f"codes (they encode x − c_old(x)); run "
+                f"train_pq_index(retrain=True, residual=True) to "
+                f"re-encode (maintain_dedup_index retrains both in "
+                f"the safe order)")
+    return man, vis
+
+
+def _serve(queries: DataFrame, index_dir: str, *, codec: str | None,
+           ivf: bool, k: int, nprobe: int = 0, refine: int | None = None,
+           qid_col: str = "qid", vec_col: str = "embedding",
+           filter_docs: DataFrame | None = None, filter_mode: str = "pre",
+           ranked_probes: DataFrame | None = None, snaps=None) -> DataFrame:
+    """Top-k served entirely from the persisted store. ``codec`` is what
+    the store scores: None (raw ``embeddings``), ``"sq"`` or ``"pq"``;
+    ``ivf`` puts the IVF probe in front. Every stage is written once:
+
+    - **gate** (``_serve_gate``): one manifest read, trained blocks and
+      their artifact snaps visible, the residual-generation guard;
+    - **probe** (IVF): the ``nprobe`` centroids nearest each query
+      (``similarity._probe_ranking``, or a precomputed ``ranked_probes``
+      frame shared across an nprobe sweep); flat serves skip it;
+    - **candidates**: the probed lists' live ``ann_assign`` rows (the
+      table is range-partitioned on centroid_id, so ~nprobe/|C| of the
+      files are read) joined to the codec's live per-doc rows — or, flat,
+      every live row. Live means the visible snaps minus tombstoned
+      docs. A ``"pre"`` allowlist is semi-joined here, before any
+      scoring, so the result is the true filtered top-k of the probed
+      set and the scan shrinks with filter selectivity;
+    - **score**: rounded cosine of the raw or SQ8-decoded vector; or, for
+      PQ, the integer-summed ADC lookup table (per query, or per
+      (query, probed list) over ``q − c`` for residual codes) — the PQ
+      scan reads only (docno, s, code) ints;
+    - **refine** (optional): the top ``refine`` candidates are re-scored
+      by the exact rounded cosine of their raw vectors, fetched by a
+      docno join on ``embeddings``;
+    - **post-filter**: a ``"post"`` allowlist is applied to the
+      filter-blind top-k (or refine) shortlist and the survivors are
+      renumbered — queries may return fewer than k rows;
+    - **top-k**: rank by rounded cosine descending, or quantized d2
+      ascending, with the docno-desc tie-break → (qid, docno, cosine |
+      approx_d2, rank)."""
+    from hadoop_ir_spark.operators import similarity
+    from hadoop_ir_spark.operators.dedup import cosine_expr
+
+    spark = queries.sparkSession
+    man, vis = _serve_gate(index_dir, ("ann",) * ivf + (codec,) * bool(codec),
+                           snaps, filter_mode)
+
+    def live(blk=None):
+        table = _TRAINED[blk][1] if blk else EMBEDDINGS_TABLE
+        rows = (_block_rows(spark, index_dir, man, blk, vis) if blk
+                else _live_rows_tomb(spark, index_dir, table, vis, vis))
+        if rows is None:
+            raise FileNotFoundError(
+                f"dedup index at {index_dir} has no visible {table} data "
+                f"for snaps {vis}")
+        return rows
+
+    fd = None if filter_docs is None else _filter_docnos(filter_docs)
+
+    def allow(df):
+        # plain semi-join: AQE broadcasts a small allowlist, a
+        # corpus-scale one shuffle-joins against the bounded side
+        return df.join(fd, "docno", "semi")
+
+    def topk(df, order, n=None):
+        df = df.withColumn("rank", F.row_number().over(
+            Window.partitionBy("qid").orderBy(*order)))
+        return df if n is None else df.filter(F.col("rank") <= n)
+
+    def by_cosine(pairs, vec):
+        return (pairs.select("qid", "docno", F.round(cosine_expr(
+            vec, F.col("qv")), 6).alias("cosine")),
+            [F.desc("cosine"), F.desc("docno")], F.col("cosine"))
+
+    q = queries.select(F.col(qid_col).alias("qid"),
+                       F.col(vec_col).alias("qv"))
+    pre, post = (fd is not None and filter_mode == m for m in ("pre", "post"))
+    rows = live(codec)
+    if ivf:
+        cents = _ann_centroid_frame(spark, index_dir, man)
+        if ranked_probes is None:
+            ranked_probes = similarity._probe_ranking(q, cents, vec_col="qv")
+        probes = (ranked_probes.filter(F.col("_r") <= nprobe)
+                  .select("qid", "qv", "centroid_id"))
+        cand = live("ann").join(F.broadcast(probes), "centroid_id")
+        pairs = (allow(cand) if pre else cand).join(rows, "docno")
+    else:
+        pairs = allow(rows) if pre else rows
+        if codec != "pq":
+            pairs = pairs.crossJoin(F.broadcast(q))
+    if codec == "pq":
+        residual = bool(man["pq"].get("residual"))
+        lut_q = q
+        if residual:
+            lut_q = probes.join(F.broadcast(cents), "centroid_id").select(
+                "qid", "centroid_id",
+                F.zip_with(F.col("qv").cast("array<double>"), F.col("cv"),
+                           lambda a, b: a - b).alias("qv"))
+        lut = similarity.pq_lut(
+            lut_q, _pq_codebook_frame(spark, index_dir, man),
+            m=man["pq"]["m"], vec_col="qv", dims=man["pq"]["dims"],
+            key_cols=("centroid_id",) * residual)
+        keys = ["qid"] * ivf + ["centroid_id"] * residual + ["s", "code"]
+        scored, order, value = (
+            pairs.join(F.broadcast(lut), keys).groupBy("qid", "docno")
+            .agg(F.sum("d2_i").alias("_di")),
+            [F.asc("_di"), F.desc("docno")],
+            F.round(F.col("_di").cast("double") / 1e6, 6).alias("approx_d2"))
+    elif codec == "sq":
+        lo, hi, _ = _sq_bound_arrays(_sq_bounds_frame(spark, index_dir, man))
+        scored, order, value = by_cosine(
+            pairs, _sq_decode_expr(F.col("codes"), lo, hi))
+    else:
+        scored, order, value = by_cosine(pairs, F.col("embedding"))
+    n = k if refine is None else int(refine)
+    out = topk(scored, order, n)
+    if post:
+        out = topk(allow(out), order)    # renumber the survivors
+    if refine is not None:
+        scored, order, value = by_cosine(
+            out.select("qid", "docno").join(live(), "docno")
+            .join(F.broadcast(q), "qid"), F.col("embedding"))
+        out = topk(scored, order, k)
+    return out.select("qid", "docno", value,
+                      F.col("rank").cast("int").alias("rank"))
+
+
+def indexed_ann_topk(queries: DataFrame, index_dir: str, *,
+                     k: int = 10, nprobe: int = 4,
+                     qid_col: str = "qid", vec_col: str = "embedding",
+                     filter_docs: DataFrame | None = None,
+                     snaps=None) -> DataFrame:
+    """IVF top-k over the raw vectors → (qid, docno, cosine, rank): the
+    live vectors of the ``nprobe`` lists nearest each query, scored by
+    exact rounded cosine (``_serve`` describes the stages). Same
+    semantics as ``similarity.ivf_topk``, with the assignment read from
+    ``ann_assign``. ``filter_docs`` pre-filters the probed lists."""
+    return _serve(queries, index_dir, codec=None, ivf=True, k=k,
+                  nprobe=nprobe, qid_col=qid_col, vec_col=vec_col,
+                  filter_docs=filter_docs, snaps=snaps)
+
+
+def indexed_pq_topk(queries: DataFrame, index_dir: str, *,
+                    k: int = 10, qid_col: str = "qid",
+                    vec_col: str = "embedding",
+                    snaps=None) -> DataFrame:
+    """Flat PQ/ADC top-k over every live code → (qid, docno, approx_d2,
+    rank), the semantics of ``similarity.pq_topk``. A store of residual
+    codes is refused: they need each doc's coarse centroid, so only
+    ``indexed_ivfpq_topk`` serves them."""
+    return _serve(queries, index_dir, codec="pq", ivf=False, k=k,
+                  qid_col=qid_col, vec_col=vec_col, snaps=snaps)
+
+
+def ivfpq_ranked_probes(queries: DataFrame, index_dir: str, *,
+                        qid_col: str = "qid",
+                        vec_col: str = "embedding") -> DataFrame:
+    """The full per-query centroid ranking ``(qid, qv, centroid_id, _r)``
+    (|queries| x |C| rows) that every IVF serve filters to ``_r <=
+    nprobe``. An nprobe sweep materializes it once and passes it to each
+    arm as ``indexed_ivfpq_topk(ranked_probes=...)``."""
+    from hadoop_ir_spark.operators import similarity
+
+    man, _ = _serve_gate(index_dir, ("ann",))
+    return similarity._probe_ranking(
+        queries, _ann_centroid_frame(queries.sparkSession, index_dir, man),
+        qid_col=qid_col, vec_col=vec_col)
+
+
+def indexed_ivfpq_topk(queries: DataFrame, index_dir: str, *,
+                       k: int = 10, nprobe: int = 4,
+                       refine: int | None = None,
+                       qid_col: str = "qid",
+                       vec_col: str = "embedding",
+                       filter_docs: DataFrame | None = None,
+                       filter_mode: str = "pre",
+                       ranked_probes: DataFrame | None = None,
+                       snaps=None) -> DataFrame:
+    """IVF-PQ top-k: the probed lists' candidates scored by the ADC scan
+    → (qid, docno, approx_d2, rank). A residual (IVFADC) store scores
+    each candidate against its own list's LUT, and is refused with a
+    ValueError naming the repair when an IVF retrain has moved past the
+    centroid generation its codes were encoded against.
+
+    ``refine`` keeps the top ``refine`` ADC candidates per query and
+    re-ranks them by exact cosine of their raw vectors; the result is
+    then (qid, docno, cosine, rank).
+
+    ``filter_docs`` + ``filter_mode``:
+
+    - ``"pre"`` (default): the allowlist is applied to the candidates
+      before scoring — the exact filtered top-k of the probed set.
+    - ``"post"``: the top ``refine`` (or ``k``) shortlist is drawn
+      filter-blind and then filtered, so allowed docs pushed out by
+      disallowed ones are lost and queries may return fewer than k
+      rows; ``refine`` ≫ k is the oversampling mitigation.
+      ``ann_recall_filtered`` measures the gap.
+
+    ``ranked_probes`` is a precomputed ``ivfpq_ranked_probes`` frame."""
+    return _serve(queries, index_dir, codec="pq", ivf=True, k=k,
+                  nprobe=nprobe, refine=refine, qid_col=qid_col,
+                  vec_col=vec_col, filter_docs=filter_docs,
+                  filter_mode=filter_mode, ranked_probes=ranked_probes,
+                  snaps=snaps)
 
 
 def indexed_sq_topk(queries: DataFrame, index_dir: str, *,
@@ -2370,37 +2234,12 @@ def indexed_sq_topk(queries: DataFrame, index_dir: str, *,
                     vec_col: str = "embedding",
                     filter_docs: DataFrame | None = None,
                     snaps=None) -> DataFrame:
-    """SQ8 approximate top-k served ENTIRELY from the persisted index:
-    (qid, docno, cosine, rank) — dequantize each live code array
-    against the broadcast-literal bounds and rank by rounded cosine
-    with the docno-desc tie-break. A flat compressed scan: every row
-    read is ``dims`` bytes of codes instead of the raw vector (4-8×
-    less IO), and the decode + cosine stay inside whole-stage codegen.
-    ``filter_docs`` (optional) pre-filters via the usual docno
-    semi-join. For the probe-pruned form, ``indexed_ivfsq_topk``."""
-    from hadoop_ir_spark.operators.dedup import cosine_expr
-
-    spark = queries.sparkSession
-    man = _read_manifest(index_dir)
-    if not man.get("sq"):
-        raise ValueError(
-            f"dedup index at {index_dir} has no trained SQ index — run "
-            f"train_sq_index first")
-    _, codes = _sq_live_codes(spark, index_dir, man, snaps)
-    lo, hi, _ = _sq_bound_arrays(_sq_bounds_frame(spark, index_dir, man))
-    if filter_docs is not None:
-        codes = codes.join(_filter_docnos(filter_docs), "docno", "semi")
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       F.col(vec_col).alias("qv"))
-    scored = (codes.crossJoin(F.broadcast(q))
-              .select("qid", "docno",
-                      F.round(cosine_expr(
-                          _sq_decode_expr(F.col("codes"), lo, hi),
-                          F.col("qv")), 6).alias("cosine")))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                          F.desc("docno"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    """Flat SQ8 top-k over every live code array → (qid, docno, cosine,
+    rank): rounded cosine of the dequantized vectors. ``filter_docs``
+    pre-filters. ``indexed_ivfsq_topk`` is the probe-pruned form."""
+    return _serve(queries, index_dir, codec="sq", ivf=False, k=k,
+                  qid_col=qid_col, vec_col=vec_col,
+                  filter_docs=filter_docs, snaps=snaps)
 
 
 def indexed_ivfsq_topk(queries: DataFrame, index_dir: str, *,
@@ -2408,67 +2247,14 @@ def indexed_ivfsq_topk(queries: DataFrame, index_dir: str, *,
                        qid_col: str = "qid", vec_col: str = "embedding",
                        filter_docs: DataFrame | None = None,
                        snaps=None) -> DataFrame:
-    """IVF + SQ8 top-k — the composed serving path: probe the
-    ``nprobe`` centroids nearest each query (``ann_centroids``),
-    restrict to live vectors assigned to those lists (``ann_assign``,
-    file-pruned by centroid_id range-partitioning), then score ONLY
-    those candidates by dequantizing their ``sq_codes`` arrays — the
-    probed lists are read as ``dims``-byte code rows, never raw
-    vectors. Returns (qid, docno, cosine, rank) with the SQ family's
-    rounded-cosine/docno-desc semantics. Requires both a trained IVF
-    index and a trained SQ index; both fold O(snapshot) and retract
-    through the shared tombstones. SQ8 cosine tracks the exact cosine
-    closely (8 bits/dim), so this path needs no exact re-rank stage at
-    moderate compression — the recall/memory trade vs IVF-PQ is graded
-    by ``ann_recall_sq`` in the catalog. ``filter_docs`` (optional)
-    pre-filters the candidate set before the decode scan."""
-    from hadoop_ir_spark.operators.dedup import cosine_expr
-
-    spark = queries.sparkSession
-    man = _read_manifest(index_dir)
-    if not man.get("ann") or not man.get("sq"):
-        raise ValueError(
-            f"dedup index at {index_dir} needs BOTH a trained IVF index "
-            f"and a trained SQ index for IVF-SQ — run train_ann_index "
-            f"and train_sq_index first")
-    vis, codes = _sq_live_codes(spark, index_dir, man, snaps)
-    if man["ann"]["centroid_snap"] not in vis:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir}: the trained centroid snap "
-            f"{man['ann']['centroid_snap']} is not in the visible "
-            f"snaps {vis}")
-    assign = _live_rows_tomb(
-        spark, index_dir, ANN_ASSIGN,
-        [s for s in man["ann"]["assign_snaps"] if s in vis], vis)
-    if assign is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible ann_assign data "
-            f"for snaps {vis}")
-    cents = _ann_centroid_frame(spark, index_dir, man)
-    lo, hi, _ = _sq_bound_arrays(_sq_bounds_frame(spark, index_dir, man))
-
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       F.col(vec_col).alias("qv"))
-    qprobe = q.crossJoin(F.broadcast(cents)).select(
-        "qid", "qv", "centroid_id",
-        cosine_expr(F.col("qv"), F.col("cv")).alias("csim"))
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"),
-                                           F.asc("centroid_id"))
-    probes = (qprobe.withColumn("_r", F.row_number().over(wq))
-              .filter(F.col("_r") <= nprobe)
-              .select("qid", "qv", "centroid_id"))
-    cand = assign.join(F.broadcast(probes), "centroid_id")
-    if filter_docs is not None:
-        cand = cand.join(_filter_docnos(filter_docs), "docno", "semi")
-    scored = (cand.join(codes, "docno")
-              .select("qid", "docno",
-                      F.round(cosine_expr(
-                          _sq_decode_expr(F.col("codes"), lo, hi),
-                          F.col("qv")), 6).alias("cosine")))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                          F.desc("docno"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    """IVF + SQ8 top-k → (qid, docno, cosine, rank): the probed lists'
+    candidates scored by rounded cosine of their dequantized codes. SQ8
+    tracks the exact cosine closely, so this path has no refine stage;
+    ``ann_recall_sq`` grades it against IVF-PQ. ``filter_docs``
+    pre-filters the probed lists."""
+    return _serve(queries, index_dir, codec="sq", ivf=True, k=k,
+                  nprobe=nprobe, qid_col=qid_col, vec_col=vec_col,
+                  filter_docs=filter_docs, snaps=snaps)
 
 
 # ---------------------------------------------------------------------------

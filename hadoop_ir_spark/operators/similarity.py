@@ -265,6 +265,24 @@ def kmeans_spherical(emb: DataFrame, init: DataFrame, iters: int = 3,
     return assign_centroids(emb2, cents), cents
 
 
+def _probe_ranking(queries: DataFrame, centroids: DataFrame,
+                   qid_col: str = "qid",
+                   vec_col: str = "embedding") -> DataFrame:
+    """Every centroid ranked per query → (qid, qv, centroid_id, _r):
+    cosine descending, centroid_id ascending on ties. An IVF probe keeps
+    ``_r <= nprobe``."""
+    q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("qv"))
+    qprobe = q.crossJoin(F.broadcast(centroids)).select(
+        "qid", "qv", "centroid_id",
+        cosine_expr(F.col("qv"), F.col("cv")).alias("csim"),
+    )
+    wq = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("centroid_id"))
+    return (
+        qprobe.withColumn("_r", F.row_number().over(wq))
+        .select("qid", "qv", "centroid_id", "_r")
+    )
+
+
 def ivf_topk(emb: DataFrame, queries: DataFrame, centroids: DataFrame,
              k: int = 10, nprobe: int = 4,
              id_col: str = "vec_id", vec_col: str = "embedding",
@@ -289,14 +307,8 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, centroids: DataFrame,
             id_col=id_col, vec_col=vec_col,
         ).select("vec_id", "centroid_id")
 
-    q = queries.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("qv"))
-    qprobe = q.crossJoin(F.broadcast(centroids)).select(
-        "qid", "qv", "centroid_id",
-        cosine_expr(F.col("qv"), F.col("cv")).alias("csim"),
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("centroid_id"))
     probes = (
-        qprobe.withColumn("_r", F.row_number().over(wq))
+        _probe_ranking(queries, centroids, qid_col=qid_col, vec_col=vec_col)
         .filter(F.col("_r") <= nprobe)
         .select("qid", "qv", "centroid_id")
     )
@@ -404,26 +416,30 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, m: int = PQ_M,
 
 def pq_lut(queries: DataFrame, codebook: DataFrame, m: int = PQ_M,
            qid_col: str = "qid", vec_col: str = "embedding",
-           dims: int = 64) -> DataFrame:
-    """ADC lookup table → (qid, s, code, d2_i): the query↔sub-centroid
-    L2, quantized to integer micro-units (floor(d2·1e6 + 0.5)) so the
-    per-vector sum over subspaces is an ORDER-INDEPENDENT integer sum —
-    partial aggregation cannot drift it (same trick as the TPC-H
-    integer-cents oracles; real PQ quantizes its LUT to float32 anyway).
+           dims: int = 64, key_cols: tuple = ()) -> DataFrame:
+    """ADC lookup table → (qid, *key_cols, s, code, d2_i): the
+    query↔sub-centroid L2, quantized to integer micro-units
+    (floor(d2·1e6 + 0.5)) so the per-vector sum over subspaces is an
+    ORDER-INDEPENDENT integer sum — partial aggregation cannot drift it
+    (same trick as the TPC-H integer-cents oracles; real PQ quantizes
+    its LUT to float32 anyway). ``key_cols`` are extra columns of
+    ``queries`` carried into the key — e.g. ``centroid_id`` for a
+    residual LUT, one per (query, probed list).
     """
     sub = dims // m
     qs = queries.select(
-        F.col(qid_col).alias("qid"),
+        F.col(qid_col).alias("qid"), *key_cols,
         _sub_slices(F.col(vec_col).cast("array<double>"), m, sub, "qv")
         .alias("_e"),
-    ).select("qid", F.col("_e.s").alias("s"), F.col("_e.qv").alias("qv"))
+    ).select("qid", *key_cols, F.col("_e.s").alias("s"),
+             F.col("_e.qv").alias("qv"))
     d2 = (
         dot_expr(F.col("qv"), F.col("qv"))
         - F.lit(2.0) * dot_expr(F.col("qv"), F.col("cv"))
         + dot_expr(F.col("cv"), F.col("cv"))
     )
     return qs.join(F.broadcast(codebook), "s").select(
-        "qid", "s", "code",
+        "qid", *key_cols, "s", "code",
         F.floor(d2 * 1e6 + F.lit(0.5)).cast("long").alias("d2_i"),
     )
 

@@ -19,3 +19,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="module")
+def testsh(tmp_path_factory):
+    """(warc path, topics path): the test.sh inputs, generated by
+    fixtures/testsh.py into a fresh directory."""
+    from fixtures.testsh import write_testsh_fixture
+
+    return write_testsh_fixture(str(tmp_path_factory.mktemp("testsh")))

@@ -9,9 +9,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-REF_WARC = "/root/reference/test/test.warc.gz"
-
-
 @pytest.fixture(scope="module")
 def registered(spark):
     from hadoop_ir_spark.io.datasource import (TrecSGMLDataSource,
@@ -52,15 +49,16 @@ def test_trecsgml_datasource_matches_expression_reader(registered, tmp_path):
     assert via_ds["d1"] == ("hello world", 100)
 
 
-def test_warc_datasource_reads_reference_fixture(registered):
+def test_warc_datasource_reads_reference_fixture(registered, testsh):
     spark = registered
-    df = spark.read.format("warcsource").load(REF_WARC)
+    warc_path = testsh[0]
+    df = spark.read.format("warcsource").load(warc_path)
     rows = df.collect()
     assert len(rows) > 0
     types = {r["warc_type"] for r in rows}
     assert "response" in types
     resp = spark.read.format("warcsource").option("responsesOnly", "true") \
-        .load(REF_WARC)
+        .load(warc_path)
     got = resp.collect()
     assert all(r["warc_type"] == "response" for r in got)
     assert {r["trec_id"] for r in got} >= {"test1", "test2", "test3"}
@@ -68,13 +66,14 @@ def test_warc_datasource_reads_reference_fixture(registered):
     assert df.rdd.getNumPartitions() == 1
 
 
-def test_warc_datasource_agrees_with_binaryfile_reader(registered):
+def test_warc_datasource_agrees_with_binaryfile_reader(registered, testsh):
     from hadoop_ir_spark.io import warc as warc_io
 
     spark = registered
-    base = warc_io.read_warc(spark, REF_WARC).select(
+    warc_path = testsh[0]
+    base = warc_io.read_warc(spark, warc_path).select(
         "trec_id", "warc_type", "target_uri").collect()
-    ds = spark.read.format("warcsource").load(REF_WARC).select(
+    ds = spark.read.format("warcsource").load(warc_path).select(
         "trec_id", "warc_type", "target_uri").collect()
     key = lambda t: tuple("" if v is None else v for v in t)  # noqa: E731
     assert sorted(map(tuple, base), key=key) == sorted(map(tuple, ds), key=key)

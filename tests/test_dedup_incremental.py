@@ -2657,10 +2657,12 @@ def test_filtered_ann_pre_post_and_oversampling(spark, tmp_path):
     assert sorted(map(tuple, aft.collect())) \
         == sorted(map(tuple, want_a.collect()))
 
-    # unknown mode refuses loudly
+    # unknown mode refuses loudly, with or without an allowlist
     with pytest.raises(ValueError, match="filter_mode"):
         dinc.indexed_ivfpq_topk(queries, idx, filter_docs=allow,
                                 filter_mode="during")
+    with pytest.raises(ValueError, match="filter_mode"):
+        dinc.indexed_ivfpq_topk(queries, idx, filter_mode="during")
 
 
 @pytest.mark.slow
@@ -2869,3 +2871,52 @@ def test_ivfsq_equals_sq_restricted_to_probed(spark, tmp_path):
         got = sorted(map(tuple, narrow.filter(
             F.col("qid") == qid).collect()))
         assert got == want, qid
+
+
+@pytest.fixture(scope="module")
+def serving_stores(spark, tmp_path_factory):
+    """(untrained, trained) stores: both hold embeddings; the trained
+    one also carries IVF, PQ and SQ8 indexes, each trained in a snap of
+    its own after the build snap 0."""
+    ids = list(range(0, 20))
+    base = tmp_path_factory.mktemp("serving")
+    untrained, trained = str(base / "untrained"), str(base / "trained")
+    for idx in (untrained, trained):
+        dinc.build_dedup_index(_docs_for(spark, ids), idx,
+                               embeddings=_emb_df(spark, ids))
+    dinc.train_ann_index(spark, trained, every=4)
+    dinc.train_pq_index(spark, trained, m=4, kk=4, train_every=3, dims=8)
+    dinc.train_sq_index(spark, trained)
+    return untrained, trained
+
+
+# serving entry point -> the train_* calls its refusal on an untrained
+# store must name
+_SERVE_TRAINS = {
+    "indexed_ann_topk": "train_ann_index",
+    "indexed_pq_topk": "train_pq_index",
+    "indexed_ivfpq_topk": "train_ann_index and train_pq_index",
+    "indexed_sq_topk": "train_sq_index",
+    "indexed_ivfsq_topk": "train_ann_index and train_sq_index",
+    "ivfpq_ranked_probes": "train_ann_index",
+}
+
+
+@pytest.mark.parametrize("name", list(_SERVE_TRAINS))
+def test_serving_entry_points_refuse_clearly(spark, serving_stores, name):
+    """Every serving entry point refuses an untrained store with a
+    ValueError naming the missing train_* call, and a serve whose
+    ``snaps`` hide the trained artifact snaps with FileNotFoundError."""
+    import inspect
+
+    serve = getattr(dinc, name)
+    untrained, trained = serving_stores
+    q = _emb_df(spark, [3]).select(F.col("docno").alias("qid"),
+                                   "embedding")
+    with pytest.raises(ValueError, match=_SERVE_TRAINS[name]):
+        serve(q, untrained)
+    if "snaps" in inspect.signature(serve).parameters:
+        with pytest.raises(FileNotFoundError,
+                           match="not in the visible snaps"):
+            serve(q, trained, snaps=[0])
+

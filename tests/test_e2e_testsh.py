@@ -1,5 +1,5 @@
 """Full test.sh reproduction (reference test/test.sh): AnchorExtract over
-the bundled WARC fixture, then TrecRun / QueryTermCount / TrecRunBaselines
+the test.sh WARC fixture (fixtures/testsh.py), then TrecRun / QueryTermCount / TrecRunBaselines
 in KEYVAL mode over the anchor representation — the complete reference
 pipeline chained through real file round-trips."""
 
@@ -11,14 +11,10 @@ from pyspark.sql import functions as F
 from hadoop_ir_spark.io import keyval, topics, warc
 from hadoop_ir_spark.operators import anchors, rank, scoring, stats
 
-REF_WARC = "/root/reference/test/test.warc.gz"
-REF_TOPICS = "/root/reference/test/wt2010-topics.queries-only"
-
-
 @pytest.fixture(scope="module")
-def anchor_keyval(spark, tmp_path_factory):
+def anchor_keyval(spark, tmp_path_factory, testsh):
     """AnchorExtract → gzipped keyval files → read back (S4 + S10)."""
-    w = warc.read_warc(spark, REF_WARC)
+    w = warc.read_warc(spark, testsh[0])
     docs = warc.warc_responses(w).select(
         F.col("trec_id").alias("docno"),
         F.col("target_uri").alias("url"),
@@ -39,10 +35,10 @@ def test_anchor_keyval_contents(anchor_keyval):
     assert "test page" in rows["test3"]
 
 
-def test_trecrun_keyval_mode(spark, anchor_keyval):
+def test_trecrun_keyval_mode(spark, anchor_keyval, testsh):
     """TrecRun KEYVAL: topic 53 'discovery channel store' must retrieve
     test2 via its anchor text (the MIREX anchor-retrieval demo)."""
-    tps = topics.read_topics_plain(spark, REF_TOPICS).withColumn("qtf", F.lit(1))
+    tps = topics.read_topics_plain(spark, testsh[1]).withColumn("qtf", F.lit(1))
     post = stats.postings(anchor_keyval)
     dlen = stats.doc_lengths(anchor_keyval)
     tstats = post.groupBy("term").agg(F.sum("tf").alias("cf"))
@@ -53,12 +49,13 @@ def test_trecrun_keyval_mode(spark, anchor_keyval):
     assert ("53", "test2") in hits
 
 
-def test_querytermcount_keyval_roundtrip(spark, anchor_keyval, tmp_path):
+def test_querytermcount_keyval_roundtrip(spark, anchor_keyval, testsh,
+                                        tmp_path):
     """QueryTermCount KEYVAL: stats over the anchor corpus, written and
     re-read in MIREX topic format."""
     post = stats.postings(anchor_keyval)
     glob = stats.collection_globals(post).collect()[0]
-    tps = topics.read_topics_plain(spark, REF_TOPICS)
+    tps = topics.read_topics_plain(spark, testsh[1])
     qstats = stats.query_term_stats(post, tps)
 
     path = str(tmp_path / "topics.stats")
@@ -73,13 +70,13 @@ def test_querytermcount_keyval_roundtrip(spark, anchor_keyval, tmp_path):
     assert all(v == (0, 0) for (q, t), v in b.items() if t == "obama")
 
 
-def test_baselines_keyval_mode(spark, anchor_keyval, tmp_path):
+def test_baselines_keyval_mode(spark, anchor_keyval, testsh, tmp_path):
     """TrecRunBaselines KEYVAL: all four models run off the MIREX stats
     file (the test.sh final step); each model retrieves test2 for topic
     53."""
     post = stats.postings(anchor_keyval).cache()
     glob = stats.collection_globals(post).collect()[0]
-    tps = topics.read_topics_plain(spark, REF_TOPICS)
+    tps = topics.read_topics_plain(spark, testsh[1])
     qstats = stats.query_term_stats(post, tps)
     path = str(tmp_path / "topics.stats")
     topics.write_topics_mirex(qstats, coll_len=glob["n_tokens"],

@@ -1,6 +1,6 @@
-"""IO layer tests: WARC reader against the reference's own bundled fixture
-(/root/reference/test/test.warc.gz, read-only), TREC-SGML round-trip, topic
-and qrels parsers, and the test.sh end-to-end retrieval semantics."""
+"""IO layer tests: WARC reader against the test.sh WARC fixture
+(fixtures/testsh.py), TREC-SGML round-trip, topic and qrels parsers, and
+the test.sh end-to-end retrieval semantics."""
 
 from __future__ import annotations
 
@@ -11,13 +11,9 @@ from hadoop_ir_spark.io import qrels as qrels_io
 from hadoop_ir_spark.io import runfile, topics, trec_sgml, warc
 from hadoop_ir_spark.operators import rank, scoring, stats
 
-REF_WARC = "/root/reference/test/test.warc.gz"
-REF_TOPICS = "/root/reference/test/wt2010-topics.queries-only"
-
-
 @pytest.fixture(scope="module")
-def warc_df(spark):
-    return warc.read_warc(spark, REF_WARC).cache()
+def warc_df(spark, testsh):
+    return warc.read_warc(spark, testsh[0]).cache()
 
 
 def test_warc_parses_all_records(warc_df):
@@ -48,12 +44,12 @@ def test_warc_to_text_strips_http_and_html(warc_df):
     assert "test page 1" in t1
 
 
-def test_e2e_testsh_retrieval(spark, warc_df):
+def test_e2e_testsh_retrieval(spark, warc_df, testsh):
     """test.sh semantics: WARC → text → score topics 51-100 (M1 LMno) →
     per-query top-k. Topic 53 = "discovery channel store" appears verbatim
     in test1's anchor text, so it must retrieve test1."""
     docs = warc.warc_to_text(warc_df)
-    tps = topics.read_topics_plain(spark, REF_TOPICS).withColumn("qtf", F.lit(1))
+    tps = topics.read_topics_plain(spark, testsh[1]).withColumn("qtf", F.lit(1))
     assert tps.select("qid").distinct().count() == 50
 
     post = stats.postings(docs)
@@ -86,8 +82,8 @@ def test_trec_sgml_roundtrip(spark, tmp_path):
     assert rows["doc3"]["text"] == "multi\nline\ntext"
 
 
-def test_topics_plain(spark):
-    tps = topics.read_topics_plain(spark, REF_TOPICS)
+def test_topics_plain(spark, testsh):
+    tps = topics.read_topics_plain(spark, testsh[1])
     t53 = [r["term"] for r in tps.filter(F.col("qid") == "53").collect()]
     assert t53 == ["discovery", "channel", "store"]
 
