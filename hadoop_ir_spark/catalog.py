@@ -32,6 +32,10 @@ TOPICS: list[tuple[str, str]] = [
     ("q4", "customer filter hash"),
 ]
 
+# the shared query vocabulary: every query-term scan uses exactly this
+# list, so equal scan plans share one cache within a session
+QTERMS: list[str] = sorted({t for _, q in TOPICS for t in q.split()})
+
 TOP_K = 10  # retrieval depth for the demo queries (reference default is 1000)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -142,7 +146,7 @@ SELECT docno, doc_len FROM dlen
 """)
 def q_doc_lengths(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    return stats.doc_lengths(docs, id_col="doc_id")
+    return stats.scan_doc_lengths(stats.scan_stats(docs, [], id_col="doc_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -200,12 +204,10 @@ def dirichlet_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFram
     docs = _docs(spark, sf_dir)
     topics = _topics_df(spark).withColumn("qweight", F.lit(1.0))
 
-    # r13 (guide §1.2/§2.4): ONE cached tokenize pass serves the length
-    # prior AND the query-term postings — dlen + postings_for_terms were
-    # two full corpus scans, and the cached per-doc scan row (ints + a
-    # few query-term tokens) is smaller than the old cached postings
-    qterm_list = sorted({t for _, q in TOPICS for t in q.split()})
-    scan = stats.scan_stats(docs, qterm_list, id_col="doc_id").cache()
+    # ONE cached tokenize pass serves the length prior AND the query-term
+    # postings; the cached per-doc scan row (ints + a few query-term
+    # tokens) is smaller than cached postings
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
     dlen = stats.scan_doc_lengths(scan)
 
     # coll_len from per-doc lengths: map-side only, no explode+shuffle
@@ -306,8 +308,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     topics = _topics_df(spark).withColumn("qtf", F.lit(1))
 
     # one cached tokenize pass for dlen + postings (r13, guide §1.2/§2.4)
-    qterm_list = sorted({t for _, q in TOPICS for t in q.split()})
-    scan = stats.scan_stats(docs, qterm_list, id_col="doc_id").cache()
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
     dlen = stats.scan_doc_lengths(scan)
 
     glob = dlen.agg(
@@ -389,11 +390,12 @@ SQL_QRELS = (
 
 
 def qrels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark twin of SQL_QRELS: (qid, docno, rel)."""
+    """The Spark twin of SQL_QRELS: (qid, docno, rel). Every qrel term is
+    a query term, so the postings come from the cached ``QTERMS`` scan —
+    the one a run over the same corpus already tokenized."""
     docs = _docs(spark, sf_dir)
-    post = stats.postings_for_terms(
-        docs, sorted({t for _, t in QREL_TERMS}), id_col="doc_id"
-    )
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
+    post = stats.scan_postings(scan)
     tmap = spark.createDataFrame(QREL_TERMS, "qid string, term string")
     return post.join(F.broadcast(tmap), "term").select(
         "qid", "docno",

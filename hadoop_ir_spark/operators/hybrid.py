@@ -61,21 +61,13 @@ def bm25_mlt_run(docs: DataFrame, query_ids: DataFrame, *,
     top-k with the K3 tie-break. → (qid, docno, score, rank).
 
     r13 (guide §2.3/§5): the FULL (docno, term) postings table is never
-    built or materialized — the old shape aggregated and
-    localCheckpointed every posting of the corpus per call just to read
-    back the rows of ~|queries| docs' terms. Now the query docs'
-    postings come from a semi-joined (tiny) corpus slice, and the
-    corpus-side postings are restricted to the query docs' TERM
-    vocabulary before the (docno, term) aggregation (broadcast semi
-    join on the exploded tokens), so the one heavy shuffle carries only
-    those rows. Same BM25 inputs row-for-row: df/tf values of terms
-    outside the query vocabulary never reach the score."""
-    dlen = stats.doc_lengths(docs, id_col=id_col, text_col=text_col)
-    glob = dlen.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("doc_len").alias("n_tokens")).collect()[0]
-    n_docs = glob["n_docs"]
-    avg_len = glob["n_tokens"] / glob["n_docs"]
+    built or materialized. The query docs' postings come from a
+    semi-joined (tiny) corpus slice. ONE checkpointed ``scan_stats``
+    pass over the corpus, restricted to those docs' TERM vocabulary,
+    serves the length globals, the matched join's doc lengths and the
+    corpus-side postings — so the one heavy shuffle carries only those
+    terms' rows. Same BM25 inputs row-for-row: df/tf values of
+    terms outside the query vocabulary never reach the score."""
     qcol = query_ids.columns[0]
     qids = query_ids.select(F.col(qcol).alias("_qid")).distinct()
     qdocs = (docs.join(F.broadcast(qids),
@@ -83,13 +75,18 @@ def bm25_mlt_run(docs: DataFrame, query_ids: DataFrame, *,
     qpost = stats.postings(qdocs, id_col=id_col,
                            text_col=text_col).localCheckpoint()
     # the query docs' vocabulary as literals (bounded by the query
-    # BATCH, not the corpus), so the corpus-side postings take the
-    # proven pruned-scan shape
+    # BATCH, not the corpus)
     terms = sorted(r["term"]
                    for r in qpost.select("term").distinct().collect())
-    post_q = stats.postings_for_terms(
-        docs, terms, id_col=id_col,
-        text_col=text_col).localCheckpoint()
+    scan = stats.scan_stats(docs, terms, id_col=id_col,
+                            text_col=text_col).localCheckpoint()
+    dlen = stats.scan_doc_lengths(scan)
+    glob = dlen.agg(
+        F.count("*").alias("n_docs"),
+        F.sum("doc_len").alias("n_tokens")).collect()[0]
+    n_docs = glob["n_docs"]
+    avg_len = glob["n_tokens"] / glob["n_docs"]
+    post_q = stats.scan_postings(scan)
     tstats = post_q.groupBy("term").agg(F.count("*").alias("df"))
     topics = mlt_query_terms(qpost, tstats, n_docs, query_ids,
                              n_terms=n_terms)

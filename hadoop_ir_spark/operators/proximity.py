@@ -14,9 +14,12 @@ per-document quadratic range probe.
 Scale notes (100 TB):
 
 - ``positional_tokens`` filters to the query vocabulary BEFORE any join
-  (the same projection-pushdown trick as ``stats.postings_for_terms``), so
-  all pair joins carry only query-term rows — a few hundred positions per
-  document at most, independent of document length.
+  (the same projection-pushdown trick as ``stats.scan_stats``), so all
+  pair joins carry only query-term rows — a few hundred positions per
+  document at most, independent of document length. It posexplodes the
+  token expression directly, so its standalone callers need no cached
+  scan (``scan_stats`` explains why an uncached ``qtoks`` explode would
+  split the text twice).
 - Pair extraction is a WINDOW successor scan (r12 optimization): the
   positional stream is hash-partitioned by docno and sorted by pos ONCE;
   each row looks at its next ``window - 1`` successors via ``lead``.

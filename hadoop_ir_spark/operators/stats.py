@@ -34,45 +34,44 @@ def postings(docs: DataFrame, id_col: str = "docno", text_col: str = "text",
     return toks.groupBy("docno", "term").agg(F.count("*").alias("tf"))
 
 
-def postings_for_terms(docs: DataFrame, terms: list[str], id_col: str = "docno",
-                       text_col: str = "text") -> DataFrame:
-    """A2 with the reference's hand-rolled projection pushdown
-    (TrecRun.java:124-136: docTF kept *only for query terms*): the term
-    filter is applied to the exploded tokens BEFORE the (docno, term)
-    aggregation, so the one heavy shuffle carries only query-term rows.
-    ``terms`` must be a small literal list (query vocabulary)."""
-    toks = docs.select(
-        F.col(id_col).alias("docno"),
-        F.explode(tokens_col(text_col)).alias("term"),
-    ).filter(F.col("term").isin(terms))
-    return toks.groupBy("docno", "term").agg(F.count("*").alias("tf"))
-
-
 def scan_stats(docs: DataFrame, terms: list[str], id_col: str = "docno",
                text_col: str = "text", positional: bool = False) -> DataFrame:
-    """ONE tokenize pass serving BOTH ``doc_lengths`` and
-    ``postings_for_terms`` (r13, guide §1.2/§2.4: every scan-scoring
-    query used to tokenize the corpus once for the length prior and
-    again — sometimes twice, column pruning defeats exchange reuse —
-    for the query-term postings): ``(docno, doc_len, qtoks)`` where
-    ``qtoks`` is the query-vocabulary projection of the token stream —
-    term strings, or (pos, term) structs with the 0-based ordinal in
-    the FULL stream when ``positional`` (the ``positional_tokens``
-    contract: adjacency means true adjacency, non-query terms still
-    occupy their positions).
+    """The one query-vocabulary corpus scan: ``(docno, doc_len, qtoks)``
+    from a single tokenize per document, where ``qtoks`` keeps only the
+    tokens in ``terms`` (the reference's mapper keeps docTF for query
+    terms only, TrecRun.java:123-136) — term strings, or (pos, term)
+    structs with the 0-based ordinal in the FULL stream when
+    ``positional`` (adjacency means true adjacency; non-query terms
+    still occupy their positions).
 
-    Callers derive, from one (cached) frame:
+    Callers derive, from one frame:
 
-    - doc lengths:     ``scan_doc_lengths(scan)``
-    - postings:        ``scan_postings(scan)``
-    - positional toks: ``scan.select("docno", F.explode("qtoks"))``
+    - doc lengths:     ``scan_doc_lengths(scan)`` — ``scan_stats(docs,
+      [])`` when only lengths are needed (``qtoks`` is pruned away);
+    - postings:        ``scan_postings(scan)``;
+    - positional toks: ``scan.select("docno", F.explode("qtoks"))``.
 
-    Caching THIS frame holds per-doc ints plus a few query-term tokens
-    — strictly smaller than exploded postings or a positional stream —
-    and the corpus text is read and tokenized exactly once no matter
-    how many consumers follow.
+    Plan rules:
+
+    - The token array is bound once: it is projected as its own column
+      and ``doc_len`` / ``qtoks`` are derived from it in a second
+      select. ``CollapseProject`` does not inline a non-cheap expression
+      that is referenced twice, so the optimized plan splits the text
+      once per row (inlined, ``size`` and ``filter`` would each split).
+    - Anything that explodes ``qtoks`` must read a cached or
+      checkpointed scan. Over an uncached scan, ``InferFiltersFromGenerate``
+      pushes ``size(qtoks) > 0`` below the projection and the text is
+      split twice; ``proximity.positional_tokens`` is the uncached
+      positional stream.
+
+    Callers pairing lengths with postings cache the scan of the shared
+    query vocabulary (``catalog.QTERMS``, ``id_col="doc_id"``): equal
+    plans share one cache, so every such consumer in a session reads
+    the corpus once.
     """
-    toks = tokens_col(text_col)
+    bound = docs.select(F.col(id_col).alias("docno"),
+                        tokens_col(text_col).alias("toks"))
+    toks = F.col("toks")
     if positional:
         q = F.filter(
             F.transform(
@@ -81,16 +80,19 @@ def scan_stats(docs: DataFrame, terms: list[str], id_col: str = "docno",
             lambda s: s["term"].isin(terms))
     else:
         q = F.filter(toks, lambda t: t.isin(terms))
-    return docs.select(
-        F.col(id_col).alias("docno"),
-        F.size(toks).alias("doc_len"),
-        q.alias("qtoks"),
-    )
+    return bound.select("docno", F.size(toks).alias("doc_len"),
+                        q.alias("qtoks"))
 
 
 def scan_doc_lengths(scan: DataFrame, skip_empty: bool = True) -> DataFrame:
-    """``doc_lengths`` from a :func:`scan_stats` frame (identical rows:
-    size over the same filtered token array, same T9 empty-doc guard)."""
+    """A2: ``(docno, doc_len)`` — token count per document, from a
+    :func:`scan_stats` frame: a map-side projection, no shuffle.
+
+    ``skip_empty`` applies the T9 doc-length guard (doclength == 0 docs
+    skipped before scoring, TrecRun.java:139, ClueWebRunQueries.java:217);
+    it also matches the oracle SQL, whose dlen CTE only contains docs with
+    at least one token.
+    """
     out = scan.select("docno", "doc_len")
     if skip_empty:
         out = out.filter(F.col("doc_len") > 0)
@@ -98,34 +100,15 @@ def scan_doc_lengths(scan: DataFrame, skip_empty: bool = True) -> DataFrame:
 
 
 def scan_postings(scan: DataFrame) -> DataFrame:
-    """``postings_for_terms`` from a :func:`scan_stats` frame (identical
-    rows: explode(filter(toks)) ≡ filter(explode(toks)) as multisets)."""
+    """A2 query-term postings ``(docno, term, tf)`` from a
+    :func:`scan_stats` frame: the term filter runs before the (docno,
+    term) aggregation, so the heavy shuffle carries only query-term
+    rows. Read a cached or checkpointed ``scan``: over an uncached one
+    the text is split twice (see ``scan_stats``)."""
     return (
         scan.select("docno", F.explode("qtoks").alias("term"))
         .groupBy("docno", "term").agg(F.count("*").alias("tf"))
     )
-
-
-def doc_lengths(docs: DataFrame, id_col: str = "docno",
-                text_col: str = "text",
-                skip_empty: bool = True) -> DataFrame:
-    """A2: ``(docno, doc_len)`` — token count per document.
-
-    Computed without exploding (array size of the token split), so it is a
-    pure map-side projection: no shuffle at all.
-
-    ``skip_empty`` applies the T9 doc-length guard (doclength == 0 docs
-    skipped before scoring, TrecRun.java:139, ClueWebRunQueries.java:217);
-    it also matches the oracle SQL, whose dlen CTE only contains docs with
-    at least one token.
-    """
-    out = docs.select(
-        F.col(id_col).alias("docno"),
-        F.size(tokens_col(text_col)).alias("doc_len"),
-    )
-    if skip_empty:
-        out = out.filter(F.col("doc_len") > 0)
-    return out
 
 
 def word_count(docs: DataFrame, id_col: str = "docno",

@@ -130,9 +130,9 @@ def q_mirex_baselines(spark, sf_dir):
     matched = scoring.matched_terms(post, topics, doc_len=dlen,
                                     stats=tstats).localCheckpoint()
 
-    # globals come from _prep's single collect (doc_lengths already
-    # drops empty docs, so the old doc_len > 0 re-filter was a no-op
-    # second corpus pass)
+    # globals come from _prep's single collect (scan_doc_lengths
+    # already drops empty docs, so the old doc_len > 0 re-filter was a
+    # no-op second corpus pass)
     n_docs, avg_len = prep.n_docs, prep.avg_len
 
     outs = [

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hadoop_ir_spark.catalog import SQL_TOK, TOPICS, _docs, register
+from hadoop_ir_spark.catalog import QTERMS, SQL_TOK, _docs, register
 from hadoop_ir_spark.operators import cooccur, stats
 
 # dts = distinct (docno, term) — the reference's per-doc HashSet; pairs /
@@ -88,8 +88,7 @@ def q_npmi(spark, sf_dir):
     return out.withColumn("npmi", F.round("npmi", 6))
 
 
-_QTERMS = sorted({t for _, q in TOPICS for t in q.split()})
-_QTERMS_IN = ", ".join(f"'{t}'" for t in _QTERMS)
+_QTERMS_IN = ", ".join(f"'{t}'" for t in QTERMS)
 
 
 @register("query_pair_stats", f"""
@@ -107,7 +106,7 @@ GROUP BY 1, 2
 def q_query_pair_stats(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     post = stats.postings(docs, id_col="doc_id")
-    return cooccur.query_pair_stats(post, _QTERMS)
+    return cooccur.query_pair_stats(post, QTERMS)
 
 
 LLR_MIN_JOINT = 5

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_ir_spark.catalog import (
+    QTERMS,
     SQL_RUN_DIRICHLET,
     TOP_K,
     _docs,
@@ -64,7 +65,9 @@ def _rm1_df(spark, sf_dir):
     run = dirichlet_topk(spark, sf_dir, k=TOP_K)
     docs = _docs(spark, sf_dir)
     post = stats.postings(docs, id_col="doc_id")
-    dlen = stats.doc_lengths(docs, id_col="doc_id")
+    # lengths from the run's cached scan: no second tokenize
+    dlen = stats.scan_doc_lengths(
+        stats.scan_stats(docs, QTERMS, id_col="doc_id"))
     return feedback.rm1(run, post, dlen, fb_docs=FB_DOCS, fb_terms=FB_TERMS)
 
 
@@ -190,7 +193,9 @@ def q_rm3_sweep(spark, sf_dir):
     run = dirichlet_topk(spark, sf_dir, k=TOP_K)
     docs = _docs(spark, sf_dir)
     post = stats.postings(docs, id_col="doc_id")
-    dlen = stats.doc_lengths(docs, id_col="doc_id")
+    # lengths from the run's cached scan: no second tokenize
+    dlen = stats.scan_doc_lengths(
+        stats.scan_stats(docs, QTERMS, id_col="doc_id"))
     rm1_grid = feedback.rm1_sweep(run, post, dlen,
                                   SWEEP_FB_DOCS, SWEEP_FB_TERMS)
     topics = _topics_df(spark).withColumn("qweight", F.lit(1.0))

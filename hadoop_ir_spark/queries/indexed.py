@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from hadoop_ir_spark.catalog import (
     DIR_MU,
     ORACLES,
+    QTERMS,
     TOP_K,
-    TOPICS,
     _docs,
     _topics_df,
     register,
@@ -49,11 +49,10 @@ def q_indexed_dirichlet(spark, sf_dir):
     glob = index_io.index_globals(spark, idx_dir)
 
     topics = _topics_df(spark).withColumn("qweight", F.lit(1.0))
-    qterm_list = sorted({t for _, q in TOPICS for t in q.split()})
 
-    post = idx["postings"].filter(F.col("term").isin(qterm_list))
+    post = idx["postings"].filter(F.col("term").isin(QTERMS))
     dlen = idx["doc_lengths"]
-    tstats = idx["term_stats"].filter(F.col("term").isin(qterm_list))
+    tstats = idx["term_stats"].filter(F.col("term").isin(QTERMS))
     qstats = topics.join(
         F.broadcast(tstats.select("term", "cf")), "term", "left"
     ).fillna({"cf": 0})
@@ -102,13 +101,13 @@ def _pair_ordered(spark, sf_dir):
     is range-partitioned + sorted on (t1, t2), so min/max stats prune
     files and row groups); the broadcast join restricts to the exact
     query pair set. No positional offset join runs at query time."""
-    from hadoop_ir_spark.queries.proximity_q import _PAIRS, _QTERMS
+    from hadoop_ir_spark.queries.proximity_q import _PAIRS
 
     idx_dir = _pos_index_dir(spark, sf_dir)
     pairs = spark.createDataFrame(_PAIRS, "t1 string, t2 string")
     return (
         spark.read.parquet(os.path.join(idx_dir, "pair_ordered"))
-        .filter(F.col("t1").isin(_QTERMS) & F.col("t2").isin(_QTERMS))
+        .filter(F.col("t1").isin(QTERMS) & F.col("t2").isin(QTERMS))
         .join(F.broadcast(pairs), ["t1", "t2"])
     )
 
@@ -158,9 +157,8 @@ def _indexed_inputs(spark, sf_dir):
     idx_dir = _index_dir(spark, sf_dir)
     idx = index_io.load_index(spark, idx_dir)
     glob = index_io.index_globals(spark, idx_dir)
-    qterm_list = sorted({t for _, q in TOPICS for t in q.split()})
-    post = idx["postings"].filter(F.col("term").isin(qterm_list))
-    tstats = idx["term_stats"].filter(F.col("term").isin(qterm_list))
+    post = idx["postings"].filter(F.col("term").isin(QTERMS))
+    tstats = idx["term_stats"].filter(F.col("term").isin(QTERMS))
     return post, idx["doc_lengths"], tstats, glob
 
 
@@ -276,7 +274,6 @@ def q_indexed_sdm(spark, sf_dir):
     materialization ⇒ reuses sdm_topk's oracle verbatim."""
     from hadoop_ir_spark.queries.proximity_q import (
         _BIGRAMS,
-        _QTERMS,
         _UPAIRS,
         SDM_UW,
         SDM_WO,
@@ -288,7 +285,7 @@ def q_indexed_sdm(spark, sf_dir):
     idx = index_io.load_index(spark, _index_dir(spark, sf_dir))
     pos_dir = _pos_index_dir(spark, sf_dir)
     qpost = (
-        idx["postings"].filter(F.col("term").isin(_QTERMS))
+        idx["postings"].filter(F.col("term").isin(QTERMS))
         .select("docno", "term", "tf")
     )
     upairs = spark.createDataFrame(_UPAIRS, "u1 string, u2 string")
@@ -296,7 +293,7 @@ def q_indexed_sdm(spark, sf_dir):
     unord = (
         spark.read.parquet(
             os.path.join(pos_dir, f"pair_unordered_w{SDM_UW}"))
-        .filter(F.col("u1").isin(_QTERMS) & F.col("u2").isin(_QTERMS))
+        .filter(F.col("u1").isin(QTERMS) & F.col("u2").isin(QTERMS))
         .join(F.broadcast(upairs), ["u1", "u2"])
     )
     bigrams = spark.createDataFrame(_BIGRAMS,
@@ -328,13 +325,13 @@ def q_indexed_best_passage(spark, sf_dir):
     best_passage's oracle verbatim."""
     from hadoop_ir_spark.catalog import _topics_df
     from hadoop_ir_spark.operators import proximity
-    from hadoop_ir_spark.queries.proximity_q import _QTERMS, PASSAGE_W
+    from hadoop_ir_spark.queries.proximity_q import PASSAGE_W
 
     run = q_indexed_dirichlet(spark, sf_dir).select("qid", "docno")
     pos_dir = _pos_index_dir(spark, sf_dir)
     ptoks = (
         spark.read.parquet(os.path.join(pos_dir, "positional"))
-        .filter(F.col("term").isin(_QTERMS))
+        .filter(F.col("term").isin(QTERMS))
     )
     topics = _topics_df(spark).distinct()
     hits = (

@@ -361,18 +361,20 @@ def q_ltr_features(spark, sf_dir):
     frames; the run is the only ranked (windowed) frame — the feature
     joins are plain broadcast/hash joins on (qid, docno), the shape that
     survives a 1000-query batch at 100 TB."""
-    from hadoop_ir_spark.catalog import (BM25_B, BM25_K1, TOPICS, _docs,
+    from hadoop_ir_spark.catalog import (BM25_B, BM25_K1, QTERMS, _docs,
                                          _topics_df)
     from hadoop_ir_spark.operators import scoring, stats
     from hadoop_ir_spark.queries.scoring_models import GSLIS_LAMBDA
 
     docs = _docs(spark, sf_dir)
-    dlen = stats.doc_lengths(docs, id_col="doc_id").cache()
-    qterms = sorted({t for _, q in TOPICS for t in q.split()})
-    post = stats.postings_for_terms(docs, qterms, id_col="doc_id").cache()
+    # the same cached scan dirichlet_topk reads: one corpus tokenize for
+    # the run, the lengths and the query-term postings
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
+    dlen = stats.scan_doc_lengths(scan)
+    post = stats.scan_postings(scan)
     # one collect for every scalar global (coll_len, n_docs, avg_len):
-    # doc_lengths already drops empty docs, so count(*) matches the old
-    # separate filtered aggregate — one corpus pass instead of two
+    # scan_doc_lengths already drops empty docs, so count(*) matches the
+    # old separate filtered aggregate — one corpus pass instead of two
     glob = dlen.agg(F.sum("doc_len").alias("n_tokens"),
                     F.count("*").alias("n_docs")).collect()[0]
     coll_len = glob["n_tokens"]

@@ -18,7 +18,7 @@ Query semantics (mirrored exactly in the DuckDB oracles):
   f_T over query unigrams, f_O over exact-adjacency bigrams (#1),
   f_U over unordered window-8 pairs (#uw8). Candidate set = docs
   matching >= 1 query unigram (scan-scoring convention, T9 guard via
-  doc_lengths). Bigram/pair features whose collection frequency is zero
+  scan_doc_lengths). Bigram/pair features whose collection frequency is zero
   are dropped on both sides (Indri's OOV convention), keeping every
   log() argument positive.
 """
@@ -27,14 +27,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hadoop_ir_spark.catalog import TOP_K, TOPICS, _docs, register
+from hadoop_ir_spark.catalog import QTERMS, TOP_K, TOPICS, _docs, register
 from hadoop_ir_spark.operators import proximity, rank, stats
 
 SDM_MU = 2500.0                      # Dirichlet mu, same as M3/M5 (DIR_MU)
 SDM_WT, SDM_WO, SDM_WU = 0.85, 0.10, 0.05   # Metzler-Croft defaults
 SDM_UW = 8                           # unordered window width (#uw8)
-
-_QTERMS = sorted({t for _, q in TOPICS for t in q.split()})
 
 # consecutive term pairs per topic: the ordered "phrases" of each query
 _BIGRAMS: list[tuple[str, str, str]] = [
@@ -51,7 +49,7 @@ _UPAIRS = sorted({(min(t1, t2), max(t1, t2)) for _, t1, t2 in _BIGRAMS})
 # per-doc ordered / unordered pair counts
 # ---------------------------------------------------------------------------
 
-_QTERMS_IN = ", ".join(f"'{t}'" for t in _QTERMS)
+_QTERMS_IN = ", ".join(f"'{t}'" for t in QTERMS)
 _BIGRAMS_VALUES = ", ".join(f"('{q}', '{a}', '{b}')" for q, a, b in _BIGRAMS)
 _PAIRS_VALUES = ", ".join(f"('{a}', '{b}')" for a, b in _PAIRS)
 _UPAIRS_VALUES = ", ".join(f"('{a}', '{b}')" for a, b in _UPAIRS)
@@ -108,7 +106,7 @@ def _spark_prox(spark, sf_dir):
     cached per-doc scan row (ints + a few (pos, term) structs) is
     smaller than the old cached exploded ptoks."""
     docs = _docs(spark, sf_dir)
-    scan = stats.scan_stats(docs, _QTERMS, id_col="doc_id",
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id",
                             positional=True).cache()
     dlen = stats.scan_doc_lengths(scan)
     ptoks = scan.select(
@@ -438,7 +436,7 @@ def q_best_passage(spark, sf_dir):
 
     run = dirichlet_topk(spark, sf_dir, k=TOP_K).select("qid", "docno")
     docs = _docs(spark, sf_dir)
-    ptoks = proximity.positional_tokens(docs, _QTERMS, id_col="doc_id")
+    ptoks = proximity.positional_tokens(docs, QTERMS, id_col="doc_id")
     topics = _topics_df(spark).distinct()
     hits = (
         run.join(F.broadcast(topics), "qid")

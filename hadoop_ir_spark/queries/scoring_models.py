@@ -11,9 +11,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hadoop_ir_spark.catalog import (
+    QTERMS,
     SQL_TOK,
     TOP_K,
-    TOPICS,
     _docs,
     _topics_df,
     _topics_values_sql,
@@ -25,8 +25,6 @@ JM_LAMBDA = 0.15      # M2 MIREX default (TrecRunBaselines.java sweep midpoint)
 DIR_MU = 2500.0       # M3/M7/M8 (TrecRunBaselines.java:265, RunQueryHBase.java:46)
 GSLIS_LAMBDA = 0.5    # M6/M7
 MU_GRID = [500.0, 1000.0, 2500.0]  # J3 sweep (subset of RunQueryHBase.java:46)
-
-_QTERMS = sorted({t for _, q in TOPICS for t in q.split()})
 
 # Shared oracle prelude: query terms + per-term cf/df + doc lengths + globals.
 SQL_SCORING = f"""
@@ -57,19 +55,18 @@ def _prep(spark, sf_dir, with_weights: bool = False):
     """Shared Spark-side inputs: query-term postings, doc lengths, stats.
 
     r12 optimization: the scalar-globals collect gathers coll_len AND
-    n_docs in one job (``doc_lengths`` already drops empty docs, so
-    count(*) == the old filtered count), replacing the second
+    n_docs in one job (``scan_doc_lengths`` already drops empty docs,
+    so count(*) == the old filtered count), replacing the second
     full-corpus aggregate pass the BM25-family queries used to pay
     (guide §1.2: remove unnecessary passes).
 
-    r13: ONE cached tokenize pass (``stats.scan_stats``) now serves the
-    length prior and the query-term postings — previously dlen and post
-    were separate corpus scans, and post's two consumers (tstats + the
-    matched join) could not share an exchange (column pruning defeats
-    reuse), so a scoring query tokenized the corpus up to three times.
-    The globals collect below materializes the scan cache."""
+    r13: ONE cached tokenize pass (``stats.scan_stats``) serves the
+    length prior and the query-term postings — separate scans tokenized
+    the corpus up to three times, since post's two consumers (tstats +
+    the matched join) cannot share an exchange (column pruning defeats
+    reuse). The globals collect below materializes the scan cache."""
     docs = _docs(spark, sf_dir)
-    scan = stats.scan_stats(docs, _QTERMS, id_col="doc_id").cache()
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
     dlen = stats.scan_doc_lengths(scan)
     post = stats.scan_postings(scan)
     tstats = post.groupBy("term").agg(
@@ -472,9 +469,10 @@ def q_abs_discount(spark, sf_dir):
     from hadoop_ir_spark.functions.text import tokens_col
 
     docs = _docs(spark, sf_dir)
-    dlen = stats.doc_lengths(docs, id_col="doc_id").cache()
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
+    dlen = stats.scan_doc_lengths(scan)
     coll_len = dlen.agg(F.sum("doc_len")).collect()[0][0]
-    post = stats.postings_for_terms(docs, _QTERMS, id_col="doc_id")
+    post = stats.scan_postings(scan)
     tstats = post.groupBy("term").agg(F.sum("tf").alias("cf"))
     topics = _topics_df(spark).withColumn("qweight", F.lit(1.0))
     qstats = topics.join(tstats, "term", "left").fillna({"cf": 0})
@@ -566,11 +564,11 @@ scored AS (
 """)
 def q_vsm_cosine(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    dlen = stats.doc_lengths(docs, id_col="doc_id")
+    scan = stats.scan_stats(docs, QTERMS, id_col="doc_id").cache()
     full_post = stats.postings(docs, id_col="doc_id")   # dnorm needs all terms
-    n_docs = dlen.agg(F.count("*")).collect()[0][0]
+    n_docs = stats.scan_doc_lengths(scan).count()
     dnorm = scoring.doc_norms_lnc(full_post)
-    qpost = stats.postings_for_terms(docs, _QTERMS, id_col="doc_id")
+    qpost = stats.scan_postings(scan)
     tstats = qpost.groupBy("term").agg(F.count("*").alias("df"))
     topics = _topics_df(spark)
     # smoothed idf ln((N+1)/df): strictly positive even when every query

@@ -441,7 +441,8 @@ FROM o
         from hadoop_ir_spark.operators import stats as _stats
 
         docs = _docs_c(spark, sf_dir)
-        dlen = _stats.doc_lengths(docs, id_col="doc_id")
+        dlen = _stats.scan_doc_lengths(
+            _stats.scan_stats(docs, [], id_col="doc_id"))
         feat = dlen.join(
             docs.select(F.col("doc_id").alias("docno"), "source", "n_chars"),
             "docno",

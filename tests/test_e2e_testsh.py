@@ -40,7 +40,7 @@ def test_trecrun_keyval_mode(spark, anchor_keyval, testsh):
     test2 via its anchor text (the MIREX anchor-retrieval demo)."""
     tps = topics.read_topics_plain(spark, testsh[1]).withColumn("qtf", F.lit(1))
     post = stats.postings(anchor_keyval)
-    dlen = stats.doc_lengths(anchor_keyval)
+    dlen = stats.scan_doc_lengths(stats.scan_stats(anchor_keyval, []))
     tstats = post.groupBy("term").agg(F.sum("tf").alias("cf"))
     qstats = tps.join(tstats, "term", "left").fillna({"cf": 0})
     matched = scoring.matched_terms(post, tps, doc_len=dlen)
@@ -84,7 +84,7 @@ def test_baselines_keyval_mode(spark, anchor_keyval, testsh, tmp_path):
     mirex, g = topics.read_topics_mirex(spark, path)
     mirex = mirex.filter(F.col("cf") > 0)
 
-    dlen = stats.doc_lengths(anchor_keyval)
+    dlen = stats.scan_doc_lengths(stats.scan_stats(anchor_keyval, []))
     matched = scoring.matched_terms(post, mirex, doc_len=dlen)
     coll_len = g["coll_len"]
 

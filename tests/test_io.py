@@ -53,7 +53,7 @@ def test_e2e_testsh_retrieval(spark, warc_df, testsh):
     assert tps.select("qid").distinct().count() == 50
 
     post = stats.postings(docs)
-    dlen = stats.doc_lengths(docs)
+    dlen = stats.scan_doc_lengths(stats.scan_stats(docs, []))
     tstats = post.groupBy("term").agg(F.sum("tf").alias("cf"))
     qstats = tps.join(tstats, "term", "left").fillna({"cf": 0})
     matched = scoring.matched_terms(post, tps, doc_len=dlen)

@@ -156,8 +156,9 @@ def test_pair_postings_serve_sdm_and_phrase(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from hadoop_ir_spark.catalog import QTERMS
     from hadoop_ir_spark.queries import indexed
-    from hadoop_ir_spark.queries.proximity_q import SDM_UW, _QTERMS
+    from hadoop_ir_spark.queries.proximity_q import SDM_UW
 
     phrase = _plan(spark, sf_dir, "indexed_phrase_topk")
     assert re.search(r"PushedFilters:.*In\(t1", phrase)
@@ -178,7 +179,7 @@ def test_pair_postings_serve_sdm_and_phrase(spark, sf_dir):
     pu = plan_of(
         spark.read.parquet(
             os.path.join(pos_dir, f"pair_unordered_w{SDM_UW}"))
-        .filter(F.col("u1").isin(_QTERMS) & F.col("u2").isin(_QTERMS)))
+        .filter(F.col("u1").isin(QTERMS) & F.col("u2").isin(QTERMS)))
     assert re.search(r"PushedFilters:.*In\(u1", pu)
     assert "utf:bigint" in pu
 

@@ -32,7 +32,7 @@ def test_tokenizer_invariants(spark, texts):
     assert all(re.fullmatch(r"[0-9a-z]+", r["t"]) for r in toks)
 
     dlen = {r["docno"]: r["doc_len"]
-            for r in stats.doc_lengths(docs).collect()}
+            for r in stats.scan_doc_lengths(stats.scan_stats(docs, [])).collect()}
     exploded = docs.select(
         "docno", F.explode(tokens_col("text")).alias("t")
     ).groupBy("docno").count().collect()

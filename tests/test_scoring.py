@@ -23,7 +23,8 @@ def corpus(spark):
     post = stats.postings(docs)
     # GSLIS family has no T9 guard (RunQueryHBase scores every indexed
     # doc, even empty ones) — keep d3 to pin that semantics here
-    dlen = stats.doc_lengths(docs, skip_empty=False)
+    dlen = stats.scan_doc_lengths(stats.scan_stats(docs, []),
+                                  skip_empty=False)
     tstats = stats.term_stats(post)
     return docs, post, dlen, tstats
 

@@ -69,14 +69,14 @@ def main() -> None:
         rows.append((scan_name, idx_name, times))
 
     # pruning evidence: PushedFilters on the positional scan + row fraction
-    from hadoop_ir_spark.queries.proximity_q import _QTERMS
+    from hadoop_ir_spark.catalog import QTERMS
     from pyspark.sql import functions as F
 
     pos_dir = indexed._POS_INDEX_CACHE[os.path.abspath(sf_dir)]
     pos = spark.read.parquet(os.path.join(pos_dir, "positional"))
     total = pos.count()
-    admitted = pos.filter(F.col("term").isin(_QTERMS)).count()
-    plan = pos.filter(F.col("term").isin(_QTERMS))._jdf.queryExecution() \
+    admitted = pos.filter(F.col("term").isin(QTERMS)).count()
+    plan = pos.filter(F.col("term").isin(QTERMS))._jdf.queryExecution() \
         .executedPlan().toString()
     pushed = next((ln.strip() for ln in plan.splitlines()
                    if "PushedFilters" in ln), "")
