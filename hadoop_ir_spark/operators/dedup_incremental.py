@@ -143,6 +143,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import namedtuple
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -245,12 +246,22 @@ _ALL_TABLES = (*INDEX_TABLES, EMBEDDINGS_TABLE, ANN_CENTROIDS, ANN_ASSIGN,
                ANN_CODEBOOK, ANN_CODES, SQ_BOUNDS, SQ_CODES, CC_LABELS,
                CC_ALIAS, TOMBSTONES)
 
-# trained manifest block -> (artifact snap key, per-doc table, per-doc
-# snaps key, the call that trains it)
+# trained manifest block -> its lifecycle: the artifact table (replaced
+# on retrain) and the block key naming its snap; the per-doc table
+# (folded O(snapshot), killed by the shared tombstones) and the key
+# listing its snaps; the call that trains the block, the train kwargs the
+# block records (a retrain replays them) and the kwarg that supplies a
+# custom artifact instead of the default training
+_Block = namedtuple("_Block", "art_snap art_table rows rows_snaps trainer "
+                              "params custom")
 _TRAINED = {
-    "ann": ("centroid_snap", ANN_ASSIGN, "assign_snaps", "train_ann_index"),
-    "pq": ("codebook_snap", ANN_CODES, "code_snaps", "train_pq_index"),
-    "sq": ("bounds_snap", SQ_CODES, "code_snaps", "train_sq_index"),
+    "ann": _Block("centroid_snap", ANN_CENTROIDS, ANN_ASSIGN, "assign_snaps",
+                  "train_ann_index", ("every", "max_k"), "centroids"),
+    "pq": _Block("codebook_snap", ANN_CODEBOOK, ANN_CODES, "code_snaps",
+                 "train_pq_index",
+                 ("m", "kk", "train_every", "dims", "residual"), "codebook"),
+    "sq": _Block("bounds_snap", SQ_BOUNDS, SQ_CODES, "code_snaps",
+                 "train_sq_index", (), None),
 }
 
 
@@ -563,9 +574,21 @@ def _block_rows(spark: SparkSession, index_dir: str, man: dict, blk: str,
     """The live per-doc rows of trained block ``blk`` (``ann_assign``,
     ``ann_codes`` or ``sq_codes``): its visible snaps, every visible
     tombstone applied."""
-    _, table, snaps_key, _ = _TRAINED[blk]
-    return _live_rows_tomb(spark, index_dir, table,
-                           [s for s in man[blk][snaps_key] if s in vis], vis)
+    spec = _TRAINED[blk]
+    return _live_rows_tomb(spark, index_dir, spec.rows,
+                           [s for s in man[blk][spec.rows_snaps] if s in vis],
+                           vis)
+
+
+def _artifact(spark: SparkSession, index_dir: str, man: dict,
+              blk: str) -> DataFrame:
+    """The trained artifact of block ``blk`` — IVF centroids
+    (centroid_id, cv), PQ sub-codebooks (s, code, cv) or SQ8 bounds
+    (d, lo, hi) — read from the one snap dir its manifest block names
+    (newest training replaces, never unions)."""
+    spec = _TRAINED[blk]
+    return spark.read.parquet(os.path.join(
+        index_dir, spec.art_table, f"snap={man[blk][spec.art_snap]}"))
 
 
 def _delta_log(spark: SparkSession, index_dir: str, table: str,
@@ -610,16 +633,14 @@ def load_dedup_index(spark: SparkSession, index_dir: str,
         out[EMBEDDINGS_TABLE] = emb
     man = _read_manifest(index_dir)
     vis = list(man["snaps"]) if snaps is None else list(snaps)
-    for blk, artifact, read in (("ann", ANN_CENTROIDS, _ann_centroid_frame),
-                                ("pq", ANN_CODEBOOK, _pq_codebook_frame),
-                                ("sq", SQ_BOUNDS, _sq_bounds_frame)):
-        if man.get(blk) and man[blk][_TRAINED[blk][0]] in vis:
-            out[artifact] = read(spark, index_dir, man)
+    for blk, spec in _TRAINED.items():
+        if man.get(blk) and man[blk][spec.art_snap] in vis:
+            out[spec.art_table] = _artifact(spark, index_dir, man, blk)
             rows = _block_rows(spark, index_dir, man, blk, vis)
             if rows is not None:
                 # the src training-provenance tag (r12) is maintenance
                 # metadata for ann_health, not logical index content
-                out[_TRAINED[blk][1]] = rows.drop("src")
+                out[spec.rows] = rows.drop("src")
     if man.get("cc"):
         try:
             out[CC_LABELS] = cc_labels_frame(spark, index_dir, snaps)
@@ -776,15 +797,21 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
     the doc tombstones).
 
     When the store carries trained maintenance artifacts, the fold also
-    maintains them at snapshot-proportional cost: a trained ANN index
-    (``train_ann_index``) gets the new vectors assigned to the
-    PERSISTED centroids; standing cc labels (``build_cc_labels``) get
-    the snapshot's pair edges merged in (contracted CC + alias log).
-    Both add pruned equi-join reads of standing tables — the same class
-    as the incremental queries, never a corpus rescan — so the
-    structural zero-reads property pinned by
+    maintains them at snapshot-proportional cost. Every trained vector
+    block gets the new vectors encoded against its FROZEN artifact and
+    tagged ``src='fold'``: the IVF index (``train_ann_index``) assigns
+    them to the persisted centroids, the PQ index (``train_pq_index``)
+    encodes them against the persisted codebook (residual PQ encodes
+    x − c(x) against this batch's assignment to the persisted
+    centroids), and the SQ8 index (``train_sq_index``) encodes them
+    against the persisted bounds, clipping out-of-range values. These
+    read only the broadcast-sized artifacts. Standing cc labels
+    (``build_cc_labels``) get the snapshot's pair edges merged in
+    (contracted CC + alias log), which adds pruned equi-join reads of
+    standing tables — the same class as the incremental queries, never
+    a corpus rescan — so the structural zero-reads property pinned by
     ``test_fold_in_reads_no_standing_table`` applies to the bare
-    fingerprint fold (no ANN/cc trained).
+    fingerprint fold (no trained block, no cc).
 
     Visibility is atomic — the new snap id enters the manifest only
     after every dir is fully written, and a crashed fold's partial dirs
@@ -814,44 +841,35 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
                 deltas[t].append(frames.pop(t))
             for t, df in frames.items():
                 att.write(df, t)
-        wrote_ann = wrote_pq = wrote_sq = False
+        folded = []
         if new_embeddings is not None:
             ne = _norm_emb(new_embeddings, emb_id_col, emb_vec_col)
             att.write(ne, EMBEDDINGS_TABLE)
-            if man.get("ann"):
-                # O(snapshot) ANN fold-in: assign ONLY the new vectors
-                # to the persisted centroids — the standing assignment
-                # is never read or rewritten. src='fold' marks the rows
-                # as post-training for ann_health's fold_fraction.
-                att.write(_assign_to_centroids(
-                    ne, _ann_centroid_frame(spark, index_dir, man),
-                    src="fold"), ANN_ASSIGN)
-                wrote_ann = True
-            if man.get("pq"):
-                # O(snapshot) PQ fold-in: encode ONLY the new vectors
-                # against the persisted codebook — the standing codes
-                # are never read or rewritten. A residual store encodes
-                # x − c(x) against THIS batch's assignment to the
-                # persisted centroids (same broadcast artifacts).
+            folded = [blk for blk in _TRAINED if man.get(blk)]
+        for blk in folded:
+            # O(snapshot) fold-in: encode ONLY the new vectors against the
+            # block's frozen artifact — the standing per-doc rows are never
+            # read or rewritten; src='fold' marks them as post-training
+            # for ann_health's fold_fraction
+            art = _artifact(spark, index_dir, man, blk)
+            if blk == "ann":
+                rows = _assign_to_centroids(ne, art, src="fold")
+            elif blk == "sq":
+                # out-of-range values clip: the drift sq's fold_fraction
+                # tracks
+                lo, hi, _ = _sq_bound_arrays(art)
+                rows = _sq_encode_docs(ne, lo, hi, src="fold")
+            else:
                 enc_in = ne
                 if man["pq"].get("residual"):
-                    cents = _ann_centroid_frame(spark, index_dir, man)
+                    # x − c(x) against THIS batch's assignment to the
+                    # persisted centroids
+                    cents = _artifact(spark, index_dir, man, "ann")
                     enc_in = _residual_frame(
                         ne, _assign_to_centroids(ne, cents), cents)
-                att.write(_pq_encode_docs(
-                    enc_in, _pq_codebook_frame(spark, index_dir, man),
-                    man["pq"]["m"], man["pq"]["dims"], src="fold"),
-                    ANN_CODES)
-                wrote_pq = True
-            if man.get("sq"):
-                # O(snapshot) SQ8 fold-in: encode ONLY the new vectors
-                # against the persisted bounds — out-of-range values
-                # clip; ann_health's sq fold_fraction tracks the drift.
-                lo, hi, _ = _sq_bound_arrays(
-                    _sq_bounds_frame(spark, index_dir, man))
-                att.write(_sq_encode_docs(ne, lo, hi, src="fold"),
-                          SQ_CODES)
-                wrote_sq = True
+                rows = _pq_encode_docs(enc_in, art, man["pq"]["m"],
+                                       man["pq"]["dims"], src="fold")
+            att.write(rows, _TRAINED[blk].rows)
         if removed_docs is not None:
             r = _norm(removed_docs, id_col, text_col)
             att.write(r.select("docno").distinct(), TOMBSTONES)
@@ -902,18 +920,9 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
             # the newest one — a manual (non-batch) update landing in
             # the crash window would otherwise poison the pre-fold view
             m["last_batch_snap"] = sid
-        if wrote_ann:
-            ann = dict(m["ann"])
-            ann["assign_snaps"] = ann["assign_snaps"] + [sid]
-            m["ann"] = ann
-        if wrote_pq:
-            pq = dict(m["pq"])
-            pq["code_snaps"] = pq["code_snaps"] + [sid]
-            m["pq"] = pq
-        if wrote_sq:
-            sq = dict(m["sq"])
-            sq["code_snaps"] = sq["code_snaps"] + [sid]
-            m["sq"] = sq
+        for blk in folded:
+            key = _TRAINED[blk].rows_snaps
+            m[blk] = {**m[blk], key: m[blk][key] + [sid]}
         if wrote_cc:
             cc = dict(m["cc"])
             cc["label_snaps"] = cc["label_snaps"] + [sid]
@@ -1002,64 +1011,24 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, *,
                               old_snaps)
         if emb is not None:
             out[EMBEDDINGS_TABLE] = emb
-        new_ann = man.get("ann")
-        if new_ann:
-            # the ANN tables ride the same merge: assign rows in the
-            # merged prefix fold (tombstones applied) into the new snap;
-            # the centroid artifact is copied verbatim if its snap merges
-            assign_merge = [s for s in new_ann["assign_snaps"]
-                            if s in merge]
-            new_assign = [s for s in new_ann["assign_snaps"] if s in kept]
-            if assign_merge:
-                out[ANN_ASSIGN] = _live_rows_tomb(
-                    spark, index_dir, ANN_ASSIGN, assign_merge, old_snaps)
-                new_assign = [sid] + new_assign
-            csnap = new_ann["centroid_snap"]
-            if csnap in merge:
-                out[ANN_CENTROIDS] = spark.read.parquet(
-                    os.path.join(index_dir, ANN_CENTROIDS,
-                                 f"snap={csnap}"))
-                csnap = sid
-            new_ann = {**new_ann, "centroid_snap": csnap,
-                       "assign_snaps": new_assign}
-        new_pq = man.get("pq")
-        if new_pq:
-            # the PQ tables ride the same merge: code rows in the merged
-            # prefix fold (tombstones applied) into the new snap; the
-            # codebook artifact is copied verbatim if its snap merges
-            codes_merge = [s for s in new_pq["code_snaps"] if s in merge]
-            new_codes = [s for s in new_pq["code_snaps"] if s in kept]
-            if codes_merge:
-                out[ANN_CODES] = _live_rows_tomb(
-                    spark, index_dir, ANN_CODES, codes_merge, old_snaps)
-                new_codes = [sid] + new_codes
-            qsnap = new_pq["codebook_snap"]
-            if qsnap in merge:
-                out[ANN_CODEBOOK] = spark.read.parquet(
-                    os.path.join(index_dir, ANN_CODEBOOK,
-                                 f"snap={qsnap}"))
-                qsnap = sid
-            new_pq = {**new_pq, "codebook_snap": qsnap,
-                      "code_snaps": new_codes}
-        new_sq = man.get("sq")
-        if new_sq:
-            # the SQ tables ride the same merge: code rows in the merged
-            # prefix fold (tombstones applied) into the new snap; the
-            # bounds artifact is copied verbatim if its snap merges
-            sq_merge = [s for s in new_sq["code_snaps"] if s in merge]
-            new_sq_codes = [s for s in new_sq["code_snaps"] if s in kept]
-            if sq_merge:
-                out[SQ_CODES] = _live_rows_tomb(
-                    spark, index_dir, SQ_CODES, sq_merge, old_snaps)
-                new_sq_codes = [sid] + new_sq_codes
-            bsnap = new_sq["bounds_snap"]
-            if bsnap in merge:
-                out[SQ_BOUNDS] = spark.read.parquet(
-                    os.path.join(index_dir, SQ_BOUNDS,
-                                 f"snap={bsnap}"))
-                bsnap = sid
-            new_sq = {**new_sq, "bounds_snap": bsnap,
-                      "code_snaps": new_sq_codes}
+        blocks = {}
+        for blk, spec in _TRAINED.items():
+            if not man.get(blk):
+                continue
+            # each trained block rides the same merge: per-doc rows in
+            # the merged prefix fold (tombstones applied) into the new
+            # snap; the artifact is copied verbatim if its snap merges
+            blocks[blk] = blk_man = dict(man[blk])
+            rows_merge = [s for s in blk_man[spec.rows_snaps] if s in merge]
+            blk_man[spec.rows_snaps] = [s for s in blk_man[spec.rows_snaps]
+                                        if s in kept]
+            if rows_merge:
+                out[spec.rows] = _live_rows_tomb(
+                    spark, index_dir, spec.rows, rows_merge, old_snaps)
+                blk_man[spec.rows_snaps].insert(0, sid)
+            if blk_man[spec.art_snap] in merge:
+                out[spec.art_table] = _artifact(spark, index_dir, man, blk)
+                blk_man[spec.art_snap] = sid
         new_cc = man.get("cc")
         if new_cc:
             # merged-prefix label rows get the PREFIX aliases folded in
@@ -1137,12 +1106,7 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, *,
             "last_batch_snap": lbs if lbs in kept else None,
             "params": m["params"],
         }
-        if new_ann:
-            out_man["ann"] = new_ann
-        if new_pq:
-            out_man["pq"] = new_pq
-        if new_sq:
-            out_man["sq"] = new_sq
+        out_man.update(blocks)
         if new_cc:
             out_man["cc"] = new_cc
         return out_man
@@ -1574,14 +1538,53 @@ def incremental_clean_keep_first(new_docs: DataFrame, index_dir: str, *,
 # tombstones, retrain electively (the compaction analogue).
 # ---------------------------------------------------------------------------
 
-def _ann_centroid_frame(spark: SparkSession, index_dir: str,
-                        man: dict) -> DataFrame:
-    """The trained centroid table (centroid_id, cv) — read from the snap
-    dir the manifest's ``ann.centroid_snap`` names (a trained ARTIFACT:
-    newest training replaces, never unions)."""
-    sid = man["ann"]["centroid_snap"]
-    return spark.read.parquet(
-        os.path.join(index_dir, ANN_CENTROIDS, f"snap={sid}"))
+def _train_block(spark: SparkSession, index_dir: str, blk: str,
+                 retrain: bool, fit) -> None:
+    """The train pass every trained block shares. Refuses a second train
+    without ``retrain=True`` (ValueError) and a store without embeddings
+    (FileNotFoundError); then ``fit(man, emb)`` fits the codec over the
+    LIVE embeddings and returns ``(artifact, encode)``. The artifact is
+    checkpointed — it feeds its own write and the full encoding pass —
+    and ``encode(artifact)`` returns ``(per-doc rows tagged
+    src='train', the block's recorded params)``. Artifact and rows land
+    as one new snapshot under the staged-attempt + manifest-CAS commit,
+    which REPLACES block ``blk`` so superseded dirs fall out of
+    visibility (vacuum reclaims them with the other orphans)."""
+    spec = _TRAINED[blk]
+    man = _read_manifest(index_dir)
+    if man.get(blk) and not retrain:
+        raise ValueError(
+            f"dedup index at {index_dir} already has a trained "
+            f"{blk.upper()} index ({spec.art_snap}="
+            f"{man[blk][spec.art_snap]}) — pass retrain=True for the "
+            f"elective periodic retrain")
+    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE)
+    if emb is None:
+        raise FileNotFoundError(
+            f"dedup index at {index_dir} has no embeddings table — build "
+            f"or update it with embeddings=... / new_embeddings=... "
+            f"before training the {blk.upper()} index")
+    art, encode = fit(man, emb)
+    art = art.localCheckpoint()
+    rows, params = encode(art)
+    sid = man["next_snap"]
+    att = _SnapAttempt(index_dir, sid)
+    try:
+        att.write(art, spec.art_table)
+        att.write(rows, spec.rows)
+    except Exception:
+        att.abort()
+        raise
+
+    def _mut(m: dict) -> dict:
+        m = dict(m)
+        m["snaps"] = m["snaps"] + [sid]
+        m["next_snap"] = sid + 1
+        m["last_snap"] = sid
+        m[blk] = {**params, spec.art_snap: sid, spec.rows_snaps: [sid]}
+        return m
+
+    att.commit(_mut)
 
 
 def _assign_to_centroids(emb: DataFrame, centroids: DataFrame,
@@ -1641,66 +1644,31 @@ def train_ann_index(spark: SparkSession, index_dir: str, *,
     ``residual_stale`` → mandatory retrain)."""
     from hadoop_ir_spark.operators import similarity
 
-    man = _read_manifest(index_dir)
-    if man.get("ann") and not retrain:
-        raise ValueError(
-            f"dedup index at {index_dir} already has a trained ANN index "
-            f"(centroid_snap={man['ann']['centroid_snap']}) — pass "
-            f"retrain=True for the elective periodic retrain")
-    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE)
-    if emb is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no embeddings table — build "
-            f"or update it with embeddings=... / new_embeddings=... "
-            f"before training the ANN index")
-    # centroid GENERATION (r12, VERDICT r11 #1): a monotone counter the
-    # pq block stamps at residual-train time — compaction renames snap
-    # ids but never touches the generation, so staleness detection
-    # (residual codes encode x − c(x) against generation g; serving
-    # must refuse when the store now carries g' ≠ g) is positional-free.
-    gen = man["ann"].get("generation", 0) + 1 if man.get("ann") else 0
-    # training METHOD (r12, ADVICE r11): an automatic health-driven
-    # retrain must not silently replace explicit k-means centers with
-    # the default id-sample — maintain_dedup_index skips the retrain of
-    # a 'custom'-trained store unless ann_kwargs supplies centroids.
-    method = "id_sample" if centroids is None else "custom"
-    if centroids is None:
-        centroids = similarity.centroid_sample(
-            emb, every=every, id_col="docno", vec_col="embedding",
-            max_k=max_k)
-    centroids = centroids.select(
-        "centroid_id", F.col("cv").cast("array<double>").alias("cv"))
-    centroids = centroids.localCheckpoint()   # two consumers below
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(centroids, ANN_CENTROIDS)
-        att.write(_assign_to_centroids(emb, centroids), ANN_ASSIGN)
-    except Exception:
-        att.abort()
-        raise
+    def fit(man: dict, emb: DataFrame):
+        # centroid GENERATION (r12, VERDICT r11 #1): a monotone counter
+        # the pq block stamps at residual-train time — compaction renames
+        # snap ids but never touches the generation, so staleness
+        # detection (residual codes encode x − c(x) against generation g;
+        # serving must refuse when the store now carries g' ≠ g) is
+        # positional-free.
+        gen = man["ann"].get("generation", 0) + 1 if man.get("ann") else 0
+        cents = centroids
+        if cents is None:
+            cents = similarity.centroid_sample(
+                emb, every=every, id_col="docno", vec_col="embedding",
+                max_k=max_k)
+        cents = cents.select(
+            "centroid_id", F.col("cv").cast("array<double>").alias("cv"))
+        # training METHOD (r12, ADVICE r11): an automatic health-driven
+        # retrain must not silently replace explicit k-means centers with
+        # the default id-sample — maintain_dedup_index skips the retrain
+        # of a 'custom'-trained store unless ann_kwargs supplies centroids.
+        method = "id_sample" if centroids is None else "custom"
+        return cents, lambda c: (_assign_to_centroids(emb, c), {
+            "every": every, "max_k": max_k, "method": method,
+            "generation": gen})
 
-    def _mut(m: dict) -> dict:
-        m = dict(m)
-        m["snaps"] = m["snaps"] + [sid]
-        m["next_snap"] = sid + 1
-        m["last_snap"] = sid
-        m["ann"] = {"every": every, "max_k": max_k, "method": method,
-                    "generation": gen,
-                    "centroid_snap": sid, "assign_snaps": [sid]}
-        return m
-
-    att.commit(_mut)
-
-
-def _pq_codebook_frame(spark: SparkSession, index_dir: str,
-                       man: dict) -> DataFrame:
-    """The trained sub-codebook table (s, code, cv) — read from the snap
-    dir the manifest's ``pq.codebook_snap`` names (a trained ARTIFACT:
-    newest training replaces, never unions)."""
-    sid = man["pq"]["codebook_snap"]
-    return spark.read.parquet(
-        os.path.join(index_dir, ANN_CODEBOOK, f"snap={sid}"))
+    _train_block(spark, index_dir, "ann", retrain, fit)
 
 
 def _residual_frame(emb: DataFrame, assign: DataFrame,
@@ -1783,66 +1751,38 @@ def train_pq_index(spark: SparkSession, index_dir: str, *,
     kk = similarity.PQ_K if kk is None else kk
     train_every = (similarity.PQ_TRAIN_EVERY if train_every is None
                    else train_every)
-    man = _read_manifest(index_dir)
-    if man.get("pq") and not retrain:
-        raise ValueError(
-            f"dedup index at {index_dir} already has a trained PQ index "
-            f"(codebook_snap={man['pq']['codebook_snap']}) — pass "
-            f"retrain=True for the elective periodic retrain")
-    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE)
-    if emb is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no embeddings table — build "
-            f"or update it with embeddings=... / new_embeddings=... "
-            f"before training the PQ index")
-    pq_method = "deterministic" if codebook is None else "custom"
-    ivf_gen = None
-    if residual:
-        if not man.get("ann"):
-            raise ValueError(
-                f"dedup index at {index_dir}: residual PQ encodes "
-                f"x − c(x) against the IVF centroids — run "
-                f"train_ann_index first")
-        # stamp the centroid generation the residuals are computed
-        # against (r12, VERDICT r11 #1): indexed_ivfpq_topk refuses to
-        # serve when the store's IVF generation has moved past this —
-        # the documented "IVF retrain invalidates residual codes"
-        # invariant, enforced loudly instead of by prose.
-        ivf_gen = man["ann"].get("generation", 0)
-        assign = _block_rows(spark, index_dir, man, "ann",
-                             list(man["snaps"]))
-        emb = _residual_frame(emb, assign,
-                              _ann_centroid_frame(spark, index_dir, man))
-    if codebook is None:
-        codebook = similarity.pq_codebook(
-            emb, m=m, k=kk, train_every=train_every, id_col="docno",
-            vec_col="embedding", dims=dims)
-    codebook = codebook.select(
-        "s", "code", F.col("cv").cast("array<double>").alias("cv"))
-    codebook = codebook.localCheckpoint()   # two consumers below
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(codebook, ANN_CODEBOOK)
-        att.write(_pq_encode_docs(emb, codebook, m, dims), ANN_CODES)
-    except Exception:
-        att.abort()
-        raise
 
-    def _mut(mn: dict) -> dict:
-        mn = dict(mn)
-        mn["snaps"] = mn["snaps"] + [sid]
-        mn["next_snap"] = sid + 1
-        mn["last_snap"] = sid
-        mn["pq"] = {"m": m, "kk": kk, "train_every": train_every,
-                    "dims": dims, "residual": residual,
-                    "method": pq_method,
-                    "codebook_snap": sid, "code_snaps": [sid]}
-        if ivf_gen is not None:
-            mn["pq"]["ivf_generation"] = ivf_gen
-        return mn
+    def fit(man: dict, emb: DataFrame):
+        params = {"m": m, "kk": kk, "train_every": train_every,
+                  "dims": dims, "residual": residual,
+                  "method": "deterministic" if codebook is None
+                  else "custom"}
+        if residual:
+            if not man.get("ann"):
+                raise ValueError(
+                    f"dedup index at {index_dir}: residual PQ encodes "
+                    f"x − c(x) against the IVF centroids — run "
+                    f"train_ann_index first")
+            # stamp the centroid generation the residuals are computed
+            # against (r12, VERDICT r11 #1): indexed_ivfpq_topk refuses
+            # to serve when the store's IVF generation has moved past
+            # this — the documented "IVF retrain invalidates residual
+            # codes" invariant, enforced loudly instead of by prose.
+            params["ivf_generation"] = man["ann"].get("generation", 0)
+            emb = _residual_frame(
+                emb, _block_rows(spark, index_dir, man, "ann",
+                                 list(man["snaps"])),
+                _artifact(spark, index_dir, man, "ann"))
+        cb = codebook
+        if cb is None:
+            cb = similarity.pq_codebook(
+                emb, m=m, k=kk, train_every=train_every, id_col="docno",
+                vec_col="embedding", dims=dims)
+        cb = cb.select("s", "code",
+                       F.col("cv").cast("array<double>").alias("cv"))
+        return cb, lambda c: (_pq_encode_docs(emb, c, m, dims), params)
 
-    att.commit(_mut)
+    _train_block(spark, index_dir, "pq", retrain, fit)
 
 
 # ---------------------------------------------------------------------------
@@ -1854,16 +1794,6 @@ def train_pq_index(spark: SparkSession, index_dir: str, *,
 # O(snapshot) against the FROZEN bounds, retraction via the shared
 # tombstones, compaction carries tables and manifest block.
 # ---------------------------------------------------------------------------
-
-def _sq_bounds_frame(spark: SparkSession, index_dir: str,
-                     man: dict) -> DataFrame:
-    """The trained per-dimension bounds table (d, lo, hi) — read from
-    the snap dir the manifest's ``sq.bounds_snap`` names (a trained
-    ARTIFACT: newest training replaces, never unions)."""
-    sid = man["sq"]["bounds_snap"]
-    return spark.read.parquet(
-        os.path.join(index_dir, SQ_BOUNDS, f"snap={sid}"))
-
 
 def _sq_bound_arrays(bounds: DataFrame):
     """Collect the (d, lo, hi) artifact into two array literals
@@ -1927,43 +1857,18 @@ def train_sq_index(spark: SparkSession, index_dir: str, *,
     code dirs fall out of visibility). Independent of the IVF and PQ
     blocks — a store can carry any combination; ``indexed_ivfsq_topk``
     composes this block with a trained IVF index."""
-    man = _read_manifest(index_dir)
-    if man.get("sq") and not retrain:
-        raise ValueError(
-            f"dedup index at {index_dir} already has a trained SQ index "
-            f"(bounds_snap={man['sq']['bounds_snap']}) — pass "
-            f"retrain=True for the elective periodic retrain")
-    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE)
-    if emb is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no embeddings table — build "
-            f"or update it with embeddings=... / new_embeddings=... "
-            f"before training the SQ index")
-    bounds = (emb.select(F.posexplode(
-        F.col("embedding").cast("array<double>")).alias("d", "x"))
-        .groupBy("d")
-        .agg(F.min("x").alias("lo"), F.max("x").alias("hi")))
-    bounds = bounds.localCheckpoint()   # two consumers below
-    lo, hi, dims = _sq_bound_arrays(bounds)
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    try:
-        att.write(bounds, SQ_BOUNDS)
-        att.write(_sq_encode_docs(emb, lo, hi), SQ_CODES)
-    except Exception:
-        att.abort()
-        raise
+    def fit(man: dict, emb: DataFrame):
+        def encode(bounds: DataFrame):
+            lo, hi, dims = _sq_bound_arrays(bounds)
+            return (_sq_encode_docs(emb, lo, hi),
+                    {"dims": dims, "method": "minmax"})
 
-    def _mut(mn: dict) -> dict:
-        mn = dict(mn)
-        mn["snaps"] = mn["snaps"] + [sid]
-        mn["next_snap"] = sid + 1
-        mn["last_snap"] = sid
-        mn["sq"] = {"dims": dims, "method": "minmax",
-                    "bounds_snap": sid, "code_snaps": [sid]}
-        return mn
+        return (emb.select(F.posexplode(
+            F.col("embedding").cast("array<double>")).alias("d", "x"))
+            .groupBy("d")
+            .agg(F.min("x").alias("lo"), F.max("x").alias("hi")), encode)
 
-    att.commit(_mut)
+    _train_block(spark, index_dir, "sq", retrain, fit)
 
 
 # ---------------------------------------------------------------------------
@@ -1993,14 +1898,14 @@ def _serve_gate(index_dir: str, blocks: tuple, snaps=None,
         raise ValueError(
             f"filter_mode must be 'pre' or 'post', got {filter_mode!r}")
     man = _read_manifest(index_dir)
-    missing = [_TRAINED[b][3] for b in blocks if not man.get(b)]
+    missing = [_TRAINED[b].trainer for b in blocks if not man.get(b)]
     if missing:
         raise ValueError(
             f"dedup index at {index_dir} lacks a trained index this serve "
             f"needs — run {' and '.join(missing)} first")
     vis = list(man["snaps"]) if snaps is None else list(snaps)
     for b in blocks:
-        sid = man[b][_TRAINED[b][0]]
+        sid = man[b][_TRAINED[b].art_snap]
         if sid not in vis:
             raise FileNotFoundError(
                 f"dedup index at {index_dir}: the trained {b} snap {sid} "
@@ -2071,7 +1976,7 @@ def _serve(queries: DataFrame, index_dir: str, *, codec: str | None,
                            snaps, filter_mode)
 
     def live(blk=None):
-        table = _TRAINED[blk][1] if blk else EMBEDDINGS_TABLE
+        table = _TRAINED[blk].rows if blk else EMBEDDINGS_TABLE
         rows = (_block_rows(spark, index_dir, man, blk, vis) if blk
                 else _live_rows_tomb(spark, index_dir, table, vis, vis))
         if rows is None:
@@ -2102,7 +2007,7 @@ def _serve(queries: DataFrame, index_dir: str, *, codec: str | None,
     pre, post = (fd is not None and filter_mode == m for m in ("pre", "post"))
     rows = live(codec)
     if ivf:
-        cents = _ann_centroid_frame(spark, index_dir, man)
+        cents = _artifact(spark, index_dir, man, "ann")
         if ranked_probes is None:
             ranked_probes = similarity._probe_ranking(q, cents, vec_col="qv")
         probes = (ranked_probes.filter(F.col("_r") <= nprobe)
@@ -2122,7 +2027,7 @@ def _serve(queries: DataFrame, index_dir: str, *, codec: str | None,
                 F.zip_with(F.col("qv").cast("array<double>"), F.col("cv"),
                            lambda a, b: a - b).alias("qv"))
         lut = similarity.pq_lut(
-            lut_q, _pq_codebook_frame(spark, index_dir, man),
+            lut_q, _artifact(spark, index_dir, man, "pq"),
             m=man["pq"]["m"], vec_col="qv", dims=man["pq"]["dims"],
             key_cols=("centroid_id",) * residual)
         keys = ["qid"] * ivf + ["centroid_id"] * residual + ["s", "code"]
@@ -2132,7 +2037,7 @@ def _serve(queries: DataFrame, index_dir: str, *, codec: str | None,
             [F.asc("_di"), F.desc("docno")],
             F.round(F.col("_di").cast("double") / 1e6, 6).alias("approx_d2"))
     elif codec == "sq":
-        lo, hi, _ = _sq_bound_arrays(_sq_bounds_frame(spark, index_dir, man))
+        lo, hi, _ = _sq_bound_arrays(_artifact(spark, index_dir, man, "sq"))
         scored, order, value = by_cosine(
             pairs, _sq_decode_expr(F.col("codes"), lo, hi))
     else:
@@ -2188,7 +2093,7 @@ def ivfpq_ranked_probes(queries: DataFrame, index_dir: str, *,
 
     man, _ = _serve_gate(index_dir, ("ann",))
     return similarity._probe_ranking(
-        queries, _ann_centroid_frame(queries.sparkSession, index_dir, man),
+        queries, _artifact(queries.sparkSession, index_dir, man, "ann"),
         qid_col=qid_col, vec_col=vec_col)
 
 
@@ -2665,9 +2570,13 @@ def maintain_dedup_index(spark: SparkSession, index_dir: str, *,
     skipped is itself skipped (the staleness guard in
     ``indexed_ivfpq_topk`` would otherwise refuse to serve).
 
-    kwargs dicts pass through to build_cc_labels / the two trainers
-    (e.g. ``cc_kwargs={"tau": 0.9}``; tau defaults to the cc block's
-    recorded value); ``cc_health_kwargs`` / ``ann_health_kwargs`` tune
+    ``cc_kwargs`` passes through to build_cc_labels (e.g.
+    ``cc_kwargs={"tau": 0.9}``; tau defaults to the cc block's recorded
+    value). ``ann_kwargs`` supplies the custom artifacts of the three
+    trainers and accepts only ``centroids`` (train_ann_index) and
+    ``codebook`` (train_pq_index) — any other key raises ValueError;
+    every other train param is the block's recorded value.
+    ``cc_health_kwargs`` / ``ann_health_kwargs`` tune
     the health thresholds (e.g.
     ``cc_health_kwargs={"touched_rebuild_threshold": 50}`` for
     routine-takedown pipelines, or ``{"verify_splits": True}`` to pay
@@ -2675,65 +2584,51 @@ def maintain_dedup_index(spark: SparkSession, index_dir: str, *,
     exact gate). This is the weekly pipeline's maintenance step: folds
     stay O(snapshot) all week, and this call pays exactly the elective
     passes the data says are due."""
+    kw = dict(ann_kwargs or {})
+    accepted = {spec.custom for spec in _TRAINED.values()} - {None}
+    if set(kw) - accepted:
+        raise ValueError(
+            f"maintain_dedup_index: ann_kwargs accepts only "
+            f"{sorted(accepted)} (custom artifacts for the retrain), got "
+            f"{sorted(set(kw) - accepted)}")
     man = _read_manifest(index_dir)
     actions: list[str] = []
     cc_rep = ann_rep = None
     if man.get("cc"):
         cc_rep = cc_health(spark, index_dir, **(cc_health_kwargs or {}))
         if cc_rep["recommendation"] == "rebuild":
-            kw = dict(cc_kwargs or {})
-            kw.setdefault("tau", man["cc"]["tau"])
-            build_cc_labels(spark, index_dir, rebuild=True, **kw)
+            ckw = dict(cc_kwargs or {})
+            ckw.setdefault("tau", man["cc"]["tau"])
+            build_cc_labels(spark, index_dir, rebuild=True, **ckw)
             actions.append("cc_rebuild")
-    if man.get("ann") or man.get("pq") or man.get("sq"):
+    trained = {blk: spec for blk, spec in _TRAINED.items() if man.get(blk)}
+    if trained:
         ann_rep = ann_health(spark, index_dir,
                              **(ann_health_kwargs or {}))
-        if ann_rep["recommendation"] == "retrain":
-            kw = dict(ann_kwargs or {})
-            ann_ok = (man["ann"].get("method", "id_sample") != "custom"
-                      or kw.get("centroids") is not None) \
-                if man.get("ann") else False
-            pq_ok = (man["pq"].get("method",
-                                   "deterministic") != "custom"
-                     or kw.get("codebook") is not None) \
-                if man.get("pq") else False
-            if man.get("ann") and man.get("pq") \
-                    and man["pq"].get("residual") and not pq_ok:
-                # an IVF retrain would orphan the residual codes, and
-                # their re-encode must be skipped (custom codebook, none
-                # supplied) — never create the state the serving guard
-                # refuses; skip the IVF retrain too
-                ann_ok = False
-            if man.get("ann"):
-                if ann_ok:
-                    train_ann_index(spark, index_dir, retrain=True,
-                                    every=man["ann"]["every"],
-                                    max_k=man["ann"]["max_k"],
-                                    centroids=kw.get("centroids"))
-                    actions.append("ann_retrain")
-                else:
-                    actions.append("ann_retrain_skipped_custom")
-            if man.get("pq"):
-                if pq_ok:
-                    train_pq_index(spark, index_dir, retrain=True,
-                                   m=man["pq"]["m"], kk=man["pq"]["kk"],
-                                   train_every=man["pq"]["train_every"],
-                                   dims=man["pq"]["dims"],
-                                   residual=man["pq"].get("residual",
-                                                          False),
-                                   codebook=kw.get("codebook"))
-                    actions.append("pq_retrain")
-                else:
-                    actions.append("pq_retrain_skipped_custom")
-            if man.get("sq"):
-                # SQ8 bounds are always the recorded minmax method —
-                # no custom-artifact path to preserve, so the retrain
-                # is unconditionally safe
-                train_sq_index(spark, index_dir, retrain=True)
-                actions.append("sq_retrain")
+    if ann_rep and ann_rep["recommendation"] == "retrain":
+        ok = {blk: man[blk].get("method") != "custom"
+              or kw.get(spec.custom) is not None
+              for blk, spec in trained.items()}
+        if "ann" in ok and man.get("pq", {}).get("residual") \
+                and not ok["pq"]:
+            # an IVF retrain would orphan the residual codes, and their
+            # re-encode must be skipped (custom codebook, none supplied)
+            # — never create the state the serving guard refuses; skip
+            # the IVF retrain too
+            ok["ann"] = False
+        for blk, spec in trained.items():
+            if not ok[blk]:
+                actions.append(f"{blk}_retrain_skipped_custom")
+                continue
+            params = {p: man[blk][p] for p in spec.params
+                      if p in man[blk]}
+            if spec.custom:
+                params[spec.custom] = kw.get(spec.custom)
+            globals()[spec.trainer](spark, index_dir, retrain=True,
+                                    **params)
+            actions.append(f"{blk}_retrain")
     if compact == "auto":
-        did_work = any(a in ("cc_rebuild", "ann_retrain", "pq_retrain",
-                             "sq_retrain")
+        did_work = any(a == "cc_rebuild" or a.endswith("_retrain")
                        for a in actions)
         do_compact = did_work \
             or (cc_rep is not None
@@ -2752,6 +2647,25 @@ def maintain_dedup_index(spark: SparkSession, index_dir: str, *,
         if vacuum_dedup_index(index_dir):
             actions.append("vacuum")
     return {"actions": actions, "cc": cc_rep, "ann": ann_rep}
+
+
+def _fold_fraction(rows: DataFrame | None,
+                   unit: str | None = None) -> tuple[int, float]:
+    """(live count, fold_fraction) of a trained block's live per-doc
+    rows: the share a fold wrote (``src='fold'``) rather than the
+    training pass. Counts rows, or distinct ``unit`` values (pq writes m
+    code rows per doc and counts docnos). Rows without a ``src`` column
+    count as trained."""
+    if rows is None:
+        return 0, 0.0
+
+    def n(df: DataFrame) -> int:
+        return (df.select(unit).distinct() if unit else df).count()
+
+    total = n(rows)
+    folded = (n(rows.filter(F.col("src") == "fold"))
+              if "src" in rows.columns else 0)
+    return total, round(folded / total, 3) if total else 0.0
 
 
 def ann_health(spark: SparkSession, index_dir: str, *, snaps=None,
@@ -2780,7 +2694,7 @@ def ann_health(spark: SparkSession, index_dir: str, *, snaps=None,
       (r12: True iff the store's residual codes were trained against a
       superseded IVF centroid generation — ``indexed_ivfpq_topk``
       refuses to serve this state, so it is a MANDATORY retrain);
-    - recommendation: ``retrain`` when either index's fold_fraction
+    - recommendation: ``retrain`` when any index's fold_fraction
       crosses ``fold_retrain_threshold``, the IVF skew crosses
       ``skew_retrain_threshold``, or ``residual_stale``, else ``none``.
 
@@ -2788,78 +2702,52 @@ def ann_health(spark: SparkSession, index_dir: str, *, snaps=None,
     the train/fold writers stamp (r12, VERDICT r11 #2) — NOT from snap
     position — so it survives compaction (which merges the training
     dirs and every fold into one snap) and retraction (a tombstoned row
-    is debited from the bucket it was written in) exactly. Pre-r12
-    stores without the column fall back to the positional first-snap
-    split.
+    is debited from the bucket it was written in) exactly. Rows without
+    the tag count as trained.
 
-    Cost: two groupBy counts over the integer assign/code tables —
+    Cost, per trained block, over its live (tombstone-applied) per-doc
+    table: ivf — two row counts (live, folded), the centroid count and
+    one groupBy over centroid_id for the list sizes; pq — three distinct
+    counts (docnos, folded docnos, (s, code) pairs); sq — two row counts
+    (live, folded). Only integer and tag columns are read —
     metadata-light, safe as a weekly canary at 100 TB."""
     man = _read_manifest(index_dir)
-    if not man.get("ann") and not man.get("pq") and not man.get("sq"):
+    if not any(man.get(blk) for blk in _TRAINED):
         raise ValueError(
             f"dedup index at {index_dir} has no trained ANN, PQ or SQ "
             f"index — run train_ann_index / train_pq_index / "
             f"train_sq_index first")
     vis = _visible_snaps(index_dir, snaps)
-    out: dict = {"ivf": None, "pq": None}
+    out: dict = {"ivf": None, "pq": None, "sq": None}
+    rows = {blk: _block_rows(spark, index_dir, man, blk, vis)
+            for blk in _TRAINED if man.get(blk)}
     retrain = False
 
     if man.get("ann"):
-        asnaps = [s for s in man["ann"]["assign_snaps"] if s in vis]
-        assign = _live_rows_tomb(spark, index_dir, ANN_ASSIGN, asnaps,
-                                 vis)
-        n_assigned = assign.count() if assign is not None else 0
-        if assign is not None and "src" in assign.columns:
-            # row-level training provenance (r12, VERDICT r11 #2):
-            # exact across compaction (merged rows keep their tag) and
-            # retraction (a tombstone debits the bucket its row is in)
-            n_folded = assign.filter(F.col("src") == "fold").count()
-        else:
-            # pre-r12 store: positional fallback — the first assign
-            # snap is the training pass (resets across compaction)
-            fold_snaps = [s for s in asnaps
-                          if s != man["ann"]["assign_snaps"][0]]
-            folded = (_live_rows_tomb(spark, index_dir, ANN_ASSIGN,
-                                      fold_snaps, vis)
-                      if fold_snaps else None)
-            n_folded = folded.count() if folded is not None else 0
-        n_cents = _ann_centroid_frame(spark, index_dir, man).count()
+        assign = rows["ann"]
+        n_assigned, ff = _fold_fraction(assign)
+        n_cents = _artifact(spark, index_dir, man, "ann").count()
         skew = 0.0
         n_empty = n_cents
-        if assign is not None and n_assigned:
+        if n_assigned:
             sizes = assign.groupBy("centroid_id").count()
             agg = sizes.agg(F.max("count").alias("mx"),
                             F.avg("count").alias("avg"),
                             F.count("*").alias("nonempty")).first()
             skew = round(float(agg["mx"]) / float(agg["avg"]), 3)
             n_empty = n_cents - int(agg["nonempty"])
-        ff = round(n_folded / n_assigned, 3) if n_assigned else 0.0
         out["ivf"] = {"n_centroids": n_cents, "n_assigned": n_assigned,
                       "fold_fraction": ff, "list_skew": skew,
                       "n_empty_lists": n_empty}
-        retrain = retrain or ff >= fold_retrain_threshold \
+        retrain = ff >= fold_retrain_threshold \
             or skew >= skew_retrain_threshold
 
     if man.get("pq"):
-        csnaps = [s for s in man["pq"]["code_snaps"] if s in vis]
-        codes = _live_rows_tomb(spark, index_dir, ANN_CODES, csnaps, vis)
-        n_docs = (codes.select("docno").distinct().count()
-                  if codes is not None else 0)
-        if codes is not None and "src" in codes.columns:
-            n_fold_docs = (codes.filter(F.col("src") == "fold")
-                           .select("docno").distinct().count())
-        else:
-            fold_snaps = [s for s in csnaps
-                          if s != man["pq"]["code_snaps"][0]]
-            folded = (_live_rows_tomb(spark, index_dir, ANN_CODES,
-                                      fold_snaps, vis)
-                      if fold_snaps else None)
-            n_fold_docs = (folded.select("docno").distinct().count()
-                           if folded is not None else 0)
+        codes = rows["pq"]
+        n_docs, ff = _fold_fraction(codes, "docno")
         used = (codes.select("s", "code").distinct().count()
                 if codes is not None else 0)
         total_codes = man["pq"]["m"] * man["pq"]["kk"]
-        ff = round(n_fold_docs / n_docs, 3) if n_docs else 0.0
         # mandatory-retrain state (r12, VERDICT r11 #1): residual codes
         # orphaned by an IVF retrain — serving already refuses; the
         # health report must say WHY and recommend the repair.
@@ -2872,18 +2760,12 @@ def ann_health(spark: SparkSession, index_dir: str, *, snaps=None,
                      "residual_stale": stale}
         retrain = retrain or ff >= fold_retrain_threshold or stale
 
-    out["sq"] = None
     if man.get("sq"):
-        # SQ8 (r12): fold_fraction with the same src-tag accounting —
-        # vectors encoded against bounds that never saw them CLIP when
-        # they fall outside the trained range, so drift here degrades
-        # quantization fidelity exactly like codebook drift does for PQ.
-        ssnaps = [s for s in man["sq"]["code_snaps"] if s in vis]
-        sqc = _live_rows_tomb(spark, index_dir, SQ_CODES, ssnaps, vis)
-        n_sq = sqc.count() if sqc is not None else 0
-        n_sq_fold = (sqc.filter(F.col("src") == "fold").count()
-                     if sqc is not None and "src" in sqc.columns else 0)
-        ff = round(n_sq_fold / n_sq, 3) if n_sq else 0.0
+        # SQ8 (r12): vectors encoded against bounds that never saw them
+        # CLIP when they fall outside the trained range, so drift here
+        # degrades quantization fidelity exactly like codebook drift
+        # does for PQ.
+        n_sq, ff = _fold_fraction(rows["sq"])
         out["sq"] = {"n_encoded": n_sq, "fold_fraction": ff}
         retrain = retrain or ff >= fold_retrain_threshold
 

@@ -360,12 +360,12 @@ def test_streaming_fold_maintains_vector_side(spark, tmp_path):
     assert {r["docno"] for r in live["embeddings"].collect()} \
         == set(all_ids)
     union_emb = _emb_df(spark, all_ids)
-    cents = dinc._ann_centroid_frame(spark, idx, man)
+    cents = dinc._artifact(spark, idx, man, "ann")
     want_assign = sorted(map(tuple, similarity.assign_centroids(
         union_emb, cents, id_col="docno", vec_col="embedding")
         .select(F.col("vec_id").alias("docno"), "centroid_id").collect()))
     assert sorted(map(tuple, live["ann_assign"].collect())) == want_assign
-    cb = dinc._pq_codebook_frame(spark, idx, man)
+    cb = dinc._artifact(spark, idx, man, "pq")
     want_codes = sorted(map(tuple, similarity.pq_encode(
         union_emb, cb, m=4, id_col="docno", vec_col="embedding", dims=8)
         .select(F.col("vec_id").alias("docno"), "s", "code").collect()))
@@ -1226,7 +1226,7 @@ def test_ann_index_fold_equals_rebuild(spark, tmp_path):
     man = dinc._read_manifest(idx)
     assert man["ann"]["assign_snaps"] == [1, 2]
 
-    cents = dinc._ann_centroid_frame(spark, idx, man)
+    cents = dinc._artifact(spark, idx, man, "ann")
     union_emb = _emb_df(spark, old_ids + new_ids)
     want_assign = sorted(map(tuple, similarity.assign_centroids(
         union_emb, cents, id_col="docno", vec_col="embedding")
@@ -1321,7 +1321,7 @@ def test_pq_index_fold_equals_rebuild(spark, tmp_path):
     man = dinc._read_manifest(idx)
     assert man["pq"]["code_snaps"] == [1, 2]
 
-    cb = dinc._pq_codebook_frame(spark, idx, man)
+    cb = dinc._artifact(spark, idx, man, "pq")
     union_emb = _emb_df(spark, old_ids + new_ids)
     want_codes = sorted(map(tuple, similarity.pq_encode(
         union_emb, cb, m=4, id_col="docno", vec_col="embedding", dims=8)
@@ -1781,7 +1781,7 @@ def test_ann_kmeans_trained_fold_equals_rebuild(spark, tmp_path):
     dinc.update_dedup_index(spark, idx, _docs_for(spark, new_ids),
                             new_embeddings=_emb_df(spark, new_ids))
     man = dinc._read_manifest(idx)
-    persisted = dinc._ann_centroid_frame(spark, idx, man)
+    persisted = dinc._artifact(spark, idx, man, "ann")
     assert sorted(map(tuple, persisted.collect())) \
         == sorted((r["centroid_id"], list(r["cv"]))
                   for r in cents.collect())
@@ -2133,13 +2133,13 @@ def test_residual_pq_index_fold_equals_rebuild(spark, tmp_path):
 
     # fold == rebuild: union residuals (per-doc assignment to the
     # persisted centroids) encoded against the persisted codebook
-    cents = dinc._ann_centroid_frame(spark, idx, man)
+    cents = dinc._artifact(spark, idx, man, "ann")
     union_emb = _emb_df(spark, old_ids + new_ids)
     union_assign = similarity.assign_centroids(
         union_emb, cents, id_col="docno", vec_col="embedding").select(
         F.col("vec_id").alias("docno"), "centroid_id")
     union_res = dinc._residual_frame(union_emb, union_assign, cents)
-    cb = dinc._pq_codebook_frame(spark, idx, man)
+    cb = dinc._artifact(spark, idx, man, "pq")
     want_codes = sorted(map(tuple, similarity.pq_encode(
         union_res, cb, m=4, id_col="docno", vec_col="embedding", dims=8)
         .select(F.col("vec_id").alias("docno"), "s", "code").collect()))
@@ -2734,7 +2734,7 @@ def test_sq_index_fold_equals_rebuild(spark, tmp_path):
     assert man["sq"]["code_snaps"] == [1, 2]
 
     lo, hi, _ = dinc._sq_bound_arrays(
-        dinc._sq_bounds_frame(spark, idx, man))
+        dinc._artifact(spark, idx, man, "sq"))
     union = _emb_df(spark, old_ids + new_ids)
     want_codes = sorted(
         (r["docno"], tuple(r["codes"]))
@@ -2849,7 +2849,7 @@ def test_ivfsq_equals_sq_restricted_to_probed(spark, tmp_path):
     # narrow probe: per-query equality against the flat scan restricted
     # to that query's probed lists
     man = dinc._read_manifest(idx)
-    cents = dinc._ann_centroid_frame(spark, idx, man)
+    cents = dinc._artifact(spark, idx, man, "ann")
     assign = dinc.load_dedup_index(spark, idx)["ann_assign"]
     narrow = dinc.indexed_ivfsq_topk(queries, idx, k=6, nprobe=2)
     for qid, vec in ((100, _vec(3)), (101, _vec(27))):
@@ -2920,3 +2920,112 @@ def test_serving_entry_points_refuse_clearly(spark, serving_stores, name):
                            match="not in the visible snaps"):
             serve(q, trained, snaps=[0])
 
+
+
+@pytest.fixture(scope="module")
+def no_embeddings_store(spark, tmp_path_factory):
+    """A store built from documents only: no embeddings table."""
+    idx = str(tmp_path_factory.mktemp("no_emb") / "idx")
+    dinc.build_dedup_index(_docs_for(spark, list(range(0, 8))), idx)
+    return idx
+
+
+# trainer -> the kwargs the serving_stores fixture trained it with
+_TRAINER_KWARGS = {
+    "train_ann_index": {"every": 4},
+    "train_pq_index": {"m": 4, "kk": 4, "train_every": 3, "dims": 8},
+    "train_sq_index": {},
+}
+
+
+@pytest.mark.parametrize("name", list(_TRAINER_KWARGS))
+def test_trainers_refuse_clearly(spark, serving_stores, no_embeddings_store,
+                                 name):
+    """Every trainer refuses a second train without retrain=True
+    (ValueError) and a store without embeddings (FileNotFoundError),
+    before writing anything."""
+    train, kw = getattr(dinc, name), _TRAINER_KWARGS[name]
+    _, trained = serving_stores
+    man = dinc._read_manifest(trained)
+    with pytest.raises(ValueError, match="already has a trained"):
+        train(spark, trained, **kw)
+    with pytest.raises(FileNotFoundError, match="no embeddings table"):
+        train(spark, no_embeddings_store, **kw)
+    assert dinc._read_manifest(trained) == man
+
+
+def test_residual_pq_without_ivf_refuses(spark, serving_stores):
+    """Residual PQ encodes x − c(x): on a store without a trained IVF
+    index it raises ValueError naming train_ann_index."""
+    untrained, _ = serving_stores
+    with pytest.raises(ValueError, match="train_ann_index"):
+        dinc.train_pq_index(spark, untrained, m=4, kk=4, train_every=3,
+                            dims=8, residual=True)
+    assert "pq" not in dinc._read_manifest(untrained)
+
+
+def test_maintain_refuses_unknown_ann_kwargs(spark, serving_stores):
+    """ann_kwargs only supplies custom artifacts (centroids, codebook);
+    any other key is refused up front instead of silently dropped."""
+    _, trained = serving_stores
+    man = dinc._read_manifest(trained)
+    with pytest.raises(ValueError, match="'centroids', 'codebook'"):
+        dinc.maintain_dedup_index(spark, trained, ann_kwargs={"every": 2})
+    assert dinc._read_manifest(trained) == man
+
+
+def test_all_trained_blocks_fold_and_compact(spark, tmp_path):
+    """One store carrying IVF, PQ and SQ8 blocks: a fold with new
+    embeddings and a removal, then a full compaction. Each block's live
+    per-doc rows equal a from-scratch encode of the surviving vectors
+    against the same artifacts, and each manifest block names the
+    compacted snap."""
+    from hadoop_ir_spark.operators import similarity
+
+    old_ids, new_ids = list(range(0, 20)), list(range(20, 26))
+    idx = str(tmp_path / "idx")
+    dinc.build_dedup_index(_docs_for(spark, old_ids), idx,
+                           embeddings=_emb_df(spark, old_ids))
+    dinc.train_ann_index(spark, idx, every=4)
+    dinc.train_pq_index(spark, idx, m=4, kk=4, train_every=3, dims=8)
+    dinc.train_sq_index(spark, idx)
+    man = dinc._read_manifest(idx)
+    arts = {blk: sorted(map(str, dinc._artifact(spark, idx, man, blk)
+                            .collect()))
+            for blk in ("ann", "pq", "sq")}
+    dinc.update_dedup_index(spark, idx, _docs_for(spark, new_ids),
+                            new_embeddings=_emb_df(spark, new_ids),
+                            removed_docs=_docs_for(spark, [5]))
+    dinc.compact_dedup_index(spark, idx, keep_last_snap=False)
+
+    man = dinc._read_manifest(idx)
+    (snap,) = man["snaps"]
+    assert man["ann"]["centroid_snap"] == snap \
+        and man["ann"]["assign_snaps"] == [snap]
+    assert man["pq"]["codebook_snap"] == snap \
+        and man["pq"]["code_snaps"] == [snap]
+    assert man["sq"]["bounds_snap"] == snap \
+        and man["sq"]["code_snaps"] == [snap]
+    for blk in ("ann", "pq", "sq"):
+        assert sorted(map(str, dinc._artifact(spark, idx, man, blk)
+                          .collect())) == arts[blk], blk
+
+    live = dinc.load_dedup_index(spark, idx)
+    surv = _emb_df(spark, [i for i in old_ids + new_ids if i != 5])
+    cents = dinc._artifact(spark, idx, man, "ann")
+    want_assign = similarity.assign_centroids(
+        surv, cents, id_col="docno", vec_col="embedding").select(
+        F.col("vec_id").alias("docno"), "centroid_id")
+    assert sorted(map(tuple, live["ann_assign"].collect())) \
+        == sorted(map(tuple, want_assign.collect()))
+    want_codes = similarity.pq_encode(
+        surv, dinc._artifact(spark, idx, man, "pq"), m=4, id_col="docno",
+        vec_col="embedding", dims=8).select(
+        F.col("vec_id").alias("docno"), "s", "code")
+    assert sorted(map(tuple, live["ann_codes"].collect())) \
+        == sorted(map(tuple, want_codes.collect()))
+    lo, hi, _ = dinc._sq_bound_arrays(dinc._artifact(spark, idx, man, "sq"))
+    want_sq = sorted((r["docno"], tuple(r["codes"]))
+                     for r in dinc._sq_encode_docs(surv, lo, hi).collect())
+    assert sorted((r["docno"], tuple(r["codes"]))
+                  for r in live["sq_codes"].collect()) == want_sq

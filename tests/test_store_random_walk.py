@@ -79,13 +79,13 @@ def _check(spark, tmp_path, idx, corpus, tag, exp_src=None):
         assert got == exp, f"{tag}: table {t} diverged from rebuild"
     man = dinc._read_manifest(idx)
     emb_live = _emb(spark, corpus)
-    cents = dinc._ann_centroid_frame(spark, idx, man)
+    cents = dinc._artifact(spark, idx, man, "ann")
     want_assign = sorted(map(tuple, similarity.assign_centroids(
         emb_live, cents, id_col="docno", vec_col="embedding")
         .select(F.col("vec_id").alias("docno"), "centroid_id").collect()))
     assert sorted(map(tuple, live["ann_assign"].collect())) \
         == want_assign, f"{tag}: ann_assign diverged"
-    cb = dinc._pq_codebook_frame(spark, idx, man)
+    cb = dinc._artifact(spark, idx, man, "pq")
     want_codes = sorted(map(tuple, similarity.pq_encode(
         emb_live, cb, m=man["pq"]["m"], id_col="docno",
         vec_col="embedding", dims=man["pq"]["dims"])

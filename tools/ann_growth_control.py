@@ -105,8 +105,8 @@ def main() -> None:
         t0 = time.time()
         dinc.train_sq_index(spark, idx)
         t_train_sq = time.time() - t0
-        n_cents = dinc._ann_centroid_frame(
-            spark, idx, dinc._read_manifest(idx)).count()
+        n_cents = dinc._artifact(
+            spark, idx, dinc._read_manifest(idx), "ann").count()
 
         def q():
             return dinc.indexed_ann_topk(queries, idx, k=TOP_K,

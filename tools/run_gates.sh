@@ -1,11 +1,13 @@
 #!/usr/bin/env bash
 # Full verification pyramid in one command (see .claude/skills/verify):
 #   1. strict oracle gate at all three SFs (byte-exact vs DuckDB)
-#   2. full pytest (incl. the bare-session driver-contract suite)
+#   2. pytest: full mode runs every test, slow store suites included
+#      (-m "" overrides pytest.ini's fast-profile addopts); quick runs
+#      the fast profile
 #   3. plan audit (0 flags expected)
 #   4. bench (one JSON line; rc must be 0)
 # Usage: bash tools/run_gates.sh [quick]
-#   quick = sf0.01 oracle gate + pytest only (~10 min instead of ~25)
+#   quick = sf0.01 oracle gate + fast-profile pytest only
 set -uo pipefail
 cd "$(dirname "$0")/.."
 rc=0
@@ -20,8 +22,12 @@ if [ "${1:-}" != "quick" ]; then
   run timeout 1500 python tools/check_oracle.py --strict /root/testdata/sf0.001
   run timeout 1500 python tools/check_oracle.py --strict /root/testdata/sf0.1
 fi
-run timeout 3000 python -m pytest tests/ -q   # full suite is ~30 min as of r10
-                                              # (random-walk fuzz added)
+if [ "${1:-}" = "quick" ]; then
+  run timeout 3000 python -m pytest tests/ -q
+else
+  # the full suite took ~1h16m (689 tests) as of r12
+  run timeout 6000 python -m pytest tests/ -q -m ""
+fi
 if [ "${1:-}" != "quick" ]; then
   run timeout 900 python tools/plan_audit.py
   # bench runs each query twice since the r7 min-of-2 change
