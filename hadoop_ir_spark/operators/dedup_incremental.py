@@ -1043,50 +1043,36 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, *,
             if rows is not None:
                 out[CC_LABELS] = _cc_apply_aliases(rows, prefix_amap)
                 new_lsnaps = [sid] + new_lsnaps
-            # persist the retraction evidence the fold-time re-add
-            # guards need (ADVICE r10): this compaction may fold merged
-            # tombstone dirs out of visibility, but a dead doc's id can
-            # keep NAMING the post-compaction store — as a raw label on
+            # persist the retraction evidence this compaction may fold
+            # out of visibility with the merged tombstone dirs (ADVICE
+            # r10): ``dead_names`` — every id with no live doc row that
+            # keeps NAMING the post-compaction store, as a raw label on
             # surviving partner rows (the dead-min deferral) or as a
-            # kept-snap alias key (the alias-side twin). Record every
-            # such name with no live doc row in the cc block; the
-            # guards union it with whatever tombstones remain visible.
-            # Bounded by retracted cluster minima standing since the
-            # last rebuild — build_cc_labels(rebuild=True) clears it.
+            # kept-snap alias key (the alias-side twin), which the
+            # fold-time re-add guards union with the visible tombstones;
+            # ``touched_labels`` — every resolved component a retraction
+            # touched since the label build, so cc_health can still
+            # count and verify a possible split. Both are bounded by the
+            # retractions since the last rebuild, which clears them.
             all_l = [s for s in man["cc"]["label_snaps"]
                      if s in old_snaps]
+            amap = _cc_alias_map(spark, index_dir, all_l)
             allrows = _live_rows_tomb(spark, index_dir, CC_LABELS,
                                       all_l, old_snaps)
-            kept_amap = _cc_alias_map(
-                spark, index_dir,
-                [s for s in man["cc"]["label_snaps"] if s in kept])
-            names = None
-            if allrows is not None:
-                # kept rows never carry a prefix-alias key (rows are
-                # written amap-resolved), so applying the prefix map to
-                # the full union yields exactly the post-compaction raw
-                # label column
-                names = (_cc_apply_aliases(allrows, prefix_amap)
-                         .select(F.col("label").alias("docno"))
-                         .distinct())
-            if kept_amap:
-                kdf = spark.createDataFrame(
-                    [(int(k),) for k in sorted(kept_amap)], "docno long")
-                names = kdf if names is None else (names.unionByName(kdf)
-                                                   .distinct())
-            dead_names: list[int] = []
-            if names is not None:
-                live_ch = _live_rows_tomb(spark, index_dir,
-                                          "content_hashes", old_snaps,
-                                          old_snaps)
-                if live_ch is not None:
-                    names = names.join(
-                        live_ch.select("docno").distinct(), "docno",
-                        "anti")
-                dead_names = sorted(
-                    r["docno"] for r in names.collect())
+            # kept rows never carry a prefix-alias key (rows are written
+            # amap-resolved), so applying the prefix map to the full
+            # union yields exactly the post-compaction raw label column;
+            # a label is aliased at most once, so the kept keys are the
+            # rest of the full map's
+            dead_names = _cc_dead_names(
+                spark, None if allrows is None
+                else _cc_apply_aliases(allrows, prefix_amap),
+                set(amap) - set(prefix_amap),
+                _live_rows(spark, index_dir, "content_hashes", old_snaps))
+            _, touched = _cc_touched(spark, index_dir, man, old_snaps,
+                                     all_l, amap)
             new_cc = {**new_cc, "label_snaps": new_lsnaps,
-                      "dead_names": dead_names}
+                      "dead_names": dead_names, "touched_labels": touched}
         for t, df in out.items():
             if df is None:
                 continue
@@ -2185,37 +2171,143 @@ def _cc_verified(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
             .select(F.col(a_col).alias("a"), F.col(b_col).alias("b")))
 
 
+def _cc_alias_log(spark: SparkSession, index_dir: str, snaps: list[int]
+                  ) -> tuple[int, dict[int, tuple[int, int]]]:
+    """The label-merge log over ``snaps``: its row count and every
+    chain resolved, later snaps winning, to from → (final label, chain
+    depth). Collected to the driver: one alias per component MERGE
+    event — takedown-sized by construction (and strictly decreasing,
+    ``to < from``, so chains cannot cycle)."""
+    rows = _union_snaps(spark, index_dir, CC_ALIAS, snaps)
+    pairs = (sorted((r["_snap"], r["from_label"], r["to_label"])
+                    for r in rows.collect()) if rows is not None else [])
+    m = {f: t for _, f, t in pairs}
+
+    def _res(x: int) -> tuple[int, int]:
+        d = 0
+        while x in m:
+            x, d = m[x], d + 1
+        return x, d
+    return len(pairs), {f: _res(f) for f in m}
+
+
 def _cc_alias_map(spark: SparkSession, index_dir: str,
                   snaps: list[int]) -> dict[int, int]:
-    """The label-merge log over ``snaps``, chains resolved to a flat
-    from→final dict. Collected to the driver: one alias per component
-    MERGE event — takedown-sized by construction (and strictly
-    decreasing, ``to < from``, so chains cannot cycle)."""
-    rows = _union_snaps(spark, index_dir, CC_ALIAS, snaps)
-    if rows is None:
-        return {}
-    pairs = sorted((r["_snap"], r["from_label"], r["to_label"])
-                   for r in rows.collect())
-    m: dict[int, int] = {}
-    for _, f, t in pairs:
-        m[f] = t
-    def _res(x: int) -> int:
-        while x in m:
-            x = m[x]
-        return x
-    return {f: _res(f) for f in m}
+    """The label-merge log over ``snaps`` as a flat from→final dict."""
+    return {f: t for f, (t, _) in
+            _cc_alias_log(spark, index_dir, snaps)[1].items()}
 
 
-def _cc_apply_aliases(rows: DataFrame, amap: dict[int, int]) -> DataFrame:
+def _cc_apply_aliases(rows: DataFrame, amap: dict[int, int],
+                      col: str = "label") -> DataFrame:
+    """Re-point ``rows[col]`` through the flat alias map (one broadcast
+    join); the other columns pass through."""
     if not amap:
         return rows
-    spark = rows.sparkSession
-    adf = spark.createDataFrame(sorted(amap.items()),
-                                "from_label long, to_label long")
-    return (rows.join(F.broadcast(adf),
-                      rows["label"] == adf["from_label"], "left")
-            .select("docno",
-                    F.coalesce("to_label", "label").alias("label")))
+    adf = rows.sparkSession.createDataFrame(sorted(amap.items()),
+                                            "from_label long, to_label long")
+    return (rows.join(F.broadcast(adf), rows[col] == adf["from_label"],
+                      "left")
+            .select(*[F.coalesce("to_label", c).alias(c) if c == col
+                      else c for c in rows.columns]))
+
+
+def _cc_pair_tables(spark: SparkSession, index_dir: str,
+                    snaps: list[int]) -> list[DataFrame]:
+    """The live (content_hashes, band_keys, shingles) the pair rule
+    reads."""
+    tabs = [_live_rows(spark, index_dir, t, snaps)
+            for t in ("content_hashes", "band_keys", "shingles")]
+    if any(t is None for t in tabs):
+        raise FileNotFoundError(
+            f"dedup index at {index_dir} has no visible fingerprint "
+            f"data for snaps {snaps}")
+    return tabs
+
+
+def _cc_edges(ch: DataFrame, bk: DataFrame, sh: DataFrame, tau: float,
+              members: DataFrame | None = None) -> DataFrame:
+    """The cc pair rule as distinct (a, b) edges: exact content-hash
+    star edges (every doc → its hash group's min) plus banded-LSH
+    candidates verified by exact shingle Jaccard >= ``tau``. With
+    ``members`` (a docno column) every input is first pruned to those
+    docs by equi-join, so the edges stay within the member set."""
+    if members is not None:
+        ids = members.select("docno")
+        ch, bk = ch.join(ids, "docno"), bk.join(ids, "docno")
+    wmin = Window.partitionBy("content_hash")
+    ex = (ch.withColumn("_m", F.min("docno").over(wmin))
+          .filter(F.col("docno") > F.col("_m"))
+          .select(F.col("_m").alias("a"), F.col("docno").alias("b")))
+    cand = dedup.lsh_candidates_from_keys(bk)      # (docno_a < docno_b)
+    cand_ids = (cand.select(F.col("docno_a").alias("docno"))
+                .unionByName(cand.select(F.col("docno_b").alias("docno")))
+                .distinct())
+    sets = (sh.join(cand_ids, "docno")
+            .groupBy("docno").agg(F.collect_set("shingle").alias("s"))
+            .localCheckpoint())
+    near = _cc_verified(cand, sets, sets, "docno_a", "docno_b", tau)
+    return ex.unionByName(near).distinct()
+
+
+def _cc_split_counts(members: DataFrame, edges: DataFrame) -> DataFrame:
+    """(label, n_members, n_subcomponents) of ``members`` (docno, label):
+    star connected components over ``edges``; a member with no edge is
+    its own subcomponent."""
+    comp = dedup.connected_components(edges, "a", "b", algorithm="star")
+    sub = (members.join(comp.select(F.col("node").alias("docno"),
+                                    "cluster_id"), "docno", "left")
+           .select("label", F.coalesce("cluster_id", F.col("docno"))
+                   .alias("_sub")))
+    return (sub.groupBy("label")
+            .agg(F.count(F.lit(1)).alias("n_members"),
+                 F.countDistinct("_sub").alias("n_subcomponents")))
+
+
+def _cc_touched(spark: SparkSession, index_dir: str, man: dict,
+                vis: list[int], lsnaps: list[int], amap: dict[int, int]
+                ) -> tuple[DataFrame | None, list[int]]:
+    """Retraction evidence since the standing label build, as (rows,
+    labels). ``rows``: (docno, label) of the label-carrying docs with a
+    visible tombstone at/after the first label snap in LIST order (the
+    list is logical time), labels resolved; None when there are none.
+    ``labels``: the sorted resolved labels those rows name, plus the cc
+    block's ``touched_labels`` — the evidence of tombstones a compaction
+    folded away — resolved through ``amap``."""
+    order = {s: i for i, s in enumerate(man["snaps"])}
+    base = order.get(lsnaps[0], 0) if lsnaps else 0
+    tomb = _union_snaps(spark, index_dir, TOMBSTONES,
+                        [s for s in vis if order.get(s, -1) >= base])
+    raw = (_union_snaps(spark, index_dir, CC_LABELS, lsnaps)
+           if tomb is not None else None)
+    labels = {amap.get(x, x) for x in man["cc"].get("touched_labels") or []}
+    if raw is None:
+        return None, sorted(labels)
+    rows = _cc_apply_aliases(
+        raw.drop("_snap").join(tomb.select("docno").distinct(), "docno"),
+        amap)
+    labels.update(r["label"] for r in
+                  rows.select("label").distinct().collect())
+    return rows, sorted(labels)
+
+
+def _cc_dead_names(spark: SparkSession, labels: DataFrame | None,
+                   keys: set[int], live: DataFrame | None) -> list[int]:
+    """The sorted ids that name a standing component — a value of
+    ``labels``' label column, or one of ``keys`` — yet have no live doc
+    row in ``live``. Each is a standing re-add hazard."""
+    names = (labels.select(F.col("label").alias("docno"))
+             if labels is not None else None)
+    if keys:
+        kdf = spark.createDataFrame([(int(k),) for k in sorted(keys)],
+                                    "docno long")
+        names = kdf if names is None else names.unionByName(kdf)
+    if names is None:
+        return []
+    names = names.distinct()
+    if live is not None:
+        names = names.join(live.select("docno").distinct(), "docno", "anti")
+    return sorted(r["docno"] for r in names.collect())
 
 
 def build_cc_labels(spark: SparkSession, index_dir: str, *,
@@ -2247,37 +2339,21 @@ def build_cc_labels(spark: SparkSession, index_dir: str, *,
     an alias key) and fails loudly, naming ``rebuild=True`` as the
     repair — see ``_cc_fold_frames``. ``cc_health`` reports the
     accumulated deferral damage (alias-log size and chain depth,
-    standing dead names, components touched by retraction) and
-    recommends none/compact/rebuild, so the elective pass is scheduled
-    on data instead of guesswork."""
+    standing dead names, components touched by retraction — including
+    those a compaction recorded as ``touched_labels`` when it folded
+    their tombstones away) and recommends none/compact/rebuild, so the
+    elective pass is scheduled on data instead of guesswork. The
+    rebuild writes a fresh cc block, which clears both ``dead_names``
+    and ``touched_labels``."""
     man = _read_manifest(index_dir)
     if man.get("cc") and not rebuild:
         raise ValueError(
             f"dedup index at {index_dir} already has cc labels "
             f"(label_snaps={man['cc']['label_snaps']}) — pass "
             f"rebuild=True for the elective repair/rebuild pass")
-    snaps = man["snaps"]
-    ch = _live_rows(spark, index_dir, "content_hashes", snaps)
-    bk = _live_rows(spark, index_dir, "band_keys", snaps)
-    sh = _live_rows(spark, index_dir, "shingles", snaps)
-    if ch is None or bk is None or sh is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible fingerprint data")
-    # exact components as star edges: every doc → its hash group's min
-    wmin = Window.partitionBy("content_hash")
-    ex = (ch.withColumn("_m", F.min("docno").over(wmin))
-          .filter(F.col("docno") > F.col("_m"))
-          .select(F.col("_m").alias("a"), F.col("docno").alias("b")))
-    cand = dedup.lsh_candidates_from_keys(bk)      # (docno_a < docno_b)
-    cand_ids = (cand.select(F.col("docno_a").alias("docno"))
-                .unionByName(cand.select(F.col("docno_b").alias("docno")))
-                .distinct())
-    sets = (sh.join(cand_ids, "docno")
-            .groupBy("docno").agg(F.collect_set("shingle").alias("s"))
-            .localCheckpoint())
-    near = _cc_verified(cand, sets, sets, "docno_a", "docno_b", tau)
     comp = dedup.connected_components(
-        ex.unionByName(near).distinct(), "a", "b", algorithm="star")
+        _cc_edges(*_cc_pair_tables(spark, index_dir, man["snaps"]), tau),
+        "a", "b", algorithm="star")
     sid = man["next_snap"]
     att = _SnapAttempt(index_dir, sid)
     try:
@@ -2441,13 +2517,8 @@ def _cc_fold_frames(spark: SparkSession, index_dir: str, man: dict,
         singles = (joined.filter(F.col("label").isNull())
                    .select("a").distinct())
         e_no = joined.select(F.coalesce("label", "a").alias("a"), "b")
-    if amap:
-        adf = spark.createDataFrame(sorted(amap.items()),
-                                    "from_label long, to_label long")
-        e_no = (e_no.join(F.broadcast(adf),
-                          e_no["a"] == adf["from_label"], "left")
-                .select(F.coalesce("to_label", "a").alias("a"), "b"))
-    edges = (ex_nn.unionByName(near_nn).unionByName(e_no)
+    edges = (ex_nn.unionByName(near_nn)
+             .unionByName(_cc_apply_aliases(e_no, amap, "a"))
              .distinct().localCheckpoint())
 
     comp = dedup.connected_components(edges, "a", "b", algorithm="star")
@@ -2538,7 +2609,9 @@ def maintain_dedup_index(spark: SparkSession, index_dir: str, *,
     return value). Actions, in dependency order:
 
     - ``cc rebuild`` (``build_cc_labels(rebuild=True)``) when cc_health
-      recommends it — standing re-add hazards or possible splits;
+      recommends it — standing re-add hazards or possible splits (the
+      components retractions touched since the label build, compacted
+      tombstones included);
     - ``retrain`` (``train_ann_index``/``train_pq_index``/
       ``train_sq_index`` with ``retrain=True``, re-using each block's
       recorded train params) when ann_health recommends it;
@@ -2798,11 +2871,14 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
       ``rebuild=True`` retires them;
     - ``n_retracted_members`` / ``n_components_touched`` — visible
       tombstoned docnos that had a label row, and the distinct
-      (resolved) components they were removed from: the upper bound on
-      deferred SPLIT damage (a removal can disconnect a component; the
-      merged label survives until rebuild). Visible-only: tombstones a
-      compaction folded away are carried as ``dead_names`` when they
-      still name rows, and are genuinely repaired-or-moot otherwise;
+      (resolved) components retractions touched since the label build:
+      the upper bound on deferred SPLIT damage (a removal can disconnect
+      a component; the merged label survives until rebuild).
+      ``n_retracted_members`` counts visible tombstones only;
+      ``n_components_touched`` also counts the cc block's
+      ``touched_labels``, the components whose tombstones a compaction
+      folded away (resolved through the current alias log), so a
+      compaction never hides a standing split;
     - ``recommendation`` — ``rebuild`` when re-add hazards stand (any
       ``n_dead_names`` — the hard trigger) or possible splits reach
       ``touched_rebuild_threshold`` (default 1 — maximally cautious;
@@ -2814,9 +2890,10 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
     ``verify_splits=True`` (r12, the precise form of the ADVICE r11
     gate) replaces the upper bound with a bounded EXACT check: each
     touched component's live members are re-connected under the same
-    pair rule as the standing build (exact content-hash partners +
-    banded-LSH candidates verified at the cc tau, all pruned equi-joins
-    on the index's own tables), and ``n_components_split`` counts the
+    pair rule as the standing build (``_cc_edges``: exact content-hash
+    partners + banded-LSH candidates verified at the cc tau, all pruned
+    equi-joins on the index's own tables) with the same star CC as
+    ``cc_split_report``, and ``n_components_split`` counts the
     components whose members genuinely fall apart — a verified split is
     a hard rebuild trigger (real conflation stands), while a touched-
     but-still-connected component costs nothing. Components larger than
@@ -2824,7 +2901,7 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
     and count against ``touched_rebuild_threshold`` conservatively. A
     component reduced to <= 1 live member is dissolved, not split (no
     conflation; rebuild would merely sweep the stale singleton row).
-    Cost: takedown-sized — member fetch and driver-side union-find are
+    Cost: takedown-sized — the member fetch and the CC pass are
     bounded by touched x max_verify_members.
 
     Cost: the alias collect is merge-event-sized, everything else is a
@@ -2838,24 +2915,9 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
             f"build_cc_labels first")
     vis = _visible_snaps(index_dir, snaps)
     lsnaps = [s for s in man["cc"]["label_snaps"] if s in vis]
-    dead_names = list(man["cc"].get("dead_names") or [])
-
-    araw = _union_snaps(spark, index_dir, CC_ALIAS, lsnaps)
-    pairs = (sorted((r["_snap"], r["from_label"], r["to_label"])
-                    for r in araw.collect()) if araw is not None else [])
-    chain: dict[int, int] = {}
-    for _, f, t in pairs:
-        chain[f] = t
-
-    def _depth(x: int) -> int:
-        d = 0
-        while x in chain:
-            x = chain[x]
-            d += 1
-        return d
-
-    max_alias_chain = max((_depth(f) for f in chain), default=0)
-    amap = _cc_alias_map(spark, index_dir, lsnaps)
+    n_aliases, log = _cc_alias_log(spark, index_dir, lsnaps)
+    amap = {f: t for f, (t, _) in log.items()}
+    max_alias_chain = max((d for _, d in log.values()), default=0)
 
     rows = _live_rows_tomb(spark, index_dir, CC_LABELS, lsnaps, vis)
     n_label_rows = n_components = 0
@@ -2866,117 +2928,42 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
         n_components = resolved.select("label").distinct().count()
 
     live = _live_rows(spark, index_dir, "content_hashes", vis)
-    names = (resolved.select(F.col("label").alias("docno")).distinct()
-             if resolved is not None else None)
-    extra = sorted(set(dead_names) | set(amap))
-    if extra:
-        edf = spark.createDataFrame([(int(x),) for x in extra],
-                                    "docno long")
-        names = edf if names is None else (names.unionByName(edf)
-                                           .distinct())
-    n_dead_names = 0
-    if names is not None:
-        if live is not None:
-            names = names.join(live.select("docno").distinct(), "docno",
-                               "anti")
-        n_dead_names = names.count()
-
-    # retraction damage since the standing build: tombstones at/after
-    # the first label snap in LIST order (the list is logical time)
-    order = {s: i for i, s in enumerate(man["snaps"])}
-    base = order.get(lsnaps[0], 0) if lsnaps else 0
-    tsnaps = [s for s in vis if order.get(s, -1) >= base]
-    tomb = _union_snaps(spark, index_dir, TOMBSTONES, tsnaps)
-    n_retracted_members = n_components_touched = 0
-    touched_lab = None
-    if tomb is not None:
-        raw = _union_snaps(spark, index_dir, CC_LABELS, lsnaps)
-        if raw is not None:
-            hitrows = (raw.drop("_snap")
-                       .join(tomb.select("docno").distinct(), "docno"))
-            n_retracted_members = hitrows.select("docno").distinct().count()
-            touched_lab = (_cc_apply_aliases(hitrows, amap)
-                           .select("label").distinct())
-            n_components_touched = touched_lab.count()
+    n_dead_names = len(_cc_dead_names(
+        spark, resolved, set(man["cc"].get("dead_names") or []) | set(amap),
+        live))
+    hit, touched = _cc_touched(spark, index_dir, man, vis, lsnaps, amap)
+    n_retracted_members = (hit.select("docno").distinct().count()
+                           if hit is not None else 0)
+    n_components_touched = len(touched)
 
     # bounded SPLIT VERIFICATION (r12, ADVICE r11: n_components_touched
     # only upper-bounds actual split damage — a retraction need not
-    # disconnect its component): recheck connectivity of each touched
-    # component's LIVE members under the SAME pair rule as the standing
-    # build (exact content-hash partners + banded-LSH candidates
-    # verified at the cc block's tau, all from the index's own tables,
-    # pruned equi-joins on the member docnos). Components larger than
-    # max_verify_members are left unverified (counted conservatively).
-    # A component reduced to <= 1 live member is dissolved, not split —
-    # no conflation stands (rebuild would also sweep the stale
-    # singleton row, a cosmetic difference). Cost: takedown-sized — the
-    # driver-side union-find sees at most
-    # touched x max_verify_members rows.
+    # disconnect its component): re-connect each touched component's
+    # LIVE members under the standing build's pair rule (``_cc_edges``
+    # pruned to the members) and count the subcomponents
+    # (``_cc_split_counts``). Components larger than max_verify_members
+    # are left unverified (counted conservatively); one reduced to <= 1
+    # live member is dissolved, not split — no conflation stands.
     n_components_split = n_components_unverified = None
-    if verify_splits and n_components_touched and resolved is not None:
-        members = (resolved.join(touched_lab, "label")
-                   .select("docno", "label"))
-        msizes = members.groupBy("label").agg(F.count("*").alias("_n"))
-        n_components_unverified = msizes.filter(
-            F.col("_n") > max_verify_members).count()
-        ok_lab = msizes.filter((F.col("_n") <= max_verify_members)
-                               & (F.col("_n") >= 2)).select("label")
-        mem = members.join(ok_lab, "label").localCheckpoint()
+    if verify_splits and touched and resolved is not None:
+        tdf = spark.createDataFrame([(x,) for x in touched], "label long")
+        sizes = (resolved.join(F.broadcast(tdf), "label").groupBy("label")
+                 .agg(F.count("*").alias("_n")).collect())
+        n_components_unverified = sum(
+            1 for r in sizes if r["_n"] > max_verify_members)
+        ok = [(r["label"],) for r in sizes
+              if 2 <= r["_n"] <= max_verify_members]
         n_components_split = 0
-        if mem.limit(1).count():
-            ch_m = _live_rows(spark, index_dir, "content_hashes", vis)
-            bk_m = _live_rows(spark, index_dir, "band_keys", vis)
-            sh_m = _live_rows(spark, index_dir, "shingles", vis)
-            edge_frames = []
-            if ch_m is not None:
-                wmin = Window.partitionBy("label", "content_hash")
-                edge_frames.append(
-                    ch_m.join(mem, "docno")
-                    .withColumn("_m", F.min("docno").over(wmin))
-                    .filter(F.col("docno") > F.col("_m"))
-                    .select(F.col("_m").alias("a"),
-                            F.col("docno").alias("b")))
-            if bk_m is not None and sh_m is not None:
-                cand = dedup.lsh_candidates_from_keys(
-                    bk_m.join(mem.select("docno"), "docno"))
-                cand_ids = (cand.select(F.col("docno_a").alias("docno"))
-                            .unionByName(cand.select(
-                                F.col("docno_b").alias("docno")))
-                            .distinct())
-                sets = (sh_m.join(cand_ids, "docno")
-                        .groupBy("docno")
-                        .agg(F.collect_set("shingle").alias("s"))
-                        .localCheckpoint())
-                edge_frames.append(_cc_verified(
-                    cand, sets, sets, "docno_a", "docno_b",
-                    man["cc"]["tau"]))
-            edges = []
-            if edge_frames:
-                ef = edge_frames[0]
-                for other in edge_frames[1:]:
-                    ef = ef.unionByName(other)
-                edges = [(r["a"], r["b"]) for r in
-                         ef.distinct().collect()]
-            mem_rows = [(r["docno"], r["label"])
-                        for r in mem.collect()]
-            parent = {d: d for d, _ in mem_rows}
-
-            def _find(x: int) -> int:
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in edges:
-                if a in parent and b in parent:
-                    ra, rb = _find(a), _find(b)
-                    if ra != rb:
-                        parent[ra] = rb
-            groups: dict[int, set] = {}
-            for d, lab in mem_rows:
-                groups.setdefault(lab, set()).add(_find(d))
-            n_components_split = sum(
-                1 for g in groups.values() if len(g) > 1)
+        if ok:
+            mem = resolved.join(F.broadcast(spark.createDataFrame(
+                ok, "label long")), "label").localCheckpoint()
+            edges = _cc_edges(
+                live, _live_rows(spark, index_dir, "band_keys", vis),
+                _live_rows(spark, index_dir, "shingles", vis),
+                man["cc"]["tau"], members=mem)
+            n_components_split = (_cc_split_counts(mem, edges)
+                                  .filter(F.col("n_subcomponents") > 1)
+                                  .count())
 
     # n_dead_names is the HARD rebuild trigger (standing re-add hazards
     # fail folds loudly until retired); n_components_touched is only an
@@ -2995,7 +2982,7 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
         bound = n_components_touched
     if hard or bound >= max(1, touched_rebuild_threshold):
         recommendation = "rebuild"
-    elif (len(chain) >= alias_compact_threshold
+    elif (len(log) >= alias_compact_threshold
           or max_alias_chain >= chain_compact_threshold
           or len(vis) >= snap_compact_threshold):
         recommendation = "compact"
@@ -3004,7 +2991,7 @@ def cc_health(spark: SparkSession, index_dir: str, *, snaps=None,
     return {
         "n_label_rows": n_label_rows,
         "n_components": n_components,
-        "n_aliases": len(pairs),
+        "n_aliases": n_aliases,
         "max_alias_chain": max_alias_chain,
         "n_dead_names": n_dead_names,
         "n_retracted_members": n_retracted_members,
@@ -3031,9 +3018,10 @@ def cc_split_report(spark: SparkSession, index_dir: str, *,
     is touched-but-intact; ``n_members == 1`` is a dissolved
     near-singleton (no conflation; rebuild would sweep the stale row).
 
-    This is the distributed, corpus-proportional AUDIT twin of
-    ``cc_health(verify_splits=True)``'s takedown-bounded driver check:
-    one CC pass over the within-component edge graph (edges never cross
+    This is the corpus-proportional AUDIT twin of
+    ``cc_health(verify_splits=True)``, which runs the same edge
+    derivation and CC pass over the touched components only: one CC
+    pass over the within-component edge graph (edges never cross
     standing components — the standing labels are closed over the pair
     rule), run it when the split inventory itself is the deliverable.
     The weekly canary stays bounded. The DuckDB oracle
@@ -3052,37 +3040,9 @@ def cc_split_report(spark: SparkSession, index_dir: str, *,
     vis = _visible_snaps(index_dir, snaps)
     members = (cc_labels_frame(spark, index_dir, snaps)
                .select("docno", "label").localCheckpoint())
-    ch = _live_rows(spark, index_dir, "content_hashes", vis)
-    bk = _live_rows(spark, index_dir, "band_keys", vis)
-    sh = _live_rows(spark, index_dir, "shingles", vis)
-    if ch is None or bk is None or sh is None:
-        raise FileNotFoundError(
-            f"dedup index at {index_dir} has no visible fingerprint "
-            f"data for snaps {vis}")
-    wmin = Window.partitionBy("content_hash")
-    ex = (ch.join(members.select("docno"), "docno")
-          .withColumn("_m", F.min("docno").over(wmin))
-          .filter(F.col("docno") > F.col("_m"))
-          .select(F.col("_m").alias("a"), F.col("docno").alias("b")))
-    cand = dedup.lsh_candidates_from_keys(
-        bk.join(members.select("docno"), "docno"))
-    cand_ids = (cand.select(F.col("docno_a").alias("docno"))
-                .unionByName(cand.select(F.col("docno_b").alias("docno")))
-                .distinct())
-    sets = (sh.join(cand_ids, "docno")
-            .groupBy("docno").agg(F.collect_set("shingle").alias("s"))
-            .localCheckpoint())
-    near = _cc_verified(cand, sets, sets, "docno_a", "docno_b",
-                        man["cc"]["tau"])
-    comp = dedup.connected_components(
-        ex.unionByName(near).distinct(), "a", "b", algorithm="star")
-    sub = (members.join(comp.select(F.col("node").alias("docno"),
-                                    "cluster_id"), "docno", "left")
-           .select("label", F.coalesce("cluster_id", F.col("docno"))
-                   .alias("_sub")))
-    return (sub.groupBy("label")
-            .agg(F.count(F.lit(1)).alias("n_members"),
-                 F.countDistinct("_sub").alias("n_subcomponents")))
+    edges = _cc_edges(*_cc_pair_tables(spark, index_dir, vis),
+                      man["cc"]["tau"], members=members)
+    return _cc_split_counts(members, edges)
 
 
 def incremental_winnow_pairs(new_docs: DataFrame, index_dir: str, *,

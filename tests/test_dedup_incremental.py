@@ -2505,6 +2505,41 @@ def test_cc_health_verify_splits(spark, tmp_path):
     assert rep == {1: (2, 2), 10: (2, 1)}
 
 
+def test_cc_compaction_keeps_split_evidence(spark, tmp_path):
+    """A compaction folds tombstone dirs out of visibility, but the
+    split a retraction caused still stands (the merged label keeps
+    conflating the parts until a rebuild). The cc block persists the
+    touched labels, so cc_health keeps counting and verifying the
+    component and maintain_dedup_index still pays the rebuild."""
+    ws = [f"tok{i}" for i in range(70)]
+    A, B, C = (" ".join(ws[j:60 + j]) for j in (0, 3, 6))
+    c = "completely separate content " + " ".join(
+        f"x{i}" for i in range(30))
+    idx = str(tmp_path / "idx")
+    dinc.build_dedup_index(
+        _df(spark, [(1, A), (2, B), (3, C), (10, c), (11, c)]), idx)
+    dinc.build_cc_labels(spark, idx, tau=0.9)
+    dinc.update_dedup_index(spark, idx, removed_docs=_df(spark, [(2, B)]))
+    dinc.compact_dedup_index(spark, idx)
+    assert not any(
+        (tmp_path / "idx" / dinc.TOMBSTONES / f"snap={s}").is_dir()
+        for s in dinc._read_manifest(idx)["snaps"])
+
+    h = dinc.cc_health(spark, idx)
+    assert h["n_components_touched"] == 1
+    assert h["recommendation"] == "rebuild"
+    h = dinc.cc_health(spark, idx, verify_splits=True)
+    assert h["n_components_split"] == 1
+    rep = {r["label"]: (r["n_members"], r["n_subcomponents"])
+           for r in dinc.cc_split_report(spark, idx).collect()}
+    assert rep == {1: (2, 2), 10: (2, 1)}
+
+    out = dinc.maintain_dedup_index(spark, idx, compact=False)
+    assert out["actions"] == ["cc_rebuild"]
+    assert not dinc._read_manifest(idx)["cc"].get("touched_labels")
+    assert dinc.cc_health(spark, idx)["n_components_touched"] == 0
+
+
 @pytest.mark.slow
 def test_maintain_loses_race_loudly_and_retries_clean(spark, tmp_path,
                                                       monkeypatch):

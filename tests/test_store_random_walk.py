@@ -178,6 +178,8 @@ def test_cc_random_walk_fold_equality(spark, tmp_path, seed):
             before = sorted(map(tuple,
                                 dinc.cc_labels_frame(spark, idx)
                                 .collect()))
+            touched = (None if clean else
+                       dinc.cc_health(spark, idx)["n_components_touched"])
             dinc.compact_dedup_index(
                 spark, idx, keep_last_snap=rng.random() < 0.5)
             after = sorted(map(tuple,
@@ -185,6 +187,12 @@ def test_cc_random_walk_fold_equality(spark, tmp_path, seed):
                                .collect()))
             assert after == before, \
                 f"seed {seed} step {step}: compaction changed the view"
+            # compaction keeps the retraction evidence: a component a
+            # retraction touched stays touched until the rebuild
+            if touched is not None:
+                assert dinc.cc_health(spark, idx)[
+                    "n_components_touched"] >= touched, \
+                    f"seed {seed} step {step}: compaction lost evidence"
         # the deferral window persists until an ELECTIVE rebuild (so
         # later re-adds can actually hit the dead-min guard above);
         # equality to from-scratch is only claimed — and checked — in
@@ -207,6 +215,12 @@ def test_cc_random_walk_fold_equality(spark, tmp_path, seed):
             assert h["n_components_touched"] == 0, \
                 f"seed {seed} step {step}"
             assert h["recommendation"] in ("none", "compact")
+    # only touched components can split: the bounded verify over the
+    # touched set finds every split the full audit finds
+    n_split = sum(1 for r in dinc.cc_split_report(spark, idx).collect()
+                  if r["n_subcomponents"] > 1)
+    h = dinc.cc_health(spark, idx, verify_splits=True)
+    assert (h["n_components_split"] or 0) == n_split, f"seed {seed}"
 
 
 @pytest.mark.parametrize("seed", [11, 23, 47])

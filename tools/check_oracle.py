@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -194,7 +195,14 @@ PINNED_JUDGE_VERIFIED = sorted({
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # capped so the heaviest oracles spill instead of taking most of a
+    # shared host's memory (DuckDB defaults to ~80% of RAM, every core,
+    # and a spill dir in the working directory); the cap changes memory
+    # use, never results
+    con = duckdb.connect(config={
+        "memory_limit": "2GB", "threads": 2,
+        "temp_directory": os.path.join(tempfile.gettempdir(),
+                                       "check_oracle_duckdb")})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
