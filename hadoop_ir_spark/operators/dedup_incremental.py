@@ -130,9 +130,9 @@ buckets, and the shuffle carries band keys, a few dozen rows per doc —
 (b) the shingle fetch for VERIFICATION, an equi-join on the candidate
 old docnos, and (c) the seed-gram log join on the snapshot's gram set.
 Nothing rescans, re-tokenizes or re-signs the old corpus, and the
-weekly fold-in writes only delta-sized files
-(tools/incremental_growth_control.py times both halves at 10x standing
-corpus).
+weekly fold-in writes only delta-sized files (both halves timed at 10x
+standing corpus in SCALING.md by tools/incremental_growth_control.py,
+since deleted; last version at commit bdbcd5c).
 """
 
 from __future__ import annotations

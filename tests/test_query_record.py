@@ -1,0 +1,83 @@
+"""The per-query record (tools/query_record.py) and the job-group
+inheritance its build span depends on."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools"))
+
+import query_record  # noqa: E402
+
+
+def test_parallel_frames_jobs_stay_in_callers_group(spark):
+    from hadoop_ir_spark.catalog import parallel_frames
+
+    sc = spark.sparkContext
+    group = "test-parallel-frames"
+    sc.setJobGroup(group, "parallel_frames")
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        a = spark.range(10)
+        b = spark.range(20)
+        assert parallel_frames(a.count, b.count) == [10, 20]
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after >= before + 2
+
+
+FINAL_PLAN = """\
+OverwriteByExpression (12)
++- AdaptiveSparkPlan (11)
+   +- == Final Plan ==
+      ResultQueryStage (10)
+      +- * Project (9)
+         +- * BroadcastHashJoin Inner BuildRight (8)
+            :- * SortMergeJoin Inner (5)
+            :  :- ShuffleQueryStage (2)
+            :  :  +- Exchange (1)
+            :  +- ShuffleQueryStage (4)
+            :     +- Exchange (3)
+            +- BroadcastQueryStage (7)
+               +- BroadcastExchange (6)
+                  +- BroadcastNestedLoopJoin (13)
+                     :- ArrowEvalPython (14)
+                     +- CartesianProduct (15)
+                        +- BatchEvalPython (16)
+                           +- WindowGroupLimit (17)
+   +- == Initial Plan ==
+      Project (21)
+      +- SortMergeJoin Inner (20)
+         :- Exchange (19)
+         +- CartesianProduct (18)
+
+(11) AdaptiveSparkPlan
+Arguments: isFinalPlan=true
+"""
+
+
+def test_digest_counts_final_plan_operators():
+    d = query_record.digest(FINAL_PLAN)
+    assert d == {"final": True, "exch": 2, "bhj": 1, "smj": 1, "bnlj": 1,
+                 "cart": 1, "py": 2, "topk_limit": True}
+    assert query_record.digest("Exchange (1)\nisFinalPlan=false\n")[
+        "final"] is False
+
+
+def test_live_record_eval_map_pk(spark, sf_dir):
+    from perfbench.trace import Tracer
+
+    rec, plan = query_record.record(spark, Tracer(spark.sparkContext),
+                                    "eval_map_pk", sf_dir)
+    assert rec["name"] == "eval_map_pk"
+    assert "isFinalPlan=true" in plan
+    assert rec["plan"]["final"] is True
+    assert rec["build"]["jobs"] > 0
+    assert rec["execute"]["jobs"] > 0
+    assert set(rec) == {"name", "build", "optimize", "execute", "plan"}
+    for layer in ("build", "optimize", "execute"):
+        assert set(rec[layer]) == set(query_record.FIELDS)
