@@ -42,13 +42,13 @@ one-in-1e5 gate flake.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import Window, functions as F
 
+# stores go through catalog.memo_store, looked up at call time so that a
+# tracer can wrap it (tools/query_record.py)
+from hadoop_ir_spark import catalog
 from hadoop_ir_spark.catalog import ORACLES, QUERIES, _docs, register
 from hadoop_ir_spark.operators import dedup_incremental as dinc
 
@@ -56,9 +56,6 @@ INC_TAU = 0.9          # same threshold as dedup_minhash_lsh
 INC_SPAN_LEN = 8       # same L as exact_dup_spans
 _INJECT_OFFSET = 10_000_000
 
-_TMPROOT = tempfile.mkdtemp(prefix="hadoop_ir_spark_dedupidx_")
-atexit.register(shutil.rmtree, _TMPROOT, ignore_errors=True)
-_IDX_CACHE: dict[str, str] = {}
 _OFFSET_OK: set[str] = set()
 
 
@@ -104,16 +101,14 @@ def _dedup_index_dir(spark, sf_dir: str) -> str:
     the pipeline's standing artifact, built once, queried per snapshot.
     The old-side embeddings (vec_id % 3 <> 0) persist alongside the
     text fingerprints (VERDICT r8 #3)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _IDX_CACHE:
+    def build(out):
         _assert_offset(spark, sf_dir)
-        out = os.path.join(_TMPROOT, key.strip("/").replace("/", "_"))
         old_emb = _emb(spark, sf_dir).filter(F.col("vec_id") % 3 != 0)
         dinc.build_dedup_index(_old_docs(spark, sf_dir), out,
                                min_len=INC_SPAN_LEN, id_col="doc_id",
                                embeddings=old_emb, emb_id_col="vec_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
+        return out
+    return catalog.memo_store(sf_dir, "dedup", build)
 
 
 def _folded_index_dir(spark, sf_dir: str) -> str:
@@ -121,19 +116,16 @@ def _folded_index_dir(spark, sf_dir: str) -> str:
     build on the first half (doc_id % 3 = 1), then FOLD the second half
     (doc_id % 3 = 2) in with the O(snapshot) ``update_dedup_index`` —
     queries against it must answer exactly like the one-shot build."""
-    key = os.path.abspath(sf_dir) + "#folded"
-    if key not in _IDX_CACHE:
+    def build(out):
         _assert_offset(spark, sf_dir)
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
         docs = _docs(spark, sf_dir).select("doc_id", "text")
         dinc.build_dedup_index(docs.filter(F.col("doc_id") % 3 == 1), out,
                                min_len=INC_SPAN_LEN, id_col="doc_id")
         dinc.update_dedup_index(spark, out,
                                 docs.filter(F.col("doc_id") % 3 == 2),
                                 min_len=INC_SPAN_LEN, id_col="doc_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
+        return out
+    return catalog.memo_store(sf_dir, "folded", build)
 
 
 # shared oracle prelude: the split + union with precedence flags
@@ -588,36 +580,45 @@ ANN_REFINE = 40        # exact-re-rank shortlist size (4·k — the usual
                        # production refine multiple)
 
 
-def _ann_index_dir(spark, sf_dir: str) -> str:
-    """Memoized trained-ANN store per (process, sf_dir), assembled the
-    way the weekly pipeline would: build on the standing embeddings
-    (vec_id % 3 <> 0), TRAIN the IVF index and the PQ index once over
-    them (``train_ann_index`` / ``train_pq_index``), then fold the new
-    snapshot's vectors (vec_id % 3 = 0) in O(snapshot) — assignment to
-    the persisted centroids plus encoding against the persisted
-    codebook, the standing assignment/codes never re-read. The doc side
-    is a thin slice (doc_id % 15 = 1): the ANN tables depend only on
-    the embeddings, and the text fingerprints are already exercised by
-    the ``_dedup_index_dir`` family."""
-    key = os.path.abspath(sf_dir) + "#ann"
-    if key not in _IDX_CACHE:
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
+def _ann_store(spark, sf_dir: str, tag: str, train) -> str:
+    """The base step of every ANN store, memoized per (process, sf_dir,
+    tag), as the weekly pipeline would run it: build on the standing
+    embeddings (vec_id % 3 <> 0), run the store's ``train(out,
+    standing)`` once, then fold the new snapshot's vectors (vec_id % 3 =
+    0) in O(snapshot) against the persisted artifacts. The doc side is a
+    thin slice (doc_id % 15 = 1): the ANN tables depend only on the
+    embeddings, and the ``_dedup_index_dir`` family exercises the text
+    fingerprints. A store holds ONE ``ann`` (IVF) block and ONE ``pq``
+    block, so residual PQ and k-means centroids, which would replace the
+    ``ann`` store's id-sample centroids and plain PQ codebook, each need
+    a store of their own."""
+    def build(out):
         emb = _emb(spark, sf_dir)
+        standing = emb.filter(F.col("vec_id") % 3 != 0)
         dinc.build_dedup_index(
             _docs(spark, sf_dir).select("doc_id", "text")
             .filter(F.col("doc_id") % 15 == 1),
             out, min_len=INC_SPAN_LEN, id_col="doc_id",
-            embeddings=emb.filter(F.col("vec_id") % 3 != 0),
-            emb_id_col="vec_id")
-        dinc.train_ann_index(spark, out, every=ANN_IDX_EVERY)
-        dinc.train_pq_index(spark, out)
+            embeddings=standing, emb_id_col="vec_id")
+        train(out, standing)
         dinc.update_dedup_index(
             spark, out, min_len=INC_SPAN_LEN,
             new_embeddings=emb.filter(F.col("vec_id") % 3 == 0),
             emb_id_col="vec_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
+        return out
+    return catalog.memo_store(sf_dir, tag, build)
+
+
+def _ann_index_dir(spark, sf_dir: str) -> str:
+    """The ``ann`` store (``_ann_store``): IVF with id-sample centroids,
+    PQ and SQ8, each trained once over the standing embeddings. Its
+    queries read the current view (every visible snap, standing plus
+    folded) through the codec they serve: IVF, PQ, IVF-PQ or IVF-SQ8."""
+    def train(out, _standing):
+        dinc.train_ann_index(spark, out, every=ANN_IDX_EVERY)
+        dinc.train_pq_index(spark, out)
+        dinc.train_sq_index(spark, out)
+    return _ann_store(spark, sf_dir, "ann", train)
 
 
 _ANN_COS_EC = (
@@ -1331,31 +1332,17 @@ _register_indexed_pq()
 # ---------------------------------------------------------------------------
 
 def _ann_res_index_dir(spark, sf_dir: str) -> str:
-    """Memoized store carrying the RESIDUAL PQ index: IVF trained on the
-    standing embeddings (id-sample, the indexed_ann_topk convention),
-    then train_pq_index(residual=True) — sub-codebooks over standing
+    """Memoized store carrying the RESIDUAL PQ index (``_ann_store``,
+    tag ``annres``): IVF trained on the standing embeddings (id-sample,
+    the indexed_ann_topk convention), then
+    train_pq_index(residual=True) — sub-codebooks over standing
     residuals, codes for x − c(x) — then the new snapshot folded in
     (assignment + residual encode against the persisted artifacts,
     O(snapshot))."""
-    key = os.path.abspath(sf_dir) + "#annres"
-    if key not in _IDX_CACHE:
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
-        emb = _emb(spark, sf_dir)
-        dinc.build_dedup_index(
-            _docs(spark, sf_dir).select("doc_id", "text")
-            .filter(F.col("doc_id") % 15 == 1),
-            out, min_len=INC_SPAN_LEN, id_col="doc_id",
-            embeddings=emb.filter(F.col("vec_id") % 3 != 0),
-            emb_id_col="vec_id")
+    def train(out, _standing):
         dinc.train_ann_index(spark, out, every=ANN_IDX_EVERY)
         dinc.train_pq_index(spark, out, residual=True)
-        dinc.update_dedup_index(
-            spark, out, min_len=INC_SPAN_LEN,
-            new_embeddings=emb.filter(F.col("vec_id") % 3 == 0),
-            emb_id_col="vec_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
+    return _ann_store(spark, sf_dir, "annres", train)
 
 
 def _register_indexed_residual():
@@ -1612,36 +1599,22 @@ KM_IDX_ITERS = 3
 
 def _ann_km_index_dir(spark, sf_dir: str) -> str:
     """Memoized store whose IVF index is trained with K-MEANS centers
-    (``similarity.kmeans_spherical`` over the STANDING embeddings,
-    deterministic id-sample init — the production training path) and
-    persisted via ``train_ann_index(centroids=...)``; the new
-    snapshot's vectors then fold in O(snapshot) by assignment to the
-    persisted centers. Downstream serving plans are identical to the
-    id-sample store — only the trained artifact differs."""
+    (``_ann_store``, tag ``annkm``; ``similarity.kmeans_spherical``
+    over the STANDING embeddings, deterministic id-sample init — the
+    production training path) and persisted via
+    ``train_ann_index(centroids=...)``; the new snapshot's vectors then
+    fold in O(snapshot) by assignment to the persisted centers.
+    Downstream serving plans are identical to the id-sample store —
+    only the trained artifact differs."""
     from hadoop_ir_spark.operators import similarity
 
-    key = os.path.abspath(sf_dir) + "#annkm"
-    if key not in _IDX_CACHE:
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
-        emb = _emb(spark, sf_dir)
-        standing = emb.filter(F.col("vec_id") % 3 != 0)
-        dinc.build_dedup_index(
-            _docs(spark, sf_dir).select("doc_id", "text")
-            .filter(F.col("doc_id") % 15 == 1),
-            out, min_len=INC_SPAN_LEN, id_col="doc_id",
-            embeddings=standing, emb_id_col="vec_id")
+    def train(out, standing):
         init = similarity.centroid_sample(standing, every=KM_IDX_EVERY,
                                           max_k=KM_IDX_MAX_K)
         _assign, cents = similarity.kmeans_spherical(standing, init,
                                                      iters=KM_IDX_ITERS)
         dinc.train_ann_index(spark, out, centroids=cents)
-        dinc.update_dedup_index(
-            spark, out, min_len=INC_SPAN_LEN,
-            new_embeddings=emb.filter(F.col("vec_id") % 3 == 0),
-            emb_id_col="vec_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
+    return _ann_store(spark, sf_dir, "annkm", train)
 
 
 def _km_ivf_oracle() -> str:
@@ -1754,27 +1727,6 @@ def q_indexed_ann_kmeans_topk(spark, sf_dir):
 # incremental duplicate-cluster maintenance (VERDICT r9 missing #3)
 # ---------------------------------------------------------------------------
 
-def _cc_index_dir(spark, sf_dir: str) -> str:
-    """Memoized label-maintaining store per (process, sf_dir): build on
-    the standing corpus, compute the standing labels ONCE
-    (build_cc_labels — exact + verified-LSH components from the index's
-    own tables), then fold the new snapshot in — the fold merges only
-    the snapshot's pair edges into the standing labels (contracted CC +
-    alias log), never re-running CC over the standing pair set."""
-    key = os.path.abspath(sf_dir) + "#cc"
-    if key not in _IDX_CACHE:
-        _assert_offset(spark, sf_dir)
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
-        dinc.build_dedup_index(_old_docs(spark, sf_dir), out,
-                               min_len=INC_SPAN_LEN, id_col="doc_id")
-        dinc.build_cc_labels(spark, out, tau=INC_TAU)
-        dinc.update_dedup_index(spark, out, _new_docs(spark, sf_dir),
-                                min_len=INC_SPAN_LEN, id_col="doc_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
-
-
 def _cc_oracle_sql(num_hashes: int = 24, bands: int = 8) -> str:
     """From-scratch duplicate clusters over old ∪ new: the same pair
     rule the store maintains (exact-content star edges + banded-LSH
@@ -1819,9 +1771,14 @@ def q_incremental_dedup_clusters(spark, sf_dir):
     only merge existing components or attach new docs. Oracle =
     from-scratch recursive-CTE components over old ∪ new with the same
     pair rule; fold ≡ rebuild is pinned in
-    tests/test_dedup_incremental.py::test_cc_labels_fold_equals_rebuild."""
-    idx_dir = _cc_index_dir(spark, sf_dir)
-    return (dinc.cc_labels_frame(spark, idx_dir)
+    tests/test_dedup_incremental.py::test_cc_labels_fold_equals_rebuild.
+    The labels are read from the ``ccsplit`` store
+    (``_cc_split_index_dir``) through its snap view right after the
+    new-snapshot fold, before the planted chain and the takedown batch
+    that ``incremental_cc_splits`` audits: those snaps, their tombstones
+    and their alias rows are not in the view."""
+    idx_dir, pre_chain = _cc_split_index_dir(spark, sf_dir)
+    return (dinc.cc_labels_frame(spark, idx_dir, snaps=pre_chain)
             .select("docno", F.col("label").alias("cluster_id")))
 
 
@@ -1851,22 +1808,23 @@ _CC_CHAIN = [
 _CC_CHAIN_VALUES = ", ".join(f"({i}, '{t}', 1)" for i, t in _CC_CHAIN)
 
 
-def _cc_split_index_dir(spark, sf_dir: str) -> str:
+def _cc_split_index_dir(spark, sf_dir: str) -> tuple[str, list[int]]:
     """Memoized label store with a RETRACTION history per (process,
-    sf_dir): the _cc_index_dir protocol (build old → standing labels →
-    fold new) followed by a deterministic takedown batch (docno % 17 ==
-    3 of the union corpus, removed with their indexed text) — the state
-    whose deferred split damage cc_split_report audits."""
-    key = os.path.abspath(sf_dir) + "#ccsplit"
-    if key not in _IDX_CACHE:
+    sf_dir), and its snap list right after the new-snapshot fold: build
+    old → standing labels ONCE (build_cc_labels) → fold new (only the
+    snapshot's pair edges merge: contracted CC + alias log) → read the
+    snaps → fold the planted chain → a deterministic takedown batch
+    (docno % 17 == 3 of the union corpus, removed with their indexed
+    text). The view over those snaps is the maintained labels of
+    old ∪ new; the full view is the state cc_split_report audits."""
+    def build(out):
         _assert_offset(spark, sf_dir)
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
         dinc.build_dedup_index(_old_docs(spark, sf_dir), out,
                                min_len=INC_SPAN_LEN, id_col="doc_id")
         dinc.build_cc_labels(spark, out, tau=INC_TAU)
         dinc.update_dedup_index(spark, out, _new_docs(spark, sf_dir),
                                 min_len=INC_SPAN_LEN, id_col="doc_id")
+        pre_chain = list(dinc._read_manifest(out)["snaps"])
         chain = spark.createDataFrame(_CC_CHAIN,
                                       "doc_id long, text string")
         dinc.update_dedup_index(spark, out, chain,
@@ -1877,8 +1835,8 @@ def _cc_split_index_dir(spark, sf_dir: str) -> str:
               .filter(F.col("doc_id") % _CC_SPLIT_MOD == _CC_SPLIT_REM))
         dinc.update_dedup_index(spark, out, removed_docs=rm,
                                 min_len=INC_SPAN_LEN, id_col="doc_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
+        return out, pre_chain
+    return catalog.memo_store(sf_dir, "ccsplit", build)
 
 
 def _cc_split_oracle_sql(num_hashes: int = 24, bands: int = 8) -> str:
@@ -1955,7 +1913,7 @@ def q_incremental_cc_splits(spark, sf_dir):
     build_cc_labels(rebuild=True) repairs). Oracle = two recursive-CTE
     reachability passes (standing over the original corpus, current
     over the survivors) sharing one per-pair edge replay."""
-    idx_dir = _cc_split_index_dir(spark, sf_dir)
+    idx_dir, _pre_chain = _cc_split_index_dir(spark, sf_dir)
     return dinc.cc_split_report(spark, idx_dir)
 
 
@@ -1967,32 +1925,6 @@ def q_incremental_cc_splits(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 SQ_DIMS = 64
-
-
-def _sq_index_dir(spark, sf_dir: str) -> str:
-    """Memoized store carrying IVF + SQ8: both trained on the standing
-    embeddings (vec_id % 3 != 0), the new snapshot folded in
-    (assignment + SQ encode against the frozen artifacts,
-    O(snapshot))."""
-    key = os.path.abspath(sf_dir) + "#annsq"
-    if key not in _IDX_CACHE:
-        out = os.path.join(_TMPROOT,
-                           key.strip("/").replace("/", "_").replace("#", "_"))
-        emb = _emb(spark, sf_dir)
-        dinc.build_dedup_index(
-            _docs(spark, sf_dir).select("doc_id", "text")
-            .filter(F.col("doc_id") % 15 == 1),
-            out, min_len=INC_SPAN_LEN, id_col="doc_id",
-            embeddings=emb.filter(F.col("vec_id") % 3 != 0),
-            emb_id_col="vec_id")
-        dinc.train_ann_index(spark, out, every=ANN_IDX_EVERY)
-        dinc.train_sq_index(spark, out)
-        dinc.update_dedup_index(
-            spark, out, min_len=INC_SPAN_LEN,
-            new_embeddings=emb.filter(F.col("vec_id") % 3 == 0),
-            emb_id_col="vec_id")
-        _IDX_CACHE[key] = out
-    return _IDX_CACHE[key]
 
 
 def _register_indexed_sq():
@@ -2088,7 +2020,7 @@ FROM ranked WHERE rank <= {ANN_IDX_K}
         pass proves the PERSISTED codes byte-match an external
         engine's encode (the fold≡rebuild tests carry the
         fold-vs-union half)."""
-        idx_dir = _sq_index_dir(spark, sf_dir)
+        idx_dir = _ann_index_dir(spark, sf_dir)
         emb = _emb(spark, sf_dir)
         queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
             F.col("vec_id").alias("qid"), "embedding")
@@ -2123,7 +2055,7 @@ LEFT JOIN h1 ON h1.qid = qs.qid
         recall_adc/recall_refined columns over the same query set)."""
         from hadoop_ir_spark.operators import similarity as sim
 
-        idx_dir = _sq_index_dir(spark, sf_dir)
+        idx_dir = _ann_index_dir(spark, sf_dir)
         emb = _emb(spark, sf_dir)
         queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
             F.col("vec_id").alias("qid"), "embedding")

@@ -6,13 +6,13 @@ exactly."""
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
+# stores go through catalog.memo_store, looked up at call time so that a
+# tracer can wrap it (tools/query_record.py)
+from hadoop_ir_spark import catalog
 from hadoop_ir_spark.catalog import (
     DIR_MU,
     ORACLES,
@@ -25,18 +25,11 @@ from hadoop_ir_spark.catalog import (
 from hadoop_ir_spark.io import index as index_io
 from hadoop_ir_spark.operators import rank, scoring
 
-_INDEX_CACHE: dict[str, str] = {}
-_TMPROOT = tempfile.mkdtemp(prefix="hadoop_ir_spark_index_")
-atexit.register(shutil.rmtree, _TMPROOT, ignore_errors=True)
-
-
 def _index_dir(spark, sf_dir: str) -> str:
-    key = os.path.abspath(sf_dir)
-    if key not in _INDEX_CACHE:
-        out = os.path.join(_TMPROOT, key.strip("/").replace("/", "_"))
+    def build(out):
         index_io.build_index(_docs(spark, sf_dir), out, id_col="doc_id")
-        _INDEX_CACHE[key] = out
-    return _INDEX_CACHE[key]
+        return out
+    return catalog.memo_store(sf_dir, "index", build)
 
 
 @register("indexed_dirichlet_topk")
@@ -74,9 +67,6 @@ ORACLES["indexed_dirichlet_topk"] = ORACLES["dirichlet_topk"]
 # indexed_phrase_topk — phrase retrieval from the positional index
 # ---------------------------------------------------------------------------
 
-_POS_INDEX_CACHE: dict[str, str] = {}
-
-
 def _pos_index_dir(spark, sf_dir: str) -> str:
     # pair_window is passed EXPLICITLY as SDM_UW (ADVICE r7): q_indexed_sdm
     # reads pair_unordered_w{SDM_UW}, so building with the (coincidentally
@@ -84,15 +74,12 @@ def _pos_index_dir(spark, sf_dir: str) -> str:
     # window width.
     from hadoop_ir_spark.queries.proximity_q import SDM_UW
 
-    key = os.path.abspath(sf_dir)
-    if key not in _POS_INDEX_CACHE:
-        out = os.path.join(
-            _TMPROOT, "pos_" + key.strip("/").replace("/", "_"))
+    def build(out):
         index_io.build_positional_index(_docs(spark, sf_dir), out,
                                         id_col="doc_id",
                                         pair_window=SDM_UW)
-        _POS_INDEX_CACHE[key] = out
-    return _POS_INDEX_CACHE[key]
+        return out
+    return catalog.memo_store(sf_dir, "posindex", build)
 
 
 def _pair_ordered(spark, sf_dir):

@@ -1,5 +1,5 @@
-"""The per-query record (tools/query_record.py) and the job-group
-inheritance its build span depends on."""
+"""The per-query record (tools/query_record.py), its store layer, and
+the job-group inheritance its build span depends on."""
 
 from __future__ import annotations
 
@@ -81,3 +81,23 @@ def test_live_record_eval_map_pk(spark, sf_dir):
     assert set(rec) == {"name", "build", "optimize", "execute", "plan"}
     for layer in ("build", "optimize", "execute"):
         assert set(rec[layer]) == set(query_record.FIELDS)
+
+
+def test_store_build_is_its_own_layer(spark, sf_dir):
+    """Two queries that read the one ``index`` store: the first record
+    shows the store build as a ``store`` layer, the second builds none."""
+    from unittest import mock
+
+    from hadoop_ir_spark import catalog
+    from perfbench.trace import Tracer
+
+    tracer = Tracer(spark.sparkContext)
+    with mock.patch.dict(catalog._STORES, clear=True):
+        first, _ = query_record.record(spark, tracer,
+                                       "indexed_dirichlet_topk", sf_dir)
+        second, _ = query_record.record(spark, tracer,
+                                        "indexed_bm25_topk", sf_dir)
+    assert first["store"]["jobs"] > 0
+    assert set(first["store"]) == set(query_record.FIELDS)
+    assert "store" not in second
+    assert second["build"]["jobs"] < first["store"]["jobs"]

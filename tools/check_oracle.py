@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import threading
 import time
 
 import duckdb
@@ -210,6 +211,33 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def jvm_exited(proc, name: str, exit=os._exit) -> bool:
+    """If the JVM behind the Spark gateway has exited, print ``FAIL
+    <name>: JVM exited (<code>)`` and ``exit(1)``: no later query can
+    run. False while it runs."""
+    if (code := proc.poll()) is None:
+        return False
+    print(f"FAIL {name}: JVM exited ({code})", flush=True)
+    exit(1)
+    return True
+
+
+def watch_jvm(proc, inflight, interval_s: float = 1.0, exit=os._exit):
+    """Check ``jvm_exited(proc, inflight())`` every ``interval_s`` from a
+    daemon thread: a py4j call into a dead JVM can block for good, so
+    the main thread may never get to check. Returns an Event; set it
+    before a normal exit, whose shutdown stops the JVM on purpose."""
+    done = threading.Event()
+
+    def watch():
+        while not done.wait(interval_s):
+            if jvm_exited(proc, inflight(), exit):
+                return
+
+    threading.Thread(target=watch, name="jvm-watch", daemon=True).start()
+    return done
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
@@ -268,6 +296,9 @@ def main():
 
     qs, oracles = E.queries(), E.oracle_sql()
     failed = []
+    jvm = spark.sparkContext._gateway.proc
+    name = "(before the first query)"
+    finished = watch_jvm(jvm, lambda: name)
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -275,6 +306,7 @@ def main():
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
+            jvm_exited(jvm, name)
             print(f"FAIL {name}: spark error: {ex}")
             failed.append(name)
             continue
@@ -295,6 +327,7 @@ def main():
         else:
             print(f"PASS {name}: rows={len(spark_pdf)} [{time.time()-t0:.1f}s]")
 
+    finished.set()
     n_ran = len([n for n in qs if not only or n in only])
     print(f"\n{n_ran - len(failed)}/{n_ran} passed")
     sys.exit(1 if failed else 0)

@@ -4,8 +4,11 @@ of the AQE final plan.
 Each query runs once, in one session, under three spans of
 ``perfbench.trace.Tracer``: ``build`` (``QUERIES[name](spark, sf_dir)``,
 eager jobs included), ``optimize`` (``queryExecution().optimizedPlan()``)
-and ``execute`` (the plan run once through a ``noop`` write). Each span
-reports the tracer's generic counters. The digest counts the operators
+and ``execute`` (the plan run once through a ``noop`` write). A memoized
+store the build has to make (``catalog.memo_store``) runs in a ``store``
+span inside ``build``, so it is not in ``build``'s own counters; the
+record has a ``store`` layer only for the query that built one. Each
+layer reports the tracer's generic counters. The digest counts the operators
 of the plan the noop write ran after adaptive execution: the newest SQL
 execution in the status store, printed with ``isFinalPlan=true``.
 
@@ -25,6 +28,7 @@ import json
 import os
 import re
 import sys
+from unittest import mock
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -79,12 +83,32 @@ def final_plan(spark) -> str:
     return newest.apply(0).physicalPlanDescription()
 
 
+def traced_stores(tracer: Tracer):
+    """Patch ``catalog.memo_store`` so that each store build runs in a
+    ``store`` span; a store already built opens none."""
+    memo_store = catalog.memo_store
+
+    def traced(sf_dir, tag, build):
+        def build_in_span(out):
+            with tracer.span("store"):
+                return build(out)
+        return memo_store(sf_dir, tag, build_in_span)
+    return mock.patch.object(catalog, "memo_store", traced)
+
+
+def layer(spans) -> dict:
+    """The generic counters of ``spans``, summed."""
+    vals = [{"self_s": s.self_s, "driver_s": s.driver_s, **s.counts}
+            for s in spans]
+    return {k: round(sum(v[k] for v in vals), 3) for k in FIELDS}
+
+
 def record(spark, tracer: Tracer, name: str, sf_dir: str) -> tuple[dict, str]:
     """(record, final plan text) of one catalog query. ``tracer`` must
     serve the whole session: its span groups are numbered per tracer."""
     spans = {}
     try:
-        with tracer.span("build") as spans["build"]:
+        with tracer.span("build") as spans["build"], traced_stores(tracer):
             df = catalog.QUERIES[name](spark, sf_dir)
         with tracer.span("optimize") as spans["optimize"]:
             df._jdf.queryExecution().optimizedPlan()
@@ -97,9 +121,10 @@ def record(spark, tracer: Tracer, name: str, sf_dir: str) -> tuple[dict, str]:
         tracer.finish_iteration()
     plan = final_plan(spark)
     rec = {"name": name}
-    for layer, s in spans.items():
-        vals = {"self_s": s.self_s, "driver_s": s.driver_s, **s.counts}
-        rec[layer] = {k: round(vals[k], 3) for k in FIELDS}
+    for key, s in spans.items():
+        rec[key] = layer([s])
+    if stores := spans["build"].children:
+        rec["store"] = layer(stores)
     rec["plan"] = digest(plan)
     return rec, plan
 
