@@ -1,55 +1,33 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+"""Benchmark harness: runs every catalog query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "exec_cpu_s": ..., "sf": ...}.
 
-Each query is fully materialized via a count-style action (no driver-side
-collect of payload rows), and run TWICE: the reported per-query number is
-the min of the two repetitions, so a transient host-load spike during one
-repetition cannot distort the recorded engine time (VERDICT r6 finding #1:
-BENCH_r06 recorded 3.08s for a query that re-times at 0.84s isolated).
-The first-repetition times are kept separately in BENCH_FULL.json under
-"first_run" for anyone studying cache/codegen warm-up.
+Each query runs twice. A rep times exactly
+``QUERIES[name](spark, sf_dir).count()`` (a count-style action: no
+driver-side collect of payload rows) inside one ``perfbench.trace.Tracer``
+span. After the rep, outside the timer, the listener bus is drained and the
+tracer reads the jobs the rep ran and their executor CPU from Spark's status
+store, as ``tools/query_record.py`` does. The reported number is the min of
+the two reps. A memoized store build (``catalog.memo_store``) runs in a
+``store`` span of its own.
 
-Load-aware contamination detection (VERDICT r7 finding #1 — min-of-2
-cannot absorb a spike spanning both reps, and the record's
-trustworthiness must not depend on a human noticing): os.getloadavg()
-is sampled before every repetition; a repetition taken at 1-min load
-above LOAD_FLAG_FRACTION x cpus is FLAGGED, and a query whose kept
-repetitions were all flagged — or whose two reps disagree by more than
-RETRY_DISAGREE_RATIO (a spike the threshold missed) — is re-run once
-more. Per-query load samples live in BENCH_FULL.json under "load_avg";
-queries still contaminated after the retry are listed in "load_flagged"
-(and counted in the printed line's "n_load_flagged"), so a reviewer can
-machine-discard them instead of adjudicating the record by hand.
+BENCH_FULL.json holds, per query under "records": the kept wall time
+(``wall_s``), both reps, the row count, the tracer's counters of the kept
+rep (jobs, tasks, driver_s, exec_run_s, exec_cpu_s, shuffle_write_mb,
+spill_mb) and, for the query whose rep built a store, a ``store`` layer.
 
-Caveat measured at the r8 close: the bench's OWN load1 reaches ~18 on a
-32-core box (median ~9), so the absolute threshold can only catch GROSS
-contamination (a second full-width job); moderate background load is
-indistinguishable from self-load in loadavg terms. Two stronger
-detectors close that gap:
+A query whose kept time exceeds HIST_RATIO x the previous record's (same SF)
+is listed in "regression_suspects" with its executor-CPU share
+(exec_cpu_s / wall) then and now. The verdict is "contended" when the share
+fell below CPU_SHARE_FRAC x the previous one: wall grew and executor CPU did
+not, so the host was busy. Otherwise it is "regression": executor CPU grew
+with wall, so the code got slower.
 
-- CPU-SHARE (r9, VERDICT r8 #4): every repetition also measures the
-  bench's OWN process-tree CPU time (driver python + the JVM + its
-  python workers, one /proc sweep — see _tree_cpu_seconds) and records
-  cpu/wall. Contention shows up DIRECTLY as a low core share: the same
-  query doing the same work suddenly gets fewer cores, so wall grows
-  while cpu does not. A rep whose cpu/wall falls below CPU_SHARE_FRAC x
-  the best rep of the same query is discarded like a load-flagged rep
-  (and triggers the retry); the kept rep's ratio is recorded in
-  BENCH_FULL.json "cpu_wall".
-- HISTORY: the previous record's per-query min is read before
-  overwriting, and queries whose new min exceeds HIST_RATIO x their
-  previous min are listed in "regression_suspects". Each suspect now
-  carries prev/now cpu-share and a machine verdict: "contended" when
-  the share dropped below CPU_SHARE_FRAC x its previous value (the
-  r8-close media_bmp_resize miss class — wall 4.4x, cpu flat), else
-  "regression" (cpu moved with wall: the code really got slower).
-  Advisory: code changes legitimately move times.
-
-The flag rules are pure functions (cpu_starved / classify_suspect) so
-tests/test_bench_cpu_guard.py can pin them against a DELIBERATE
-contamination run (burner processes competing for every core).
+The harness that runs the bench keeps only the last 2000 characters of
+stdout, so the printed line stays under LINE_BUDGET characters: its
+"queries" are a stable subset (:func:`printed_subset`) and BENCH_FULL.json
+has the rest.
 """
 
 from __future__ import annotations
@@ -59,7 +37,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+from hadoop_ir_spark import catalog  # noqa: E402
+from hadoop_ir_spark.session import get_spark  # noqa: E402
+from perfbench.trace import Tracer  # noqa: E402
+from tools.query_record import layer, traced_stores  # noqa: E402
 
 HEADLINE = [
     "dirichlet_topk",       # flagship scan-and-score retrieval
@@ -101,164 +85,39 @@ HEADLINE = [
     "indexed_bm25_topk",    # index-served scoring family
 ]
 
-
-CPU_SHARE_FRAC = 0.55   # a rep below this fraction of the best rep's
-                        # cpu/wall share was starved of cores
-
-
-def _tree_cpu_seconds(root_pid: int | None = None) -> float:
-    """Total CPU seconds (utime+stime+reaped-children time) of
-    ``root_pid`` (default: this process) and every live descendant —
-    the JVM py4j launches and its python workers — via one /proc sweep.
-    Including cutime/cstime keeps the delta conserved when a worker is
-    reaped between two sweeps (its time moves into the parent's
-    children counters instead of vanishing)."""
-    clk = os.sysconf("SC_CLK_TCK")
-    root_pid = root_pid if root_pid is not None else os.getpid()
-    ticks: dict[int, int] = {}
-    kids: dict[int, list[int]] = {}
-    for ent in os.listdir("/proc"):
-        if not ent.isdigit():
-            continue
-        try:
-            with open(f"/proc/{ent}/stat", "rb") as f:
-                rest = f.read().decode("ascii", "replace").rsplit(")", 1)[1]
-        except (OSError, IndexError):
-            continue
-        fld = rest.split()
-        # fld[0] = state; stat fields 4..17 land at fld[1..14]
-        ppid = int(fld[1])
-        ticks[int(ent)] = (int(fld[11]) + int(fld[12])      # utime+stime
-                           + int(fld[13]) + int(fld[14]))   # cutime+cstime
-        kids.setdefault(ppid, []).append(int(ent))
-    total, stack, seen = 0, [root_pid], set()
-    while stack:
-        p = stack.pop()
-        if p in seen or p not in ticks:
-            continue
-        seen.add(p)
-        total += ticks[p]
-        stack.extend(kids.get(p, []))
-    return total / clk
+CPU_SHARE_FRAC = 0.55   # a share below this fraction of the previous
+                        # record's means the query got fewer cores
+HIST_RATIO = 1.5        # kept time growth that makes a suspect
+LINE_BUDGET = 1700      # characters of the printed line
 
 
-CAL_TOLERANCE = 0.25    # calibration runs this far above the rolling
-                        # reference mark the whole record host-degraded.
-                        # Sized to the MEASURED ambient drift of this
-                        # host class (r10: consecutive warm probes on an
-                        # idle VM span 0.123-0.152s, ~24% — virtualized
-                        # frequency/steal noise), so the canary flags
-                        # the genuinely-degraded class (>25%, e.g. a
-                        # sustained thermal clamp) and leaves sub-25%
-                        # drift to regression_suspects adjudication
+def measure(spark, tracer: Tracer, name: str, sf_dir: str) -> dict:
+    """The record of one catalog query: min-of-2 wall time of
+    ``QUERIES[name](spark, sf_dir).count()``, the tracer's counters of that
+    rep and, if a rep built a memoized store, its ``store`` layer."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    runs = []
+    for _ in range(2):
+        with tracer.span("rep") as span, traced_stores(tracer):
+            t0 = time.time()
+            rows = catalog.QUERIES[name](spark, sf_dir).count()
+            wall = time.time() - t0
+        bus.waitUntilEmpty()        # the status store is complete
+        tracer.finish_iteration()
+        runs.append((wall, span))
+    wall, kept = min(runs, key=lambda r: r[0])
+    rec = {"wall_s": round(wall, 3), "reps": [round(w, 3) for w, _ in runs],
+           "rows": rows}
+    # the rep's self time is its wall time, already in wall_s
+    rec.update((k, v) for k, v in layer([kept]).items() if k != "self_s")
+    if stores := [c for _, s in runs for c in s.children]:
+        rec["store"] = layer(stores)
+    return rec
 
 
-def calibration_probe() -> float:
-    """Fixed, pure-CPU, single-threaded numpy kernel (ufuncs never fan
-    out to BLAS threads) timed with perf_counter — the host-state canary
-    VERDICT r9 #4 asked for. Frequency/thermal decay slows EVERY query
-    proportionally while loadavg and cpu/wall core share stay flat (the
-    r9-close record: ~15% across-the-board, cpu/wall ~unchanged), so
-    neither existing detector can see it; this kernel does identical
-    work every run, so its wall time IS the host's effective
-    single-core throughput."""
-    import numpy as np
-
-    x = np.arange(4_000_000, dtype=np.float64) * 1e-6
-    y = x
-    # untimed warm-up window: the cold-start ramp (page faults, CPU
-    # frequency climb) measured LONGER than 4 timed reps on this host
-    # class — burn it off before the first timed rep
-    t_end = time.perf_counter() + 0.25
-    while time.perf_counter() < t_end:
-        y = np.sin(y) * 1.000001 + 1e-9
-    best = float("inf")
-    for _ in range(8):                # min-of-8 absorbs residual jitter
-        y = x
-        t0 = time.perf_counter()
-        for _ in range(4):
-            y = np.sin(y) * 1.000001 + 1e-9
-        dt = time.perf_counter() - t0
-        # fold into a scalar so the loop cannot be elided
-        s = float(y[::65536].sum())
-        assert s == s                 # not NaN; keeps `s` alive
-        best = min(best, dt)
-    return round(best, 3)
-
-
-CAL_MT_TOLERANCE = 0.5  # the multi-core probe's flag threshold: wider
-                        # than the single-core tolerance because thread
-                        # scheduling adds its own jitter, and the class
-                        # it exists to catch (multi-core steal /
-                        # contention the single-core canary CANNOT see —
-                        # observed r11: per-query inflation 1.2-3x with
-                        # single-core probes dead flat) moves this probe
-                        # well past 1.5x
-
-
-def calibration_probe_mt(threads: int = 8) -> float:
-    """Multi-core twin of ``calibration_probe`` (r11): N threads run the
-    same GIL-releasing numpy kernel concurrently; the value is the wall
-    time for ALL of them to finish (min-of-4 rounds). Virtualized
-    multi-core steal or an external core hog inflates this probe while
-    the single-core probe stays flat — exactly the contamination class
-    the r11 first bench run exhibited (26 scattered suspects, isolated
-    re-times clean, single-core probes at reference). Read the PAIR:
-    single-core up ⇒ frequency/thermal decay; multi-core up alone ⇒
-    core contention — retime suspects isolated before believing any
-    per-query regression."""
-    import threading
-
-    import numpy as np
-
-    xs = [np.arange(1_000_000, dtype=np.float64) * 1e-6
-          for _ in range(threads)]
-    res = [0.0] * threads
-
-    def work(i: int) -> None:
-        y = xs[i]
-        for _ in range(4):
-            y = np.sin(y) * 1.000001 + 1e-9
-        s = float(y[::65536].sum())
-        assert s == s
-        res[i] = s
-
-    # untimed warm-up round (page faults, frequency climb)
-    ws = [threading.Thread(target=work, args=(i,)) for i in range(threads)]
-    for t in ws:
-        t.start()
-    for t in ws:
-        t.join()
-    best = float("inf")
-    for _ in range(4):
-        ts = [threading.Thread(target=work, args=(i,))
-              for i in range(threads)]
-        t0 = time.perf_counter()
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-def calibration_flagged(before: float, after: float, reference: float,
-                        tol: float = CAL_TOLERANCE) -> bool:
-    """True when BOTH probe runs sit above the rolling reference by more
-    than ``tol`` — the record was taken on a degraded host (one slow
-    probe could itself be a transient; two bracket the whole bench)."""
-    return reference > 0 and min(before, after) > (1.0 + tol) * reference
-
-
-def cpu_starved(ratios: list[float],
-                frac: float = CPU_SHARE_FRAC) -> list[int]:
-    """Indices of repetitions whose cpu/wall core share is anomalously
-    low relative to the best repetition of the SAME query — the same
-    work suddenly running on fewer cores means something else had them."""
-    best = max(ratios) if ratios else 0.0
-    if best <= 0:
-        return []
-    return [i for i, r in enumerate(ratios) if r < frac * best]
+def cpu_share(rec: dict) -> float:
+    """Executor CPU seconds per wall second of a query record."""
+    return round(rec["exec_cpu_s"] / max(rec["wall_s"], 1e-9), 2)
 
 
 def classify_suspect(prev_ratio: float | None, now_ratio: float,
@@ -269,6 +128,23 @@ def classify_suspect(prev_ratio: float | None, now_ratio: float,
     if prev_ratio and prev_ratio > 0 and now_ratio < frac * prev_ratio:
         return "contended"
     return "regression"
+
+
+def regression_suspects(records: dict[str, dict], prev_full: dict) -> dict:
+    """Queries whose kept time grew past HIST_RATIO x the previous
+    record ``prev_full`` (a BENCH_FULL.json at the same SF), with both
+    executor-CPU shares and the verdict."""
+    prev = prev_full.get("queries", {})
+    prev_recs = prev_full.get("records", {})
+    out = {}
+    for n, r in records.items():
+        if prev.get(n, 0) > 0.2 and r["wall_s"] / prev[n] > HIST_RATIO:
+            was = cpu_share(prev_recs[n]) if n in prev_recs else None
+            now = cpu_share(r)
+            out[n] = {"prev": prev[n], "now": r["wall_s"],
+                      "prev_cpu_share": was, "now_cpu_share": now,
+                      "verdict": classify_suspect(was, now)}
+    return out
 
 
 def printed_subset(timings: dict[str, float], prev_printed: list[str],
@@ -293,10 +169,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
-    from hadoop_ir_spark.session import get_spark
-    from hadoop_ir_spark import catalog
-
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
     spark = get_spark("bench", cpus=cpus)
 
     names = [n for n in HEADLINE if n in catalog.QUERIES]
@@ -310,190 +183,51 @@ def main():
     if os.path.isdir(warm_dir):
         catalog.QUERIES["dirichlet_topk"](spark, warm_dir).count()
 
-    # a rep sampled above this 1-min load is suspect: the bench's own
-    # local[cpus] JVM cannot sustain more than ~cpus runnable threads,
-    # so load beyond it means a foreign process is competing for cores
-    load_limit = cpus * float(os.environ.get("SPARK_GRAFT_LOAD_FRAC", "1.0"))
-    retry_disagree = 1.5
-    hist_ratio = 1.5
-    here = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(os.path.join(here, "BENCH_FULL.json")) as f:
-            _prev_full = json.load(f)
-        prev = _prev_full.get("queries", {})
-        prev_cpu = _prev_full.get("cpu_wall", {})
-        prev_cal = float(_prev_full.get("calibration", {})
-                         .get("reference") or 0.0)
-        prev_cal_mt = float(_prev_full.get("calibration", {})
-                            .get("reference_mt") or 0.0)
+        with open(os.path.join(HERE, "BENCH_FULL.json")) as f:
+            prev_full = json.load(f)
     except (OSError, ValueError):
-        _prev_full = {}
-        prev, prev_cpu, prev_cal, prev_cal_mt = {}, {}, 0.0, 0.0
+        prev_full = {}
 
-    # host-state canary: one probe before the sweep, one after (the pair
-    # brackets the record), judged against the rolling best-known host
-    # speed — a fresh repo has no reference, so the first record seeds it
-    cal_before = calibration_probe()
-    cal_mt_before = calibration_probe_mt()
-
-    def _rep(name):
-        load1 = os.getloadavg()[0]
-        c0 = _tree_cpu_seconds()
-        t0 = time.time()
-        n = catalog.QUERIES[name](spark, sf_dir).count()
-        wall = time.time() - t0
-        cpu = _tree_cpu_seconds() - c0
-        return (round(wall, 3), round(load1, 2),
-                round(cpu / max(wall, 1e-9), 2), n)
-
-    timings: dict[str, float] = {}
-    first_run: dict[str, float] = {}
-    load_avg: dict[str, list[float]] = {}
-    cpu_wall: dict[str, list[float]] = {}
-    load_flagged: list[str] = []
+    tracer = Tracer(spark.sparkContext)
+    records = {}
     for name in names:
-        reps, loads, shares = [], [], []
-        for _ in range(2):
-            t, load1, share, n = _rep(name)
-            reps.append(t)
-            loads.append(load1)
-            shares.append(share)
-        disagree = max(reps) / max(min(reps), 1e-9) > retry_disagree
-        starved = set(cpu_starved(shares)) if min(reps) > 0.2 else set()
-        if all(l > load_limit for l in loads) or disagree or starved:
-            t, load1, share, n = _rep(name)       # one machine-driven retry
-            reps.append(t)
-            loads.append(load1)
-            shares.append(share)
-            starved = set(cpu_starved(shares)) if min(reps) > 0.2 else set()
-        # the kept number is the min of reps taken under sane load.
-        # Share-starved reps trigger the retry above but are NOT
-        # excluded from the kept min (r11): contention makes a rep
-        # SLOWER, never faster, so a starved rep can never fake a
-        # too-fast min — exclusion could only RAISE the kept value.
-        # Observed: a first rep carrying a memoized store build posts a
-        # high core share, which made the warm reps look "starved" and
-        # recorded 16.4s for a 1.3s query (indexed_ann_kmeans_topk).
-        # If every rep was load-contaminated, keep the min and flag.
-        clean = [t for t, l in zip(reps, loads) if l <= load_limit]
-        if clean:
-            timings[name] = min(clean)
-        else:
-            timings[name] = min(reps)
-            load_flagged.append(name)
-        first_run[name] = reps[0]
-        load_avg[name] = loads
-        cpu_wall[name] = shares
-        flag = " LOAD-FLAGGED" if name in load_flagged else ""
-        print(f"# {name}: {timings[name]}s (reps {reps}, loads {loads}, "
-              f"cpu/wall {shares}, {n} rows){flag}", file=sys.stderr)
+        r = records[name] = measure(spark, tracer, name, sf_dir)
+        print(f"# {name}: {r['wall_s']}s (reps {r['reps']}, {r['jobs']} "
+              f"jobs, exec cpu {r['exec_cpu_s']}s, {r['rows']} rows)",
+              file=sys.stderr)
 
-    suspects = {}
-    for n, t in timings.items():
-        if n in prev and prev[n] > 0.2 and t / prev[n] > hist_ratio:
-            now_ratio = max(cpu_wall.get(n, [0.0]))
-            prevs = prev_cpu.get(n)
-            prev_ratio = max(prevs) if prevs else None
-            suspects[n] = {
-                "prev": prev[n], "now": t,
-                "prev_cpu_wall": prev_ratio, "now_cpu_wall": now_ratio,
-                "verdict": classify_suspect(prev_ratio, now_ratio),
-            }
-    cal_after = calibration_probe()
-    cal_mt_after = calibration_probe_mt()
-    cal_ref = min(x for x in (prev_cal, cal_before, cal_after) if x > 0)
-    cal_base = prev_cal or cal_ref
-    cal_mt_ref = min(x for x in (prev_cal_mt, cal_mt_before,
-                                 cal_mt_after) if x > 0)
-    cal_mt_base = prev_cal_mt or cal_mt_ref
-    cal = {
-        "before": cal_before, "after": cal_after,
-        "reference": cal_ref,
-        # sub-threshold drift made explicit (ADVICE r10 low): the
-        # fraction the BETTER probe sits above the judged-against
-        # reference — regression_suspects adjudication reads this
-        # directly instead of reconstructing it from before/after
-        "drift": round(min(cal_before, cal_after) / cal_base - 1.0, 3)
-        if cal_base > 0 else None,
-        "flagged": calibration_flagged(cal_before, cal_after, cal_base),
-        # multi-core twin (r11): catches core contention / steal the
-        # single-core kernel cannot see — single-core flat + multi-core
-        # inflated ⇒ retime suspects isolated before believing them
-        "before_mt": cal_mt_before, "after_mt": cal_mt_after,
-        "reference_mt": cal_mt_ref,
-        "drift_mt": round(min(cal_mt_before, cal_mt_after)
-                          / cal_mt_base - 1.0, 3)
-        if cal_mt_base > 0 else None,
-        "flagged_mt": calibration_flagged(cal_mt_before, cal_mt_after,
-                                          cal_mt_base,
-                                          tol=CAL_MT_TOLERANCE),
-    }
-    total = round(sum(timings.values()), 3)
+    timings = {n: r["wall_s"] for n, r in records.items()}
+    suspects = regression_suspects(
+        records, prev_full if prev_full.get("sf") == sf else {})
     full = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
+        "sf": sf,
+        "exec_cpu_s": round(sum(r["exec_cpu_s"] for r in records.values()),
+                            3),
         "queries": timings,
-        "first_run": first_run,
-        "load_avg": load_avg,
-        "cpu_wall": cpu_wall,
-        "load_limit": load_limit,
-        "load_flagged": load_flagged,
+        "records": records,
         "regression_suspects": suspects,
-        "calibration": cal,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # ... and keep the printed line comfortably under the tail window.
-    # Printed-line STABILITY (r13, VERDICT r12 #3): the driver's PERF
-    # diff compares the printed `queries` dict round-over-round, so the
-    # printed SUBSET must be stable — the old rule ("elide whatever is
-    # fastest this run") churned the compared set every round (phantom
-    # dropped_from_bench entries, and queries that got FASTER vanishing
-    # from the comparison). The printed set is now FIXED: the previous
-    # record's printed set (persisted as "printed_set" in
-    # BENCH_FULL.json; seeded, on the first run after this change, from
-    # the newest committed BENCH_r*.json printed line so the very next
-    # PERF diff sees zero phantom drops), then any remaining queries by
-    # current time desc — ADDITIONS ONLY — while the line fits the
-    # driver's 2000-char stdout window. Full detail, as before, lands
-    # in BENCH_FULL.json.
-    prev_printed = _prev_full.get("printed_set") or []
-    if not prev_printed:
-        import glob
-        # two-digit rounds only: BENCH_r12_c8.json (the low-core scaling
-        # record) must not win the lexicographic sort over BENCH_r12.json
-        recs = sorted(glob.glob(os.path.join(here, "BENCH_r[0-9][0-9].json")))
-        if recs:
-            try:
-                with open(recs[-1]) as f:
-                    prev_printed = list((json.load(f).get("parsed") or {})
-                                        .get("queries", {}))
-            except (OSError, ValueError):
-                prev_printed = []
-    out = dict(full)
-    del out["first_run"]          # detail lives in BENCH_FULL.json
-    del out["load_avg"]
-    del out["cpu_wall"]
-    del out["regression_suspects"]
-    out["n_load_flagged"] = len(load_flagged)
-    out["n_regression_suspects"] = len(suspects)
-    out["n_queries"] = len(timings)
-    out["full_detail"] = "BENCH_FULL.json"
-    kept = printed_subset(timings, prev_printed,
-                          char_budget=10 ** 9)   # order only; trim below
-    out["queries"] = {k: timings[k] for k in kept}
-    out["n_elided"] = len(timings) - len(kept)
-    while len(json.dumps(out, separators=(",", ":"))) > 1700 and kept:
-        kept.pop()
+    out = {k: full[k] for k in ("metric", "value", "unit", "sf",
+                                "exec_cpu_s")}
+    out.update(n_queries=len(timings), n_regression_suspects=len(suspects),
+               full_detail="BENCH_FULL.json")
+    # records are compared by their printed "queries": print the previous
+    # record's set, plus whatever else fits
+    kept = printed_subset(timings, prev_full.get("printed_set") or [],
+                          char_budget=10 ** 9)    # order only; trim below
+    while True:
         out["queries"] = {k: timings[k] for k in kept}
         out["n_elided"] = len(timings) - len(kept)
-    # the NEXT record prints this same set (plus whatever extras fit)
+        if not kept or len(json.dumps(out, separators=(",", ":"))) \
+                <= LINE_BUDGET:
+            break
+        kept.pop()
     full["printed_set"] = kept
-    # Full per-query detail on disk: the driver keeps only the last 2000
-    # chars of stdout, so a 106-query JSON line (~4.5k chars) gets its head
-    # truncated and fails to parse (this is exactly what produced
-    # BENCH_r03.json "parsed": null). Persist everything here.
-    with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
+    with open(os.path.join(HERE, "BENCH_FULL.json"), "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
     print(json.dumps(out, separators=(",", ":")))
 

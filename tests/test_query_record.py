@@ -68,6 +68,60 @@ def test_digest_counts_final_plan_operators():
         "final"] is False
 
 
+# A cached relation's adaptive plan is printed under each scan of it, at an
+# indent of its own: here its Initial Plan root (Exchange (7)) sits at the
+# column the outer join's branches go on at.
+NESTED_PLAN = """\
+OverwriteByExpression (20)
++- AdaptiveSparkPlan (19)
+   +- == Final Plan ==
+      ResultQueryStage (18)
+      +- * BroadcastHashJoin LeftOuter BuildRight (17)
+         :- * BroadcastNestedLoopJoin Cross BuildRight (9)
+         :  :- InMemoryTableScan (1)
+         :  :     +- InMemoryRelation (2)
+         :  :           +- AdaptiveSparkPlan (8)
+      +- == Final Plan ==
+         ResultQueryStage (6)
+         +- Exchange (5)
+            +- Scan parquet  (3)
+      +- == Initial Plan ==
+         Exchange (7)
+         +- Scan parquet  (3)
+         :  +- BroadcastQueryStage (12)
+         :     +- BroadcastExchange (11)
+         :        +- Exchange (10)
+         +- BroadcastQueryStage (16)
+            +- BroadcastExchange (15)
+               +- InMemoryTableScan (13)
+                     +- InMemoryRelation (2)
+                           +- AdaptiveSparkPlan (8)
+      +- == Final Plan ==
+         ResultQueryStage (6)
+         +- Exchange (5)
+            +- Scan parquet  (3)
+      +- == Initial Plan ==
+         Exchange (7)
+         +- Scan parquet  (3)
+   +- == Initial Plan ==
+      BroadcastHashJoin LeftOuter BuildRight (21)
+      :- Exchange (22)
+      +- SortMergeJoin Inner (23)
+
+(19) AdaptiveSparkPlan
+Arguments: isFinalPlan=true
+"""
+
+
+def test_digest_keeps_the_tree_around_a_nested_initial_plan():
+    """The outer tree goes on after a nested Initial Plan subtree closes
+    (Exchange (10) counts); the cached plan's Exchange (5), printed under
+    both scans, counts once; the outer Initial Plan's SMJ does not."""
+    assert query_record.digest(NESTED_PLAN) == {
+        "final": True, "exch": 2, "bhj": 1, "smj": 0, "bnlj": 1,
+        "cart": 0, "py": 0, "topk_limit": False}
+
+
 def test_live_record_eval_map_pk(spark, sf_dir):
     from perfbench.trace import Tracer
 

@@ -126,6 +126,25 @@ def test_bpe_classic_merges(spark):
     ]
 
 
+def test_bpe_refuses_a_vocabulary_past_max_vocab(spark, monkeypatch):
+    """Training holds the whole vocabulary in one partition: past
+    bpe.MAX_VOCAB distinct words it fails with a ValueError, not a
+    worker running out of memory; at the limit it trains."""
+    import pytest
+
+    from hadoop_ir_spark.operators import bpe
+
+    words = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
+    toks = spark.createDataFrame(
+        [(w,) for w, c in words for _ in range(c)], "term string")
+    monkeypatch.setattr(bpe, "MAX_VOCAB", 4)
+    assert bpe.train_bpe(toks, num_merges=1).count() == 1
+    monkeypatch.setattr(bpe, "MAX_VOCAB", 3)
+    with pytest.raises(Exception, match=r"ValueError: train_bpe: the "
+                       r"vocabulary has more than 3 distinct words"):
+        bpe.train_bpe(toks, num_merges=1).collect()
+
+
 def test_bpe_merge_is_symbol_boundary_aligned(spark):
     """The merge rewrite must compare WHOLE symbols, not substrings:
     with symbols [a, ab] applying merge (a, a) must be a no-op (a naive

@@ -9,8 +9,9 @@ store the build has to make (``catalog.memo_store``) runs in a ``store``
 span inside ``build``, so it is not in ``build``'s own counters; the
 record has a ``store`` layer only for the query that built one. Each
 layer reports the tracer's generic counters. The digest counts the operators
-of the plan the noop write ran after adaptive execution: the newest SQL
-execution in the status store, printed with ``isFinalPlan=true``.
+of the plan the noop write ran after adaptive execution, each operator id
+once: the first root SQL execution the status store holds from the write
+on, printed with ``isFinalPlan=true``.
 
 One JSON line per query goes to stdout. Without query names the whole
 catalog runs and PLAN_AUDIT.md is rewritten. ``--plans-dir DIR`` writes
@@ -40,24 +41,41 @@ from perfbench.trace import GENERIC, Tracer  # noqa: E402
 FIELDS = tuple(GENERIC)
 
 # one operator line of a formatted plan tree: "+- * SortMergeJoin Inner (5)"
-NODE = re.compile(r"^[ :+\-]*(?:\* )?([A-Z]\w*)(?: [^()]*)? \(\d+\)$")
+NODE = re.compile(r"^[ :+\-]*(?:\* )?([A-Z]\w*)(?: [^()]*)? \((\d+)\)$")
 PYTHON = re.compile(r"Python|Pandas|InArrow")
 
 
 def final_operators(plan: str) -> list[str]:
-    """Operator names of the plan trees in ``plan``, leaving out every
-    ``== Initial Plan ==`` subtree (AQE prints it next to the final one)."""
-    names, skip_from = [], None
+    """Operator names of the plan trees in ``plan``, each operator id once
+    (a cached relation's plan is printed under every scan of it), leaving
+    out every ``== Initial Plan ==`` subtree (AQE prints it next to the
+    final one).
+
+    The subtree is the line after the marker, its root at column ``r``,
+    and the lines its connectors reach: deeper lines, and lines at ``r``
+    up to its last child (``+-`` at ``r``). A nested adaptive plan (a
+    cached relation's) is printed at an indent of its own, so the tree
+    around it can go on at ``r``; a column test alone would drop it.
+    Where that tree goes on deeper than ``r``, the text cannot tell it from
+    the subtree and it is dropped too."""
+    names, seen, root, closed, after_marker = [], set(), None, False, False
     for line in plan.splitlines():
-        col = len(line) - len(line.lstrip(" :+-"))
-        if skip_from is not None and col >= skip_from and line.strip():
+        col = len(line) - len(line.lstrip(" "))
+        if after_marker:
+            root, closed, after_marker = col, False, False
             continue
-        skip_from = None
+        if root is not None and line.strip() and (
+                col > root or col == root and not closed
+                and line[col] in "+:"):
+            closed = closed or (col == root and line[col] == "+")
+            continue
+        root = None
         if "== Initial Plan ==" in line:
-            skip_from = col
+            after_marker = True
             continue
         m = NODE.match(line)
-        if m:
+        if m and m.group(2) not in seen:
+            seen.add(m.group(2))
             names.append(m.group(1))
     return names
 
@@ -76,11 +94,24 @@ def digest(plan: str) -> dict:
     }
 
 
-def final_plan(spark) -> str:
-    """Plan of the newest SQL execution (the store keeps them, UI off)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    newest = store.executionsList(store.executionsCount() - 1, 1)
-    return newest.apply(0).physicalPlanDescription()
+def newest_execution(store) -> int:
+    """Id of the newest SQL execution in ``store``, -1 if it holds none."""
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def final_plan(store, since: int) -> str:
+    """Plan of the first root SQL execution newer than execution ``since``:
+    the one a write started after ``since`` was noted. Executions it
+    nested (``rootExecutionId`` not its own id) and later ones are passed
+    over. Ids grow by one per execution; the store keeps the newest ones
+    (UI off), sorted by id."""
+    k = newest_execution(store) - since
+    execs = store.executionsList(max(store.executionsCount() - k, 0), k)
+    for e in (execs.apply(i) for i in range(execs.size())):
+        if e.executionId() > since and e.rootExecutionId() == e.executionId():
+            return e.physicalPlanDescription()
+    raise RuntimeError(f"no root SQL execution after execution {since}")
 
 
 def traced_stores(tracer: Tracer):
@@ -107,19 +138,23 @@ def record(spark, tracer: Tracer, name: str, sf_dir: str) -> tuple[dict, str]:
     """(record, final plan text) of one catalog query. ``tracer`` must
     serve the whole session: its span groups are numbered per tracer."""
     spans = {}
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
     try:
         with tracer.span("build") as spans["build"], traced_stores(tracer):
             df = catalog.QUERIES[name](spark, sf_dir)
         with tracer.span("optimize") as spans["optimize"]:
             df._jdf.queryExecution().optimizedPlan()
+        bus.waitUntilEmpty()    # every execution of the build is stored
+        since = newest_execution(store)
         with tracer.span("execute") as spans["execute"]:
             df.write.format("noop").mode("overwrite").save()
     finally:
         # the status store is fed by the listener bus: drain it so the
         # counters and the final plan are complete
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        bus.waitUntilEmpty()
         tracer.finish_iteration()
-    plan = final_plan(spark)
+    plan = final_plan(store, since)
     rec = {"name": name}
     for key, s in spans.items():
         rec[key] = layer([s])

@@ -32,7 +32,8 @@ fi
 if [ "${1:-}" != "quick" ]; then
   # the whole catalog took 505 s at sf0.01 on 4 cores
   run timeout 1500 python tools/query_record.py /root/testdata/sf0.01
-  # bench runs each query twice since the r7 min-of-2 change
+  # bench: every query twice, each rep in a tracer span (jobs, executor
+  # CPU); the whole catalog took 1,125 s at sf0.1 on 4 cores
   run timeout 1800 python bench.py
 fi
 
