@@ -417,38 +417,63 @@ def _manifest_lock(index_dir: str, timeout_s: float = 60.0,
 
 
 class _SnapAttempt:
-    """A staged write cycle at snap id ``sid``: tables land in
-    ``table/snap=<sid>.tmp-<token>`` dirs no other writer can name, then
-    ``commit`` renames them into visibility and swaps the manifest
-    atomically under the lock — after verifying ``next_snap`` is still
-    ``sid`` (the CAS). On CAS failure the attempt aborts and raises."""
+    """The one store writer: a staged write cycle at snap id ``sid``.
+    Tables land in ``table/snap=<sid>.tmp-<token>`` dirs no other writer
+    can name. Used as a context manager: an exception aborts (staged dirs
+    removed, manifest untouched), a clean exit commits — under the lock,
+    after verifying ``next_snap`` is still ``sid`` (the CAS), the staged
+    dirs are renamed into visibility and the manifest is swapped
+    atomically. On CAS failure the attempt aborts and raises.
 
-    def __init__(self, index_dir: str, sid: int):
+    ``man`` is the manifest the writer read; ``sid`` is its
+    ``next_snap``. ``man=None`` starts a store at snap 0 and replaces
+    whatever manifest ``index_dir`` holds, with no CAS (a build). The
+    commit appends ``sid`` to the snap list and moves ``next_snap`` and
+    ``last_snap``; writers add their own manifest keys in ``edits``,
+    built from ``man`` (the CAS guarantees it is still current), or set
+    ``manifest`` to replace the whole manifest (compaction)."""
+
+    def __init__(self, index_dir: str, man: dict | None):
         self.index_dir = index_dir
-        self.sid = sid
+        self.man = man
+        self.sid = man["next_snap"] if man is not None else 0
         self.token = uuid.uuid4().hex[:12]
         self.tables: list[str] = []
+        self.edits: dict = {}
+        self.manifest: dict | None = None
+
+    def __enter__(self) -> "_SnapAttempt":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is None:
+            self.commit()
+        else:
+            self.abort()
 
     def _tmp(self, table: str) -> str:
         return os.path.join(self.index_dir, table,
                             f"snap={self.sid}.tmp-{self.token}")
 
     def write(self, df: DataFrame, table: str) -> None:
+        """The store's one write rule: range-partition and sort by the
+        table's keys, so every snap dir keeps its parquet min/max
+        pruning. The table is recorded first, so an abort also removes a
+        partial write."""
+        self.tables.append(table)
         (df.repartitionByRange(*_RANGE_KEYS[table])
          .sortWithinPartitions(*_SORT_KEYS[table])
          .write.mode("overwrite").parquet(self._tmp(table)))
-        self.tables.append(table)
 
     def abort(self) -> None:
         for t in self.tables:
             shutil.rmtree(self._tmp(t), ignore_errors=True)
 
-    def commit(self, mutate_manifest) -> dict:
-        """``mutate_manifest(man) -> man`` builds the post-commit
-        manifest from the state re-read under the lock."""
+    def commit(self) -> None:
         with _manifest_lock(self.index_dir):
-            man = _read_manifest(self.index_dir)
-            if man["next_snap"] != self.sid:
+            man = (_read_manifest(self.index_dir)
+                   if self.man is not None else None)
+            if man is not None and man["next_snap"] != self.sid:
                 self.abort()
                 raise ConcurrentWriteError(
                     f"dedup index at {self.index_dir}: a concurrent "
@@ -456,16 +481,24 @@ class _SnapAttempt:
                     f"{man['next_snap'] - 1} while this attempt staged "
                     f"snap {self.sid} — staged dirs removed; re-run the "
                     f"update against the current manifest")
-            # crashed earlier attempts may have left final dirs at this
-            # (never-visible) id — clear ALL tables, then rename ours in
-            _clear_snap_dirs(self.index_dir, self.sid)
+            # a crashed earlier attempt may have left final dirs at this
+            # never-visible id, for a different table subset than this
+            # one writes (an add batch crashing, then a removal-only
+            # batch reusing the id): clear EVERY table's, so none leaks
+            # into visibility at the swap
+            for t in _ALL_TABLES:
+                shutil.rmtree(os.path.join(self.index_dir, t,
+                                           f"snap={self.sid}"),
+                              ignore_errors=True)
             for t in self.tables:
                 os.rename(self._tmp(t),
                           os.path.join(self.index_dir, t,
                                        f"snap={self.sid}"))
-            new_man = mutate_manifest(man)
-            _write_manifest(self.index_dir, new_man)
-            return new_man
+            base = man or {"snaps": []}
+            _write_manifest(self.index_dir, self.manifest or {
+                **base, "snaps": base["snaps"] + [self.sid],
+                "next_snap": self.sid + 1, "last_snap": self.sid,
+                **self.edits})
 
 
 def _params(k, num_hashes, bands, min_len, portable,
@@ -608,67 +641,63 @@ def seed_gram_deltas(spark: SparkSession, index_dir: str,
     return _delta_log(spark, index_dir, "seed_grams", snaps)
 
 
-def load_dedup_index(spark: SparkSession, index_dir: str,
-                     snaps=None) -> dict[str, DataFrame]:
-    """The index's LOGICAL content: per-doc tables tombstone-resolved,
-    seed-gram counts delta-summed (n > 0). This is the view a
-    from-scratch ``build_dedup_index`` over the surviving corpus would
-    materialize — equality is pinned in tests/test_dedup_incremental.py."""
+def _store_view(spark: SparkSession, index_dir: str, man: dict,
+                row_snaps: list[int], tomb_snaps: list[int]
+                ) -> tuple[dict[str, DataFrame | None], dict[int, int]]:
+    """The store's LOGICAL content over ``row_snaps``, with the
+    tombstones of ``tomb_snaps`` applied: delta tables summed and kept
+    where the count is > 0; per-doc tables tombstone-resolved (None when
+    no dir of ``row_snaps`` has the table); each trained block's
+    artifact and its per-doc rows, when the artifact's snap is in
+    ``row_snaps``; cc labels with the alias map of their own label
+    snaps. ``load_dedup_index`` reads the visible snaps with their own
+    tombstones; compaction reads the merged prefix with every visible
+    tombstone. Returns the tables and the cc alias map (empty without
+    cc)."""
     out = {}
-    for t in INDEX_TABLES:
+    for t in (*INDEX_TABLES, EMBEDDINGS_TABLE):
         if t in DELTA_TABLES:
             key, val, _ = DELTA_TABLES[t]
-            out[t] = (_delta_log(spark, index_dir, t, snaps)
+            out[t] = (_delta_log(spark, index_dir, t, row_snaps)
                       .groupBy(key).agg(F.sum(val).alias(val))
                       .filter(F.col(val) > 0))
         else:
-            df = _live_rows(spark, index_dir, t, snaps)
-            if df is None:
-                raise FileNotFoundError(
-                    f"dedup index at {index_dir} has no visible data for "
-                    f"table {t!r}")
-            out[t] = df
-    emb = _live_rows(spark, index_dir, EMBEDDINGS_TABLE, snaps)
-    if emb is not None:
-        out[EMBEDDINGS_TABLE] = emb
+            out[t] = _live_rows_tomb(spark, index_dir, t, row_snaps,
+                                     tomb_snaps)
+    for blk, spec in _TRAINED.items():
+        if man.get(blk) and man[blk][spec.art_snap] in row_snaps:
+            out[spec.art_table] = _artifact(spark, index_dir, man, blk)
+            out[spec.rows] = _live_rows_tomb(
+                spark, index_dir, spec.rows,
+                [s for s in man[blk][spec.rows_snaps] if s in row_snaps],
+                tomb_snaps)
+    amap = {}
+    if man.get("cc"):
+        out[CC_LABELS], amap = _cc_view(spark, index_dir, man,
+                                        row_snaps, tomb_snaps)
+    return out, amap
+
+
+def load_dedup_index(spark: SparkSession, index_dir: str,
+                     snaps=None) -> dict[str, DataFrame]:
+    """The index's LOGICAL content (``_store_view`` over the visible
+    snaps, one manifest read): the view a from-scratch
+    ``build_dedup_index`` over the surviving corpus would materialize —
+    equality is pinned in tests/test_dedup_incremental.py. The ``src``
+    training-provenance tag of trained rows is maintenance metadata for
+    ``ann_health``, not logical content, and is dropped."""
     man = _read_manifest(index_dir)
     vis = list(man["snaps"]) if snaps is None else list(snaps)
-    for blk, spec in _TRAINED.items():
-        if man.get(blk) and man[blk][spec.art_snap] in vis:
-            out[spec.art_table] = _artifact(spark, index_dir, man, blk)
-            rows = _block_rows(spark, index_dir, man, blk, vis)
-            if rows is not None:
-                # the src training-provenance tag (r12) is maintenance
-                # metadata for ann_health, not logical index content
-                out[spec.rows] = rows.drop("src")
-    if man.get("cc"):
-        try:
-            out[CC_LABELS] = cc_labels_frame(spark, index_dir, snaps)
-        except FileNotFoundError:
-            pass          # cc snaps outside the caller's visible set
-    return out
-
-
-def _clear_snap_dirs(index_dir: str, sid: int) -> None:
-    """Remove EVERY table's ``snap=<sid>`` dir before a write cycle at
-    ``sid``: per-table overwrite only clobbers the tables the CURRENT
-    call writes, so a crashed earlier attempt that wrote a different
-    table subset (e.g. an add-batch crash followed by a removal-only
-    batch reusing the id) would otherwise leak half-indexed rows into
-    visibility at the manifest swap."""
-    for t in _ALL_TABLES:
-        shutil.rmtree(os.path.join(index_dir, t, f"snap={sid}"),
-                      ignore_errors=True)
-
-
-def _write_snap_table(df: DataFrame, index_dir: str, table: str,
-                      sid: int) -> None:
-    """One snap dir, overwrite mode: a crashed fold's partial leftovers
-    at the same (not-yet-visible) snap id are clobbered on replay."""
-    (df.repartitionByRange(*_RANGE_KEYS[table])
-     .sortWithinPartitions(*_SORT_KEYS[table])
-     .write.mode("overwrite")
-     .parquet(os.path.join(index_dir, table, f"snap={sid}")))
+    out, _ = _store_view(spark, index_dir, man, vis, vis)
+    for t in INDEX_TABLES:
+        if out[t] is None:
+            raise FileNotFoundError(
+                f"dedup index at {index_dir} has no visible data for "
+                f"table {t!r}")
+    for spec in _TRAINED.values():
+        if out.get(spec.rows) is not None:
+            out[spec.rows] = out[spec.rows].drop("src")
+    return {t: df for t, df in out.items() if df is not None}
 
 
 # ---------------------------------------------------------------------------
@@ -741,9 +770,10 @@ def build_dedup_index(docs: DataFrame, out_dir: str, *, k: int = 3,
                       emb_id_col: str = "docno",
                       emb_vec_col: str = "embedding") -> None:
     """One pass over the initial corpus snapshot → ``snap=0`` of every
-    table plus the manifest. ``embeddings`` (optional) persists the
-    standing vector store alongside the text fingerprints so
-    ``embedding_incremental`` is index-served like its siblings."""
+    table plus the manifest, replacing any store at ``out_dir``.
+    ``embeddings`` (optional) persists the standing vector store
+    alongside the text fingerprints so ``embedding_incremental`` is
+    index-served like its siblings."""
     d = _norm(docs, id_col, text_col)
     os.makedirs(out_dir, exist_ok=True)
     frames = _fingerprint_frames(d, k=k, num_hashes=num_hashes,
@@ -753,14 +783,12 @@ def build_dedup_index(docs: DataFrame, out_dir: str, *, k: int = 3,
     if embeddings is not None:
         frames[EMBEDDINGS_TABLE] = _norm_emb(embeddings, emb_id_col,
                                              emb_vec_col)
-    for t, df in frames.items():
-        _write_snap_table(df, out_dir, t, 0)
-    _write_manifest(out_dir, {
-        "snaps": [0], "next_snap": 1, "last_snap": 0,
-        "last_batch_id": None, "last_batch_snap": None,
-        "params": _params(k, num_hashes, bands, min_len, portable,
-                          win_k, win_w),
-    })
+    with _SnapAttempt(out_dir, None) as att:
+        for t, df in frames.items():
+            att.write(df, t)
+        att.edits.update(last_batch_id=None, last_batch_snap=None,
+                         params=_params(k, num_hashes, bands, min_len,
+                                        portable, win_k, win_w))
 
 
 def update_dedup_index(spark: SparkSession, index_dir: str,
@@ -827,9 +855,13 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
     man = _read_manifest(index_dir)
     _check_params(man, _params(k, num_hashes, bands, min_len, portable,
                                win_k, win_w))
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    try:
+    with _SnapAttempt(index_dir, man) as att:
+        if batch_id is not None:
+            # the replay cursor must name the BATCH's snap, not merely
+            # the newest one — a manual (non-batch) update landing in
+            # the crash window would otherwise poison the pre-fold view
+            att.edits.update(last_batch_id=batch_id,
+                             last_batch_snap=att.sid)
         deltas: dict[str, list[DataFrame]] = {t: [] for t in DELTA_TABLES}
         if new_docs is not None:
             d = _norm(new_docs, id_col, text_col)
@@ -870,6 +902,8 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
                 rows = _pq_encode_docs(enc_in, art, man["pq"]["m"],
                                        man["pq"]["dims"], src="fold")
             att.write(rows, _TRAINED[blk].rows)
+            key = _TRAINED[blk].rows_snaps
+            att.edits[blk] = {**man[blk], key: man[blk][key] + [att.sid]}
         if removed_docs is not None:
             r = _norm(removed_docs, id_col, text_col)
             att.write(r.select("docno").distinct(), TOMBSTONES)
@@ -890,7 +924,6 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
                 df = (parts[0].unionByName(parts[1])
                       .groupBy(key).agg(F.sum(val).cast("long").alias(val)))
             att.write(df.filter(F.col(val) != 0), t)
-        wrote_cc = False
         if new_docs is not None and man.get("cc"):
             # incremental duplicate-cluster maintenance: merge the
             # snapshot's pair edges into the standing labels (new label
@@ -904,32 +937,8 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
                 removed_ids)
             att.write(new_rows, CC_LABELS)
             att.write(aliases, CC_ALIAS)
-            wrote_cc = True
-    except Exception:
-        att.abort()
-        raise
-
-    def _mut(m: dict) -> dict:
-        m = dict(m)
-        m["snaps"] = m["snaps"] + [sid]
-        m["next_snap"] = sid + 1
-        m["last_snap"] = sid
-        if batch_id is not None:
-            m["last_batch_id"] = batch_id
-            # the replay cursor must name the BATCH's snap, not merely
-            # the newest one — a manual (non-batch) update landing in
-            # the crash window would otherwise poison the pre-fold view
-            m["last_batch_snap"] = sid
-        for blk in folded:
-            key = _TRAINED[blk].rows_snaps
-            m[blk] = {**m[blk], key: m[blk][key] + [sid]}
-        if wrote_cc:
-            cc = dict(m["cc"])
-            cc["label_snaps"] = cc["label_snaps"] + [sid]
-            m["cc"] = cc
-        return m
-
-    att.commit(_mut)
+            att.edits["cc"] = {**man["cc"], "label_snaps":
+                               man["cc"]["label_snaps"] + [att.sid]}
 
 
 def compact_dedup_index(spark: SparkSession, index_dir: str, *,
@@ -991,57 +1000,32 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, *,
         for s in merge)
     if len(merge) <= 1 and not merge_tomb:
         return        # already compact: nothing to merge, nothing to fold
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    # the merged view: row tables restricted to the merge prefix but
-    # with ALL visible tombstones applied (passing the full snap list to
-    # the tombstone side); seed-gram deltas summed over the prefix only
-    try:
-        out = {}
-        for t in INDEX_TABLES:
-            if t in DELTA_TABLES:
-                key, val, _ = DELTA_TABLES[t]
-                out[t] = (_delta_log(spark, index_dir, t, merge)
-                          .groupBy(key).agg(F.sum(val).alias(val))
-                          .filter(F.col(val) > 0))
-            else:
-                out[t] = _live_rows_tomb(spark, index_dir, t, merge,
-                                         old_snaps)
-        emb = _live_rows_tomb(spark, index_dir, EMBEDDINGS_TABLE, merge,
-                              old_snaps)
-        if emb is not None:
-            out[EMBEDDINGS_TABLE] = emb
+    with _SnapAttempt(index_dir, man) as att:
+        sid = att.sid
+        # the merged view: the merge prefix with ALL visible tombstones
+        # applied; per-doc rows (trained blocks' too) fold into the new
+        # snap, an artifact is copied verbatim if its snap merges, and
+        # prefix label rows get the PREFIX aliases folded in (kept rows
+        # were written after every prefix alias, so those aliases can
+        # only target prefix rows; kept snaps keep their alias dirs,
+        # which the reader still applies)
+        out, prefix_amap = _store_view(spark, index_dir, man, merge,
+                                       old_snaps)
         blocks = {}
         for blk, spec in _TRAINED.items():
             if not man.get(blk):
                 continue
-            # each trained block rides the same merge: per-doc rows in
-            # the merged prefix fold (tombstones applied) into the new
-            # snap; the artifact is copied verbatim if its snap merges
             blocks[blk] = blk_man = dict(man[blk])
-            rows_merge = [s for s in blk_man[spec.rows_snaps] if s in merge]
             blk_man[spec.rows_snaps] = [s for s in blk_man[spec.rows_snaps]
                                         if s in kept]
-            if rows_merge:
-                out[spec.rows] = _live_rows_tomb(
-                    spark, index_dir, spec.rows, rows_merge, old_snaps)
+            if any(s in merge for s in man[blk][spec.rows_snaps]):
                 blk_man[spec.rows_snaps].insert(0, sid)
             if blk_man[spec.art_snap] in merge:
-                out[spec.art_table] = _artifact(spark, index_dir, man, blk)
                 blk_man[spec.art_snap] = sid
         new_cc = man.get("cc")
         if new_cc:
-            # merged-prefix label rows get the PREFIX aliases folded in
-            # (kept rows were written after every prefix alias, so those
-            # aliases can only target prefix rows); kept snaps keep
-            # their alias dirs, which the reader still applies
-            l_merge = [s for s in new_cc["label_snaps"] if s in merge]
             new_lsnaps = [s for s in new_cc["label_snaps"] if s in kept]
-            prefix_amap = _cc_alias_map(spark, index_dir, l_merge)
-            rows = _live_rows_tomb(spark, index_dir, CC_LABELS,
-                                   l_merge, old_snaps) if l_merge else None
-            if rows is not None:
-                out[CC_LABELS] = _cc_apply_aliases(rows, prefix_amap)
+            if out[CC_LABELS] is not None:
                 new_lsnaps = [sid] + new_lsnaps
             # persist the retraction evidence this compaction may fold
             # out of visibility with the merged tombstone dirs (ADVICE
@@ -1074,30 +1058,19 @@ def compact_dedup_index(spark: SparkSession, index_dir: str, *,
             new_cc = {**new_cc, "label_snaps": new_lsnaps,
                       "dead_names": dead_names, "touched_labels": touched}
         for t, df in out.items():
-            if df is None:
-                continue
-            att.write(df, t)
-    except Exception:
-        att.abort()
-        raise
-    lbs = man.get("last_batch_snap")
-
-    def _mut(m: dict) -> dict:
+            if df is not None:
+                att.write(df, t)
         # the CAS guarantees no writer committed since ``man`` was read,
         # so the precomputed merge/kept split is still the full story
-        out_man = {
+        lbs = man.get("last_batch_snap")
+        att.manifest = {
             "snaps": [sid] + kept, "next_snap": sid + 1,
             "last_snap": kept[-1] if kept else sid,
-            "last_batch_id": m.get("last_batch_id"),
+            "last_batch_id": man.get("last_batch_id"),
             "last_batch_snap": lbs if lbs in kept else None,
-            "params": m["params"],
+            "params": man["params"], **blocks,
+            **({"cc": new_cc} if new_cc else {}),
         }
-        out_man.update(blocks)
-        if new_cc:
-            out_man["cc"] = new_cc
-        return out_man
-
-    att.commit(_mut)
 
 
 def vacuum_dedup_index(index_dir: str, *, min_age_s: float = 0.0,
@@ -1553,24 +1526,11 @@ def _train_block(spark: SparkSession, index_dir: str, blk: str,
     art, encode = fit(man, emb)
     art = art.localCheckpoint()
     rows, params = encode(art)
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    try:
+    with _SnapAttempt(index_dir, man) as att:
         att.write(art, spec.art_table)
         att.write(rows, spec.rows)
-    except Exception:
-        att.abort()
-        raise
-
-    def _mut(m: dict) -> dict:
-        m = dict(m)
-        m["snaps"] = m["snaps"] + [sid]
-        m["next_snap"] = sid + 1
-        m["last_snap"] = sid
-        m[blk] = {**params, spec.art_snap: sid, spec.rows_snaps: [sid]}
-        return m
-
-    att.commit(_mut)
+        att.edits[blk] = {**params, spec.art_snap: att.sid,
+                          spec.rows_snaps: [att.sid]}
 
 
 def _assign_to_centroids(emb: DataFrame, centroids: DataFrame,
@@ -2354,25 +2314,11 @@ def build_cc_labels(spark: SparkSession, index_dir: str, *,
     comp = dedup.connected_components(
         _cc_edges(*_cc_pair_tables(spark, index_dir, man["snaps"]), tau),
         "a", "b", algorithm="star")
-    sid = man["next_snap"]
-    att = _SnapAttempt(index_dir, sid)
-    try:
+    with _SnapAttempt(index_dir, man) as att:
         att.write(comp.select(F.col("node").alias("docno"),
                               F.col("cluster_id").alias("label")),
                   CC_LABELS)
-    except Exception:
-        att.abort()
-        raise
-
-    def _mut(m: dict) -> dict:
-        m = dict(m)
-        m["snaps"] = m["snaps"] + [sid]
-        m["next_snap"] = sid + 1
-        m["last_snap"] = sid
-        m["cc"] = {"tau": tau, "label_snaps": [sid]}
-        return m
-
-    att.commit(_mut)
+        att.edits["cc"] = {"tau": tau, "label_snaps": [att.sid]}
 
 
 def _cc_fold_frames(spark: SparkSession, index_dir: str, man: dict,
@@ -2569,6 +2515,21 @@ def _cc_fold_frames(spark: SparkSession, index_dir: str, man: dict,
     return new_rows, aliases
 
 
+def _cc_view(spark: SparkSession, index_dir: str, man: dict,
+             row_snaps: list[int], tomb_snaps: list[int]
+             ) -> tuple[DataFrame | None, dict[int, int]]:
+    """The cc label rows of the label snaps in ``row_snaps``, the
+    tombstones of ``tomb_snaps`` applied, re-pointed through the alias
+    map of those same label snaps; None when no label snap is in
+    ``row_snaps``. Returns the rows and that map."""
+    lsnaps = [s for s in man["cc"]["label_snaps"] if s in row_snaps]
+    amap = _cc_alias_map(spark, index_dir, lsnaps)
+    labels = _live_rows_tomb(spark, index_dir, CC_LABELS, lsnaps,
+                             tomb_snaps)
+    return (None if labels is None
+            else _cc_apply_aliases(labels, amap)), amap
+
+
 def cc_labels_frame(spark: SparkSession, index_dir: str,
                     snaps=None) -> DataFrame:
     """The CURRENT duplicate-cluster labels: (docno, label) for every
@@ -2582,14 +2543,13 @@ def cc_labels_frame(spark: SparkSession, index_dir: str,
         raise ValueError(
             f"dedup index at {index_dir} has no cc labels — run "
             f"build_cc_labels first")
-    vis = _visible_snaps(index_dir, snaps)
-    lsnaps = [s for s in man["cc"]["label_snaps"] if s in vis]
-    rows = _live_rows_tomb(spark, index_dir, CC_LABELS, lsnaps, vis)
-    if rows is None:
+    vis = list(man["snaps"]) if snaps is None else list(snaps)
+    labels, _ = _cc_view(spark, index_dir, man, vis, vis)
+    if labels is None:
         raise FileNotFoundError(
             f"dedup index at {index_dir} has no visible cc_labels data "
             f"for snaps {vis}")
-    return _cc_apply_aliases(rows, _cc_alias_map(spark, index_dir, lsnaps))
+    return labels
 
 
 def maintain_dedup_index(spark: SparkSession, index_dir: str, *,

@@ -63,6 +63,14 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
+def _ann_queries(spark, sf_dir):
+    """(qid, embedding): every ``ANN_QUERY_EVERY``-th vector, the query
+    set of the ANN serving queries."""
+    return _emb(spark, sf_dir).filter(
+        F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
+        F.col("vec_id").alias("qid"), "embedding")
+
+
 def _assert_offset(spark, sf_dir):
     """ADVICE r8: injected re-crawl ids are id + 10M — a corpus whose
     real ids reach that range would corrupt precedence in both the
@@ -689,9 +697,7 @@ def q_indexed_ann_topk(spark, sf_dir):
     ::test_ann_index_fold_equals_rebuild), serving from the index equals
     assigning the union corpus to the standing-trained centroids."""
     idx_dir = _ann_index_dir(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-        F.col("vec_id").alias("qid"), "embedding")
+    queries = _ann_queries(spark, sf_dir)
     out = dinc.indexed_ann_topk(queries, idx_dir, k=ANN_IDX_K,
                                 nprobe=ANN_IDX_NPROBE)
     return out.select("qid", "docno", "cosine",
@@ -778,9 +784,7 @@ FROM ranked WHERE rank <= {ANN_IDX_K}
         equals encoding the union corpus against the standing-trained
         codebook."""
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return dinc.indexed_pq_topk(queries, idx_dir, k=ANN_IDX_K)
 
     ivfpq_ctes = f"""
@@ -892,9 +896,7 @@ FROM ranked WHERE rank <= {ANN_IDX_K}
         candidate CTEs with the indexed_pq_topk codebook/LUT CTEs,
         restricting the scored join to the probed candidates."""
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return dinc.indexed_ivfpq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE)
 
@@ -934,9 +936,7 @@ FROM rr WHERE rank <= {ANN_IDX_K}
         query touches are the O(|queries|·refine) shortlist rows — the
         100 TB recall/cost compromise production ANN serving runs."""
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return dinc.indexed_ivfpq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE,
                                        refine=ANN_REFINE)
@@ -981,9 +981,7 @@ LEFT JOIN h2 ON h2.qid = qs.qid
         from hadoop_ir_spark.operators import similarity as sim
 
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         exact = QUERIES["ann_cosine_topk"](spark, sf_dir)
         adc = (dinc.indexed_ivfpq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE)
@@ -1049,8 +1047,7 @@ FROM rr WHERE rank <= {ANN_IDX_K}
         literal definition of pre-filtering — plus the refined tail."""
         idx_dir = _ann_index_dir(spark, sf_dir)
         emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         allow = emb.filter(F.col("vec_id") % 2 == 1).select(
             F.col("vec_id").alias("docno"))
         return dinc.indexed_ivfpq_topk(
@@ -1100,8 +1097,7 @@ LEFT JOIN h2 ON h2.qid = qs.qid
 
         idx_dir = _ann_index_dir(spark, sf_dir)
         emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         allow = emb.filter(F.col("vec_id") % 2 == 1).select(
             F.col("vec_id").alias("docno"))
         exact_f = sim.cosine_topk(
@@ -1248,9 +1244,7 @@ SELECT qid, docno, rrf, CAST(rank AS INT) AS rank FROM (
 
         idx_dir = _ann_index_dir(spark, sf_dir)
         docs = _docs(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return hybrid.hybrid_mlt_topk(
             docs, queries, idx_dir, k=ANN_IDX_K, n_terms=MLT_TERMS,
             nprobe=ANN_IDX_NPROBE, refine=ANN_REFINE, rrf_c=HY_RRF_C,
@@ -1300,9 +1294,7 @@ qset AS (SELECT DISTINCT qid FROM brute),
         from hadoop_ir_spark.operators import similarity as sim
 
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         exact = QUERIES["ann_cosine_topk"](spark, sf_dir).localCheckpoint()
         # rank the centroid distances ONCE (r13, VERDICT r12 #7): the
         # four arms differ only in the `rn <= nprobe` cut, so they share
@@ -1474,9 +1466,7 @@ FROM ranked WHERE rank <= {ANN_IDX_K}
         retraction are the store's (tests pin fold≡rebuild and the
         IVF-retrain-invalidates-residuals discipline)."""
         idx_dir = _ann_res_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return dinc.indexed_ivfpq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE)
 
@@ -1516,9 +1506,7 @@ FROM rr WHERE rank <= {ANN_IDX_K}
         as indexed_ivfpq_refined; the residual codes buy the better
         shortlist."""
         idx_dir = _ann_res_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return dinc.indexed_ivfpq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE,
                                        refine=ANN_REFINE)
@@ -1562,9 +1550,7 @@ LEFT JOIN h2 ON h2.qid = qs.qid
         from hadoop_ir_spark.operators import similarity as sim
 
         idx_dir = _ann_res_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         exact = QUERIES["ann_cosine_topk"](spark, sf_dir)
         adc = (dinc.indexed_ivfpq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE)
@@ -1714,9 +1700,7 @@ def q_indexed_ann_kmeans_topk(spark, sf_dir):
     store equals assigning the union corpus to the standing-trained
     centers."""
     idx_dir = _ann_km_index_dir(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-        F.col("vec_id").alias("qid"), "embedding")
+    queries = _ann_queries(spark, sf_dir)
     out = dinc.indexed_ann_topk(queries, idx_dir, k=ANN_IDX_K,
                                 nprobe=ANN_IDX_NPROBE)
     return out.select("qid", "docno", "cosine",
@@ -2021,9 +2005,7 @@ FROM ranked WHERE rank <= {ANN_IDX_K}
         engine's encode (the fold≡rebuild tests carry the
         fold-vs-union half)."""
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         return dinc.indexed_ivfsq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE)
 
@@ -2056,9 +2038,7 @@ LEFT JOIN h1 ON h1.qid = qs.qid
         from hadoop_ir_spark.operators import similarity as sim
 
         idx_dir = _ann_index_dir(spark, sf_dir)
-        emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-            F.col("vec_id").alias("qid"), "embedding")
+        queries = _ann_queries(spark, sf_dir)
         exact = QUERIES["ann_cosine_topk"](spark, sf_dir)
         sqr = (dinc.indexed_ivfsq_topk(queries, idx_dir, k=ANN_IDX_K,
                                        nprobe=ANN_IDX_NPROBE)

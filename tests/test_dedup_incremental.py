@@ -12,6 +12,7 @@ removal action (VERDICT r8 #2)."""
 
 from __future__ import annotations
 
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -848,11 +849,14 @@ def test_crashed_attempt_leftovers_cleared(spark, tmp_path, snapshots):
     old, new = snapshots
     idx = str(tmp_path / "idx")
     dinc.build_dedup_index(_df(spark, old), idx)
-    sid = dinc._read_manifest(idx)["next_snap"]
-    # simulate: an add-batch crashed after writing only content_hashes
+    # simulate: an add-batch crashed after staging only content_hashes
+    # and renaming it to its final snap=<next> dir, before the swap
     ghost = _df(spark, [(999, "ghost half indexed doc")]) \
         .select("docno", F.md5("text").alias("content_hash"))
-    dinc._write_snap_table(ghost, idx, "content_hashes", sid)
+    att = dinc._SnapAttempt(idx, dinc._read_manifest(idx))
+    att.write(ghost, "content_hashes")
+    os.rename(att._tmp("content_hashes"),
+              os.path.join(idx, "content_hashes", f"snap={att.sid}"))
     # a removal-only update reuses the id and swaps the manifest
     dinc.update_dedup_index(spark, idx,
                             removed_docs=_df(spark, [old[0]]))
@@ -865,6 +869,19 @@ def test_crashed_attempt_leftovers_cleared(spark, tmp_path, snapshots):
     a, b = _index_content(spark, idx), _index_content(spark, scratch)
     for t in a:
         assert a[t] == b[t], t
+
+
+def test_rebuild_replaces_the_store_in_place(spark, tmp_path):
+    """A build into a directory that holds a store replaces it: a table
+    the new build does not write (here the embeddings) is gone from the
+    view, not left visible at snap 0."""
+    idx = str(tmp_path / "idx")
+    dinc.build_dedup_index(_docs_for(spark, range(6)), idx,
+                           embeddings=_emb_df(spark, range(6)))
+    dinc.build_dedup_index(_docs_for(spark, range(3)), idx)
+    out = dinc.load_dedup_index(spark, idx)
+    assert dinc.EMBEDDINGS_TABLE not in out
+    assert {r["docno"] for r in out["content_hashes"].collect()} == {0, 1, 2}
 
 
 def test_replay_with_manual_update_in_crash_window(spark, tmp_path):
@@ -1071,6 +1088,85 @@ def test_trainer_racing_a_fold_loses_cleanly(spark, tmp_path, monkeypatch):
     assert {r["docno"] for r in live["ann_codes"].collect()} == set(ids)
 
 
+def _trained_store(spark, idx):
+    """Twelve docs with embeddings, all three trained blocks and cc
+    labels, then one fold that adds, embeds and removes."""
+    ids = list(range(12))
+    dinc.build_dedup_index(_docs_for(spark, ids), idx,
+                           embeddings=_emb_df(spark, ids))
+    dinc.train_ann_index(spark, idx, every=4)
+    dinc.train_pq_index(spark, idx, m=4, kk=4, train_every=3, dims=8)
+    dinc.train_sq_index(spark, idx)
+    dinc.build_cc_labels(spark, idx)
+    dinc.update_dedup_index(spark, idx, _docs_for(spark, [20]),
+                            new_embeddings=_emb_df(spark, [20]),
+                            removed_docs=_docs_for(spark, [3]))
+
+
+def test_load_reads_the_manifest_once(spark, tmp_path, monkeypatch):
+    """Every table of ``load_dedup_index`` comes from ONE manifest read:
+    one read per table let a fold committing mid-call tear the view
+    across snapshots."""
+    idx = str(tmp_path / "idx")
+    _trained_store(spark, idx)
+    reads = []
+    read = dinc._read_manifest
+    monkeypatch.setattr(dinc, "_read_manifest",
+                        lambda d: reads.append(d) or read(d))
+    out = dinc.load_dedup_index(spark, idx)
+    assert len(reads) == 1
+    assert {"ann_centroids", "ann_assign", "ann_codebook", "ann_codes",
+            "sq_bounds", "sq_codes", "cc_labels"} <= set(out)
+    assert 3 not in {r["docno"] for r in out["sq_codes"].collect()}
+
+
+_WRITERS = {
+    "update": lambda spark, idx: dinc.update_dedup_index(
+        spark, idx, _docs_for(spark, [20, 21]),
+        removed_docs=_docs_for(spark, [1])),
+    "compact": lambda spark, idx: dinc.compact_dedup_index(spark, idx),
+    "train": lambda spark, idx: dinc.train_ann_index(spark, idx, every=4),
+    "cc_build": lambda spark, idx: dinc.build_cc_labels(spark, idx),
+}
+
+
+@pytest.mark.parametrize("writer,fail_at", [
+    ("update", 2), ("compact", 2), ("train", 2), ("cc_build", 1)])
+def test_mid_stage_failure_leaves_store_unchanged(spark, tmp_path,
+                                                  monkeypatch, writer,
+                                                  fail_at):
+    """A writer whose ``fail_at``-th table write fails inside its Spark
+    job raises, leaves the manifest as it was and leaves no staged
+    ``.tmp-`` dir behind. Doc 30 copies doc 0, so the cc build has a
+    label row to fail on."""
+    ids = list(range(8))
+    idx = str(tmp_path / "idx")
+    dup = _docs_for(spark, [0]).withColumn("docno", F.lit(30).cast("long"))
+    dinc.build_dedup_index(_docs_for(spark, ids).unionByName(dup), idx,
+                           embeddings=_emb_df(spark, ids))
+    dinc.update_dedup_index(spark, idx, _docs_for(spark, [10]))
+    man = dinc._read_manifest(idx)
+    write, calls = dinc._SnapAttempt.write, []
+
+    def failing(self, df, table):
+        calls.append(table)
+        if len(calls) == fail_at:
+            df = df.withColumn("_boom", F.when(
+                F.monotonically_increasing_id() >= 0,
+                F.raise_error(F.lit("mid-stage failure"))).otherwise(0))
+        return write(self, df, table)
+
+    monkeypatch.setattr(dinc._SnapAttempt, "write", failing)
+    with pytest.raises(Exception, match="mid-stage failure"):
+        _WRITERS[writer](spark, idx)
+    assert len(calls) == fail_at
+    assert dinc._read_manifest(idx) == man
+    leftovers = [os.path.join(t, e) for t in os.listdir(idx)
+                 if os.path.isdir(os.path.join(idx, t))
+                 for e in os.listdir(os.path.join(idx, t)) if ".tmp-" in e]
+    assert not leftovers, leftovers
+
+
 def test_manifest_lock_steal_and_mutual_exclusion(tmp_path):
     """The manifest lock steals a DEAD holder's lock, never steals a
     LIVE holder's, and stays mutually exclusive under thread contention
@@ -1159,7 +1255,8 @@ def test_vacuum_spares_inflight_and_respects_retention(spark, tmp_path,
     dinc.build_dedup_index(_df(spark, old), idx)
     dinc.update_dedup_index(spark, idx, _df(spark, new))
     # an in-flight attempt mid-stage (never committed)
-    att = dinc._SnapAttempt(idx, 2)
+    att = dinc._SnapAttempt(idx, dinc._read_manifest(idx))
+    assert att.sid == 2
     att.write(_df(spark, [(99, "inflight")]).select(
         "docno", F.md5("text").alias("content_hash")), "content_hashes")
     tmp_dir = att._tmp("content_hashes")

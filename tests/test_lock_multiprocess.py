@@ -40,21 +40,11 @@ def _cas_writer(idx: str, n_iter: int, tag: int) -> None:
     data, it only renames the dir)."""
     wins = 0
     for _ in range(n_iter):
-        man = dinc._read_manifest(idx)
-        sid = man["next_snap"]
-        att = dinc._SnapAttempt(idx, sid)
+        att = dinc._SnapAttempt(idx, dinc._read_manifest(idx))
         os.makedirs(att._tmp("content_hashes"))
         att.tables.append("content_hashes")
-
-        def _mut(m, sid=sid):
-            m = dict(m)
-            m["snaps"] = m["snaps"] + [sid]
-            m["next_snap"] = sid + 1
-            m["last_snap"] = sid
-            return m
-
         try:
-            att.commit(_mut)
+            att.commit()
             wins += 1
         except dinc.ConcurrentWriteError:
             pass                      # loser: staged dirs were cleaned up

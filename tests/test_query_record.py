@@ -30,96 +30,39 @@ def test_parallel_frames_jobs_stay_in_callers_group(spark):
     assert after >= before + 2
 
 
-FINAL_PLAN = """\
-OverwriteByExpression (12)
-+- AdaptiveSparkPlan (11)
-   +- == Final Plan ==
-      ResultQueryStage (10)
-      +- * Project (9)
-         +- * BroadcastHashJoin Inner BuildRight (8)
-            :- * SortMergeJoin Inner (5)
-            :  :- ShuffleQueryStage (2)
-            :  :  +- Exchange (1)
-            :  +- ShuffleQueryStage (4)
-            :     +- Exchange (3)
-            +- BroadcastQueryStage (7)
-               +- BroadcastExchange (6)
-                  +- BroadcastNestedLoopJoin (13)
-                     :- ArrowEvalPython (14)
-                     +- CartesianProduct (15)
-                        +- BatchEvalPython (16)
-                           +- WindowGroupLimit (17)
-   +- == Initial Plan ==
-      Project (21)
-      +- SortMergeJoin Inner (20)
-         :- Exchange (19)
-         +- CartesianProduct (18)
+def test_digest_counts_the_plan_graph_below_a_cached_relation(spark,
+                                                             sf_dir):
+    """The digest's counts are the plan graph's of the execution the
+    noop write ran, found again here by its plan text, on a query whose
+    final plan nests a cached relation's adaptive plan, as the tool runs
+    it (AQE forced): the exchanges below it count too."""
+    from collections import Counter
 
-(11) AdaptiveSparkPlan
-Arguments: isFinalPlan=true
-"""
+    from perfbench.trace import Tracer
 
-
-def test_digest_counts_final_plan_operators():
-    d = query_record.digest(FINAL_PLAN)
-    assert d == {"final": True, "exch": 2, "bhj": 1, "smj": 1, "bnlj": 1,
-                 "cart": 1, "py": 2, "topk_limit": True}
-    assert query_record.digest("Exchange (1)\nisFinalPlan=false\n")[
-        "final"] is False
-
-
-# A cached relation's adaptive plan is printed under each scan of it, at an
-# indent of its own: here its Initial Plan root (Exchange (7)) sits at the
-# column the outer join's branches go on at.
-NESTED_PLAN = """\
-OverwriteByExpression (20)
-+- AdaptiveSparkPlan (19)
-   +- == Final Plan ==
-      ResultQueryStage (18)
-      +- * BroadcastHashJoin LeftOuter BuildRight (17)
-         :- * BroadcastNestedLoopJoin Cross BuildRight (9)
-         :  :- InMemoryTableScan (1)
-         :  :     +- InMemoryRelation (2)
-         :  :           +- AdaptiveSparkPlan (8)
-      +- == Final Plan ==
-         ResultQueryStage (6)
-         +- Exchange (5)
-            +- Scan parquet  (3)
-      +- == Initial Plan ==
-         Exchange (7)
-         +- Scan parquet  (3)
-         :  +- BroadcastQueryStage (12)
-         :     +- BroadcastExchange (11)
-         :        +- Exchange (10)
-         +- BroadcastQueryStage (16)
-            +- BroadcastExchange (15)
-               +- InMemoryTableScan (13)
-                     +- InMemoryRelation (2)
-                           +- AdaptiveSparkPlan (8)
-      +- == Final Plan ==
-         ResultQueryStage (6)
-         +- Exchange (5)
-            +- Scan parquet  (3)
-      +- == Initial Plan ==
-         Exchange (7)
-         +- Scan parquet  (3)
-   +- == Initial Plan ==
-      BroadcastHashJoin LeftOuter BuildRight (21)
-      :- Exchange (22)
-      +- SortMergeJoin Inner (23)
-
-(19) AdaptiveSparkPlan
-Arguments: isFinalPlan=true
-"""
-
-
-def test_digest_keeps_the_tree_around_a_nested_initial_plan():
-    """The outer tree goes on after a nested Initial Plan subtree closes
-    (Exchange (10) counts); the cached plan's Exchange (5), printed under
-    both scans, counts once; the outer Initial Plan's SMJ does not."""
-    assert query_record.digest(NESTED_PLAN) == {
-        "final": True, "exch": 2, "bhj": 1, "smj": 0, "bnlj": 1,
-        "cart": 0, "py": 0, "topk_limit": False}
+    spark.conf.set("spark.sql.adaptive.forceApply", "true")
+    try:
+        rec, plan = query_record.record(spark, Tracer(spark.sparkContext),
+                                        "sdm_topk", sf_dir)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.forceApply")
+    assert "InMemoryRelation" in plan and rec["plan"]["final"] is True
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    eid = next(e.executionId() for e in
+               (execs.apply(i) for i in range(execs.size()))
+               if e.physicalPlanDescription() == plan)
+    nodes = store.planGraph(eid).allNodes()
+    graph = Counter(nodes.apply(i).name() for i in range(nodes.size()))
+    assert graph["InMemoryTableScan"] > 0
+    assert rec["plan"] == {
+        "final": True, "exch": graph["Exchange"],
+        "bhj": graph["BroadcastHashJoin"], "smj": graph["SortMergeJoin"],
+        "bnlj": graph["BroadcastNestedLoopJoin"],
+        "cart": graph["CartesianProduct"],
+        "py": sum(n for o, n in graph.items()
+                  if query_record.PYTHON.search(o)),
+        "topk_limit": graph["WindowGroupLimit"] > 0}
 
 
 def test_live_record_eval_map_pk(spark, sf_dir):

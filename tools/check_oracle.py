@@ -27,173 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
-# Pinned regression set (``--pinned``): every query a judge has
-# independently strict-verified, so a regression here is maximally
-# visible. r3 re-check (14) + r4 re-check batches 1 and 2 (31).
-# The full-catalog gate (no name filter) remains the stronger check;
-# this subset is the fast between-commits guard.
-PINNED_JUDGE_VERIFIED = sorted({
-    # round 3 (14, per README's round-3 list)
-    "mirex_baselines", "tpch_q5", "tpch_q7", "tpch_q18",
-    "event_window_counts", "event_asof_click", "event_sessions",
-    "pagerank", "bpe_merges", "media_wav_real", "curation_pipeline",
-    "indexed_dirichlet_topk", "table_profile", "kde_alpha_sweep",
-    # r5 builder additions exercised by this round's fixes
-    "eval_map_pk", "rank_correlation", "rm3_sweep",
-    "dedup_clusters", "near_dedup_kept", "kmeans_clusters",
-    "ann_recall_ivf", "doc_chunks", "gopher_quality", "redact_pii",
-    "pack_chunks", "doc_global_ids",
-    # round 4 batch 1 (14)
-    "tpch_q9", "tpch_q21", "media_bmp_resize", "bpe_encode_lens",
-    "winnow_span_pairs", "sketch_hll_union", "triangle_count",
-    "event_funnel", "dsir_weights", "semantic_dedup_kept", "pagerank",
-    "phrase_search_topk", "mixture_weights", "perplexity_buckets",
-    # round 4 batch 1 cont. + batch 2 (17)
-    "cohort_retention", "mmr_rerank", "query_clarity",
-    "textrank_keywords", "graph_hits", "graph_bfs", "ewma_user_value",
-    "markov_transitions", "value_percentiles", "ann_recall_lsh",
-    "nb_classifier_preds", "tpch_q2", "tpch_q17", "event_cube",
-    "sdm_topk", "salted_user_spend", "doc_logprob_kn",
-    # round 5 judge strict re-check, batches 1 (20) + 2 (25)
-    "media_png_real", "normalized_text_stats", "orders_version_diff",
-    "kmeans_clusters", "semantic_dedup_kept", "ngram_jaccard_pairs",
-    "tpch_q11", "graph_hits", "wordcount_stemmed", "npmi_stemmed",
-    "indexed_phrase_topk", "sketch_jaccard_kmv", "hashed_ann_topk",
-    "zipf_fit", "vocab_growth", "term_burstiness", "ab_test_zscore",
-    "rfm_segments", "event_gapfill", "sdm_weight_sweep",
-    "tpch_q1", "tpch_q3", "tpch_q4", "tpch_q6", "tpch_q8", "tpch_q10",
-    "tpch_q13", "tpch_q15", "tpch_q16", "tpch_q19", "tpch_q20",
-    "tpch_q22", "best_passage", "copurchase_lift", "pq_ann_topk",
-    "rp_lsh_ann_topk", "props_json_stats", "line_dedup_docs",
-    "eval_f1_utility", "event_rollup", "ols_len_chars",
-    "quality_percentile_cut", "langid", "doc_vectors", "orders_upsert",
-    # round 6: the never-before-verified tail, exhausted (34/34 strict
-    # at sf0.01) — with these, every catalog query has had at least one
-    # independent strict check beyond the driver's 50-query sample
-    "ann_cosine_topk", "ann_ivf_topk", "ann_recall_pq",
-    "approx_quantiles", "bigram_logprob", "bloom_prejoin_counts",
-    "click_attribution", "cms_term_counts", "contamination_ngrams",
-    "dataset_splits", "doc_fingerprints", "doc_logprob",
-    "event_anomaly_filter", "event_sliding_counts",
-    "event_threshold_filter", "hashed_embed", "jdbc_spam_lookup",
-    "media_audio_energy", "media_bmp_real", "media_frame_sample",
-    "media_image_features", "quality_scores", "sketch_distinct_hll",
-    "sketch_distinct_kmv", "spam_filter_counts", "spam_filter_kept",
-    "stratified_sample", "tfidf_topterms", "token_budget_sample",
-    "token_counts", "tpch_q12", "tpch_q14", "weighted_sample",
-    "zorder_key_events",
-    # round 6 cont.: full-catalog strict pass this session (177/177 at
-    # sf0.01) — the pinned set now IS the catalog: the driver-sampled
-    # 50 and the three new index-served scorers included, so any
-    # regression anywhere is maximally visible
-    "abs_discount_topk", "anchor_text", "apss_cosine_pairs",
-    "bm25_topk", "collection_globals", "collocations_llr",
-    "cooccur_pairs", "cross_entropy_topk", "dedup_exact",
-    "dedup_minhash_lsh", "dirichlet_mirex_topk", "dirichlet_mu_sweep",
-    "dirichlet_topk", "doc_lengths", "embedding_near_dups", "emim",
-    "entity_resolution", "eval_ndcg", "eval_precision_recall",
-    "fuzzy_title_pairs", "indexed_bm25_topk", "indexed_jm_topk",
-    "indexed_two_stage_topk", "jm_gslis_topk", "jm_mirex_topk",
-    "kba_filter_grid", "kde_rerank", "lm_no_smoothing_topk",
-    "lms_lambda_sweep", "ltr_features", "npmi", "pl2_topk",
-    "qrels_synth", "query_pair_stats", "query_term_stats",
-    "rm1_feedback", "rm3_feedback", "rocchio_expansion",
-    "rrf_fusion_topk", "simhash_near_dups", "skipgram_pmi",
-    "term_stats", "two_stage_topk", "vsm_cosine_topk", "wordcount",
-    # round 6 cont.: the from-scratch baseline-JPEG codec entry,
-    # strict-verified at sf0.001/sf0.01/sf0.1 on addition
-    "media_jpeg_real",
-    # round 6 cont.: fully index-served RM3 pipeline, strict at
-    # sf0.001/sf0.01 on addition
-    "indexed_rm3_feedback",
-    # round 6 cont.: SDM served from the positional + inverted indexes
-    "indexed_sdm_topk",
-    # round 7: Zipf-fixture selectivity surface (VERDICT r6 #4),
-    # strict at sf0.01 on addition; candidate counts pinned in
-    # tests/test_zipf_surface.py
-    "apss_cosine_pairs_zipf", "fuzzy_pairs_zipf",
-    # round 7: real baseline 4:2:0 color JPEG codec (VERDICT r6 #6),
-    # strict at sf0.001/0.01/0.1 on addition
-    "media_jpeg_color",
-    # round 7: Lee et al. ExactSubstr duplicated spans + the removal
-    # action, strict at 3 SFs on addition
-    "exact_dup_spans", "exact_dedup_clean",
-    # round 8: cross-snapshot incremental dedup (VERDICT r7 #1) — the
-    # oracles ARE the from-scratch recompute, so green == incremental
-    # ≡ from-scratch; strict at sf0.001/0.01 on addition
-    "dedup_incremental_kept", "incremental_dup_spans",
-    # round 8: ExactSubstr canonical-copy retention (VERDICT r7 #4),
-    # index-served best_passage (VERDICT r7 #3), dedup-family Zipf
-    # twins (VERDICT r7 #6; counts pinned in tests/test_zipf_surface.py)
-    "exact_dedup_keep_first", "indexed_best_passage",
-    "dedup_minhash_zipf", "winnow_pairs_zipf",
-    # round 8 cont.: the SimHash / embedding members of the incremental
-    # family, strict at 3 SFs on addition
-    "simhash_incremental_kept", "embedding_incremental_kept",
-    # round 9: snapshot-partitioned fold-in twin (fold ≡ rebuild at the
-    # catalog level), cross-snapshot keep-first removal action (VERDICT
-    # r8 #2), SimHash Zipf twin (VERDICT r8 #5; bucket distribution
-    # pinned in tests/test_zipf_surface.py); strict at 3 SFs on addition
-    "dedup_incremental_folded", "incremental_keep_first_clean",
-    "simhash_near_dups_zipf",
-    # round 9 cont.: the winnowing member of the incremental family
-    # (strict at 3 SFs on addition; oracle = from-scratch union replay
-    # restricted to pairs involving a new doc)
-    "incremental_winnow_pairs",
-    # round 10: persisted ANN index (VERDICT r9 #2), incremental
-    # duplicate-cluster maintenance (VERDICT r9 #3), proximity
-    # offset-join Zipf twin (VERDICT r9 optional #9); strict at 3 SFs
-    # on addition
-    "indexed_ann_topk", "incremental_dedup_clusters", "prox_pairs_zipf",
-    "indexed_pq_topk", "indexed_ivfpq_topk",
-    # round 11: IVF-PQ exact re-rank (refine) stage + composed-path
-    # recall canary (VERDICT r10 #1), persisted k-means-trained IVF
-    # index (VERDICT r10 #5); strict at sf0.001/sf0.01/sf0.1 on addition
-    "indexed_ivfpq_refined", "ann_recall_ivfpq", "indexed_ann_kmeans_topk",
-    # round 11 cont.: residual-encoded IVF-PQ (IVFADC); strict at
-    # sf0.001/sf0.01/sf0.1 on addition
-    "indexed_ivfpq_residual_topk",
-    # round 12: best_passage windowed-snippet tail on the Zipf fixture
-    # (VERDICT r11 missing #3); hit/output counts pinned in
-    # tests/test_zipf_surface.py; strict at 3 SFs on addition
-    "best_passage_zipf",
-    # round 12: deferred-split audit over a retracted label store (the
-    # catalog-graded form of cc_health(verify_splits=True)'s math, with
-    # a planted articulation-point chain so the split branch is
-    # exercised at every SF); strict at 3 SFs on addition
-    "incremental_cc_splits",
-    # round 12: residual (IVFADC) serving with the exact re-rank stage
-    # + its recall canary — the SCALING r11 residual-recall claim
-    # (adc 0.288->0.325, refined 0.570->0.670 at sf0.1) is now catalog
-    # data; strict at 3 SFs on addition
-    "indexed_ivfpq_residual_refined", "ann_recall_ivfpq_residual",
-    # round 12: metadata-filtered vector search — pre-filter pushed into
-    # the cand CTE vs post-filter on the filter-blind shortlist, with
-    # the recall gap graded against brute-force filtered ground truth
-    # (sf0.1: pre 0.580 ≈ unfiltered 0.570, post 0.455 at equal refine
-    # budget); strict at 3 SFs on addition
-    "indexed_ivfpq_filtered_topk", "ann_recall_filtered",
-    # round 12: hybrid more-like-this — RRF fusion of a lexical BM25 leg
-    # (top tf·idf terms per query doc, the Lucene MLT selection rule)
-    # with the IVF-PQ-refined vector leg over the same corpus, self
-    # excluded from both; strict at 3 SFs on addition
-    "indexed_hybrid_topk",
-    # round 12: recall-vs-nprobe sweep of the refined serving path —
-    # the IVF cost/recall knob as graded catalog data; measured (sf0.1,
-    # refine=40): 0.622/0.607/0.570/0.523 at nprobe 1/2/4/8 — at a
-    # FIXED refine budget extra probes dilute the shortlist with
-    # ADC-noise candidates, the canary's whole point; strict at 3 SFs
-    "ann_recall_sweep",
-    # round 12: SQ8 scalar-quantized serving (third persisted codec —
-    # 8 bits/dim) + its recall canary; measured sf0.1 nprobe=4: 0.700
-    # with NO refine stage vs PQ ADC 0.283 / PQ+refine 0.575 /
-    # residual-PQ+refine 0.670 — the memory/recall trade graded;
-    # strict at 3 SFs on addition (the oracle re-derives bounds,
-    # encode and decode, so strict == persisted codes byte-match an
-    # external engine's encode)
-    "indexed_ivfsq_topk", "ann_recall_sq",
-})
-
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # capped so the heaviest oracles spill instead of taking most of a
@@ -281,12 +114,9 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame,
 def main():
     args = sys.argv[1:]
     strict = "--strict" in args
-    pinned = "--pinned" in args
-    args = [a for a in args if a not in ("--strict", "--pinned")]
+    args = [a for a in args if a != "--strict"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    if pinned:
-        only |= set(PINNED_JUDGE_VERIFIED)
 
     import __spark_entry__ as E
     from hadoop_ir_spark.session import get_spark

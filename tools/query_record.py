@@ -9,9 +9,12 @@ store the build has to make (``catalog.memo_store``) runs in a ``store``
 span inside ``build``, so it is not in ``build``'s own counters; the
 record has a ``store`` layer only for the query that built one. Each
 layer reports the tracer's generic counters. The digest counts the operators
-of the plan the noop write ran after adaptive execution, each operator id
-once: the first root SQL execution the status store holds from the write
-on, printed with ``isFinalPlan=true``.
+of the plan the noop write ran after adaptive execution: the first root SQL
+execution the status store holds from the write on, its plan printed with
+``isFinalPlan=true``. The counts come from the status store's plan graph of
+that execution, which Spark builds from the executed plan. It holds no
+Initial Plan. It holds a cached relation's plan once per scan of it, but
+each exchange once, a reused one too.
 
 One JSON line per query goes to stdout. Without query names the whole
 catalog runs and PLAN_AUDIT.md is rewritten. ``--plans-dir DIR`` writes
@@ -29,6 +32,7 @@ import json
 import os
 import re
 import sys
+from collections import Counter
 from unittest import mock
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -40,57 +44,22 @@ from perfbench.trace import GENERIC, Tracer  # noqa: E402
 
 FIELDS = tuple(GENERIC)
 
-# one operator line of a formatted plan tree: "+- * SortMergeJoin Inner (5)"
-NODE = re.compile(r"^[ :+\-]*(?:\* )?([A-Z]\w*)(?: [^()]*)? \((\d+)\)$")
 PYTHON = re.compile(r"Python|Pandas|InArrow")
 
 
-def final_operators(plan: str) -> list[str]:
-    """Operator names of the plan trees in ``plan``, each operator id once
-    (a cached relation's plan is printed under every scan of it), leaving
-    out every ``== Initial Plan ==`` subtree (AQE prints it next to the
-    final one).
-
-    The subtree is the line after the marker, its root at column ``r``,
-    and the lines its connectors reach: deeper lines, and lines at ``r``
-    up to its last child (``+-`` at ``r``). A nested adaptive plan (a
-    cached relation's) is printed at an indent of its own, so the tree
-    around it can go on at ``r``; a column test alone would drop it.
-    Where that tree goes on deeper than ``r``, the text cannot tell it from
-    the subtree and it is dropped too."""
-    names, seen, root, closed, after_marker = [], set(), None, False, False
-    for line in plan.splitlines():
-        col = len(line) - len(line.lstrip(" "))
-        if after_marker:
-            root, closed, after_marker = col, False, False
-            continue
-        if root is not None and line.strip() and (
-                col > root or col == root and not closed
-                and line[col] in "+:"):
-            closed = closed or (col == root and line[col] == "+")
-            continue
-        root = None
-        if "== Initial Plan ==" in line:
-            after_marker = True
-            continue
-        m = NODE.match(line)
-        if m and m.group(2) not in seen:
-            seen.add(m.group(2))
-            names.append(m.group(1))
-    return names
-
-
-def digest(plan: str) -> dict:
-    ops = final_operators(plan)
+def digest(plan: str, ops: list[str]) -> dict:
+    """The digest of a final plan: ``plan`` is its text, ``ops`` the node
+    names of its plan graph."""
+    n = Counter(ops)
     return {
         "final": "isFinalPlan=true" in plan,
-        "exch": ops.count("Exchange"),
-        "bhj": ops.count("BroadcastHashJoin"),
-        "smj": ops.count("SortMergeJoin"),
-        "bnlj": ops.count("BroadcastNestedLoopJoin"),
-        "cart": ops.count("CartesianProduct"),
+        "exch": n["Exchange"],
+        "bhj": n["BroadcastHashJoin"],
+        "smj": n["SortMergeJoin"],
+        "bnlj": n["BroadcastNestedLoopJoin"],
+        "cart": n["CartesianProduct"],
         "py": sum(bool(PYTHON.search(o)) for o in ops),
-        "topk_limit": "WindowGroupLimit" in ops,
+        "topk_limit": "WindowGroupLimit" in n,
     }
 
 
@@ -100,17 +69,19 @@ def newest_execution(store) -> int:
     return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
 
 
-def final_plan(store, since: int) -> str:
-    """Plan of the first root SQL execution newer than execution ``since``:
-    the one a write started after ``since`` was noted. Executions it
-    nested (``rootExecutionId`` not its own id) and later ones are passed
-    over. Ids grow by one per execution; the store keeps the newest ones
-    (UI off), sorted by id."""
+def final_plan(store, since: int) -> tuple[str, list[str]]:
+    """(plan text, plan-graph node names) of the first root SQL execution
+    newer than execution ``since``: the one a write started after
+    ``since`` was noted. Executions it nested (``rootExecutionId`` not its
+    own id) and later ones are passed over. Ids grow by one per
+    execution; the store keeps the newest ones (UI off), sorted by id."""
     k = newest_execution(store) - since
     execs = store.executionsList(max(store.executionsCount() - k, 0), k)
     for e in (execs.apply(i) for i in range(execs.size())):
         if e.executionId() > since and e.rootExecutionId() == e.executionId():
-            return e.physicalPlanDescription()
+            nodes = store.planGraph(e.executionId()).allNodes()
+            return e.physicalPlanDescription(), [
+                nodes.apply(i).name() for i in range(nodes.size())]
     raise RuntimeError(f"no root SQL execution after execution {since}")
 
 
@@ -154,13 +125,13 @@ def record(spark, tracer: Tracer, name: str, sf_dir: str) -> tuple[dict, str]:
         # counters and the final plan are complete
         bus.waitUntilEmpty()
         tracer.finish_iteration()
-    plan = final_plan(store, since)
+    plan, ops = final_plan(store, since)
     rec = {"name": name}
     for key, s in spans.items():
         rec[key] = layer([s])
     if stores := spans["build"].children:
         rec["store"] = layer(stores)
-    rec["plan"] = digest(plan)
+    rec["plan"] = digest(plan, ops)
     return rec, plan
 
 
