@@ -30,12 +30,29 @@ def test_parallel_frames_jobs_stay_in_callers_group(spark):
     assert after >= before + 2
 
 
-def test_digest_counts_the_plan_graph_below_a_cached_relation(spark,
-                                                             sf_dir):
-    """The digest's counts are the plan graph's of the execution the
-    noop write ran, found again here by its plan text, on a query whose
-    final plan nests a cached relation's adaptive plan, as the tool runs
-    it (AQE forced): the exchanges below it count too."""
+def test_digest_counts_final_plan_operators():
+    """The digest counts the plan graph's node names (``BroadcastExchange``
+    is not an ``Exchange``); ``final`` is read from the plan text."""
+    ops = ["OverwriteByExpression", "AdaptiveSparkPlan", "ResultQueryStage",
+           "WholeStageCodegen (3)", "Project", "BroadcastHashJoin",
+           "SortMergeJoin", "ShuffleQueryStage", "Exchange",
+           "ShuffleQueryStage", "Exchange", "BroadcastQueryStage",
+           "BroadcastExchange", "BroadcastNestedLoopJoin", "ArrowEvalPython",
+           "CartesianProduct", "BatchEvalPython", "WindowGroupLimit"]
+    assert query_record.digest("Arguments: isFinalPlan=true\n", ops) == {
+        "final": True, "exch": 2, "bhj": 1, "smj": 1, "bnlj": 1,
+        "cart": 1, "py": 2, "topk_limit": True}
+    assert query_record.digest("isFinalPlan=false\n", ["Exchange"]) == {
+        "final": False, "exch": 1, "bhj": 0, "smj": 0, "bnlj": 0,
+        "cart": 0, "py": 0, "topk_limit": False}
+
+
+def test_digest_keeps_the_tree_around_a_nested_initial_plan(spark, sf_dir):
+    """A cached relation's adaptive plan is printed under each scan of it
+    with an Initial Plan of its own. The digest's counts are the plan
+    graph's of the execution the noop write ran, found again here by its
+    plan text, on such a query as the tool runs it (AQE forced): the
+    outer tree around the nested plan and the exchanges below it count."""
     from collections import Counter
 
     from perfbench.trace import Tracer
@@ -47,6 +64,7 @@ def test_digest_counts_the_plan_graph_below_a_cached_relation(spark,
     finally:
         spark.conf.unset("spark.sql.adaptive.forceApply")
     assert "InMemoryRelation" in plan and rec["plan"]["final"] is True
+    assert plan.count("== Initial Plan ==") > 1
     store = spark._jsparkSession.sharedState().statusStore()
     execs = store.executionsList()
     eid = next(e.executionId() for e in
