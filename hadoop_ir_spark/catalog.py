@@ -452,6 +452,16 @@ def qrels_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def eval_inputs(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """[run, qrels] of the eval queries: the Dirichlet flagship run and
+    the qrels, each localCheckpointed, the two checkpoints concurrently.
+    Both frames are built first, in the caller's thread: the run's
+    coll_len collect fills the QTERMS scan cache that both read before
+    either checkpoint starts."""
+    run, qrels = dirichlet_topk(spark, sf_dir), qrels_df(spark, sf_dir)
+    return parallel_frames(run.localCheckpoint, qrels.localCheckpoint)
+
+
 # ---------------------------------------------------------------------------
 # Domain query modules register themselves on import (must stay at the
 # bottom: they import `register` & the SQL blocks defined above).

@@ -329,24 +329,20 @@ def simhash_fingerprints(post: DataFrame, bits: int = SIMHASH_BITS,
     Column form: ``bits`` sum-aggregates in one groupBy(docno) — no row
     blowup, single shuffle of the postings. The term hash is hoisted into
     a pre-agg projection (aggregate expressions get no CSE, so embedding
-    it would evaluate the hash ``bits``× per row)."""
+    it would evaluate the hash ``bits``× per row). The per-bit sums and
+    the fingerprint are written as SQL text: the same plan as Column
+    builders, but one JVM call per expression instead of one per operator,
+    which cuts the driver time of building the plan."""
     hashed = post.select(
         "docno", "tf", _hash(portable)(F.col("term")).alias("_h")
     )
-    aggs = [
-        F.sum(
-            (F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) * 2 - 1)
-            * F.col("tf")
-        ).alias(f"b{i}")
+    sums = hashed.groupBy("docno").agg(*[
+        F.expr(f"sum(((shiftright(_h, {i}) & 1) * 2 - 1) * tf) AS b{i}")
         for i in range(bits)
-    ]
-    sums = hashed.groupBy("docno").agg(*aggs)
-    fp = None
-    for i in range(bits):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("bigint") * (1 << i)) \
-               .otherwise(F.lit(0).cast("bigint"))
-        fp = bit if fp is None else fp + bit
-    return sums.select("docno", fp.alias("fingerprint"))
+    ])
+    fp = " + ".join(f"CASE WHEN b{i} > 0 THEN {1 << i}L ELSE 0L END"
+                    for i in range(bits))
+    return sums.selectExpr("docno", f"{fp} AS fingerprint")
 
 
 def simhash_band_frame(fps: DataFrame, bands: int) -> DataFrame:

@@ -23,61 +23,92 @@ from pyspark.sql import functions as F
 LOG2 = 0.6931471805599453  # ln(2); shared with the SQL mirrors
 
 
-def _judged(run: DataFrame, qrels: DataFrame, min_rel: int = 1) -> DataFrame:
-    """run left-joined with binary relevance (unjudged docs count as
-    non-relevant, the trec_eval convention the reference follows)."""
-    rel = (
-        qrels.filter(F.col("rel") >= min_rel)
-        .select("qid", "docno")
-        .distinct()
-        .withColumn("is_rel", F.lit(1))
-    )
-    return run.join(F.broadcast(rel), ["qid", "docno"], "left").fillna({"is_rel": 0})
+def _relevant(qrels: DataFrame, min_rel: int) -> DataFrame:
+    """(qid, docs): the distinct docs judged relevant (rel >= min_rel) per
+    query (a NULL docno is no doc), from one shuffle by qid."""
+    return (qrels.filter(F.col("rel") >= min_rel)
+            .groupBy("qid").agg(F.collect_set("docno").alias("docs")))
 
 
 def num_rel(qrels: DataFrame, min_rel: int = 1) -> DataFrame:
     """(qid, num_rel): distinct relevant docs per query (Qrels.java:96-101)."""
-    return (
-        qrels.filter(F.col("rel") >= min_rel)
-        .select("qid", "docno")
-        .distinct()
-        .groupBy("qid")
-        .agg(F.count("*").alias("num_rel"))
-    )
+    return _relevant(qrels, min_rel).select(
+        "qid", F.size("docs").cast("long").alias("num_rel"))
+
+
+def _per_query(run: DataFrame, qrels: DataFrame, min_rel: int,
+               ks: tuple[int, ...] = (), ap: bool = False) -> DataFrame:
+    """Every per-query count the binary metrics read, in one pass over the
+    run: (qid, num_rel_ret, num_ret[, psum], p_at_<k>..., num_rel).
+
+    The run is broadcast-joined with the distinct relevant qrels (unjudged
+    docs count as non-relevant, the trec_eval convention the reference
+    follows). That broadcast and num_rel's both read the one qrels
+    shuffle of ``_relevant`` (the second as a reused exchange), so a call
+    on checkpointed inputs runs 5 jobs and caches nothing. With ``ap``
+    one rank window adds the running relevant count
+    — the reference's sequential loop re-expressed as ``sum(is_rel) OVER
+    (ORDER BY rank)`` partitioned by qid — and ``psum`` sums precision at
+    each relevant rank (NULL when none was retrieved). ONE groupBy(qid)
+    then yields every column, and num_rel (0 when the query has no
+    relevant qrels) joins as a broadcast: the run is read once and no
+    metric joins back on qid. p_at_<k> is NULL when no doc ranks <= k.
+
+    Scale: the run is top-k (k rows per query) and the qrels a few judged
+    docs per query, so both broadcasts are O(|queries|·k) and the only
+    shuffle of the run is the window's (or the aggregate's) one by qid."""
+    rel = _relevant(qrels, min_rel).select(
+        "qid", F.explode("docs").alias("docno"), F.lit(1).alias("is_rel"))
+    j = run.join(F.broadcast(rel), ["qid", "docno"], "left").fillna({"is_rel": 0})
+    is_rel, rank = F.col("is_rel"), F.col("rank")
+    aggs = [F.sum(is_rel).alias("num_rel_ret"), F.count("*").alias("num_ret")]
+    if ap:
+        j = j.withColumn("cum_rel", F.sum(is_rel).over(
+            Window.partitionBy("qid").orderBy("rank")))
+        aggs.append(F.sum(F.when(is_rel == 1, F.col("cum_rel") / rank)).alias("psum"))
+    aggs += [(F.sum(F.when(rank <= k, is_rel)) / F.lit(float(k))).alias(f"p_at_{k}")
+             for k in ks]
+    return (j.groupBy("qid").agg(*aggs)
+            .join(F.broadcast(num_rel(qrels, min_rel)), "qid", "left")
+            .fillna({"num_rel": 0}))
+
+
+def _ap(denom: str):
+    """AP = psum / denom; NULL when the denominator is 0."""
+    return F.when(F.col(denom) > 0,
+                  F.coalesce(F.col("psum"), F.lit(0.0)) / F.col(denom)).alias("ap")
+
+
+def _utility(floor: float):
+    """KBA utility = 2*rel_ret - num_ret, floored (Eval.java:114-123)."""
+    return F.greatest(
+        F.lit(floor),
+        (2.0 * F.col("num_rel_ret") - F.col("num_ret")).cast("double"),
+    ).alias("utility")
 
 
 def precision_recall(run: DataFrame, qrels: DataFrame, min_rel: int = 1) -> DataFrame:
     """E1 (Eval.java:23-80): per-query precision, recall, num_rel_ret over
     the full run depth."""
-    j = _judged(run, qrels, min_rel)
-    per_q = j.groupBy("qid").agg(
-        F.sum("is_rel").alias("num_rel_ret"),
-        F.count("*").alias("num_ret"),
-    )
-    nr = num_rel(qrels, min_rel)
-    return (
-        per_q.join(nr, "qid", "left")
-        .fillna({"num_rel": 0})
-        .select(
-            "qid",
-            "num_rel_ret",
-            "num_ret",
-            "num_rel",
-            (F.col("num_rel_ret") / F.col("num_ret")).alias("precision"),
-            F.when(F.col("num_rel") > 0,
-                   F.col("num_rel_ret") / F.col("num_rel")).alias("recall"),
-        )
+    return _per_query(run, qrels, min_rel).select(
+        "qid",
+        "num_rel_ret",
+        "num_ret",
+        "num_rel",
+        (F.col("num_rel_ret") / F.col("num_ret")).alias("precision"),
+        F.when(F.col("num_rel") > 0,
+               F.col("num_rel_ret") / F.col("num_rel")).alias("recall"),
     )
 
 
 def precision_at_k(run: DataFrame, qrels: DataFrame, k: int,
                    min_rel: int = 1) -> DataFrame:
     """E2 (Eval.java:34-47): P@k — denominator is k even when fewer than k
-    docs were retrieved (the reference divides by the cutoff)."""
-    j = _judged(run, qrels, min_rel).filter(F.col("rank") <= k)
-    return j.groupBy("qid").agg(
-        (F.sum("is_rel") / F.lit(float(k))).alias(f"p_at_{k}")
-    )
+    docs were retrieved (the reference divides by the cutoff). A query
+    with no doc ranked <= k has no row."""
+    pk = f"p_at_{k}"
+    return (_per_query(run, qrels, min_rel, ks=(k,))
+            .filter(F.col(pk).isNotNull()).select("qid", pk))
 
 
 def f1(precision_col, recall_col, beta: float = 1.0):
@@ -91,48 +122,16 @@ def f1(precision_col, recall_col, beta: float = 1.0):
 def utility(run: DataFrame, qrels: DataFrame, min_rel: int = 1,
             floor: float = -100.0) -> DataFrame:
     """E4 (Eval.java:114-123): KBA utility = 2*rel_ret - num_ret, floored."""
-    j = _judged(run, qrels, min_rel)
-    return j.groupBy("qid").agg(
-        F.greatest(
-            F.lit(floor),
-            (2.0 * F.sum("is_rel") - F.count("*")).cast("double"),
-        ).alias("utility")
-    )
+    return _per_query(run, qrels, min_rel).select("qid", _utility(floor))
 
 
 def average_precision(run: DataFrame, qrels: DataFrame, min_rel: int = 1,
                       by_num_ret: bool = False) -> DataFrame:
     """E5 (Eval.java:154-194): AP = mean over relevant retrieved docs of
     precision@their-rank; denominator num_rel (trec_eval) or num_ret (the
-    reference's second variant, Eval.java:175-194).
-
-    The cumulative sum is a window over rank — the reference's sequential
-    loop re-expressed as `sum(is_rel) OVER (ORDER BY rank)` partitioned by
-    qid, so it distributes per-query.
-    """
-    j = _judged(run, qrels, min_rel)
-    w = Window.partitionBy("qid").orderBy("rank")
-    j = j.withColumn("cum_rel", F.sum("is_rel").over(w))
-    psum = j.filter(F.col("is_rel") == 1).groupBy("qid").agg(
-        F.sum(F.col("cum_rel") / F.col("rank")).alias("psum"),
-        F.count("*").alias("num_rel_ret"),
-    )
-    if by_num_ret:
-        denom = run.groupBy("qid").agg(F.count("*").alias("denom"))
-    else:
-        denom = num_rel(qrels, min_rel).withColumnRenamed("num_rel", "denom")
-    qids = run.select("qid").distinct()
-    return (
-        qids.join(psum, "qid", "left")
-        .join(denom, "qid", "left")
-        .select(
-            "qid",
-            F.when(
-                F.coalesce(F.col("denom"), F.lit(0)) > 0,
-                F.coalesce(F.col("psum"), F.lit(0.0)) / F.col("denom"),
-            ).alias("ap"),
-        )
-    )
+    reference's second variant, Eval.java:175-194)."""
+    return _per_query(run, qrels, min_rel, ap=True).select(
+        "qid", _ap("num_ret" if by_num_ret else "num_rel"))
 
 
 def mean_average_precision(run: DataFrame, qrels: DataFrame,
@@ -146,71 +145,23 @@ def mean_average_precision(run: DataFrame, qrels: DataFrame,
 def evaluate_run(run: DataFrame, qrels: DataFrame, min_rel: int = 1,
                  ks: tuple[int, ...] = (10, 20)) -> DataFrame:
     """The reference's in-reducer eval block (RunQueryHBase.java:292-296):
-    per-query MAP-style AP + P@10 + P@20 in one frame.
-
-    Scale shape: the judged run is computed ONCE and cached before the
-    metric fan-out — without this, every metric branch re-plans the whole
-    upstream retrieval (the round-2 plan audit showed 79 exchanges for
-    eval_map_pk). On a cluster the cache becomes a checkpoint of the run;
-    the metric joins then read a few rows per query."""
-    j = _judged(run, qrels, min_rel).cache()
-    w = Window.partitionBy("qid").orderBy("rank")
-    cum = j.withColumn("cum_rel", F.sum("is_rel").over(w))
-    psum = cum.filter(F.col("is_rel") == 1).groupBy("qid").agg(
-        F.sum(F.col("cum_rel") / F.col("rank")).alias("psum")
-    )
-    denom = num_rel(qrels, min_rel).withColumnRenamed("num_rel", "denom")
-    out = (
-        j.select("qid").distinct()
-        .join(psum, "qid", "left")
-        .join(denom, "qid", "left")
-        .select(
-            "qid",
-            F.when(
-                F.coalesce(F.col("denom"), F.lit(0)) > 0,
-                F.coalesce(F.col("psum"), F.lit(0.0)) / F.col("denom"),
-            ).alias("ap"),
-        )
-    )
-    for k in ks:
-        pk = j.filter(F.col("rank") <= k).groupBy("qid").agg(
-            (F.sum("is_rel") / F.lit(float(k))).alias(f"p_at_{k}")
-        )
-        out = out.join(pk, "qid", "left").fillna({f"p_at_{k}": 0.0})
-    return out
+    per-query MAP-style AP + P@10 + P@20 in one frame, read off one
+    ``_per_query`` pass (a query with no doc ranked <= k gets P@k 0.0)."""
+    return _per_query(run, qrels, min_rel, ks, ap=True).select(
+        "qid", _ap("num_rel"),
+        *[F.coalesce(F.col(f"p_at_{k}"), F.lit(0.0)).alias(f"p_at_{k}") for k in ks])
 
 
 def f1_utility(run: DataFrame, qrels: DataFrame, min_rel: int = 1,
                beta: float = 1.0, floor: float = -100.0) -> DataFrame:
-    """E3+E4 off one cached judged frame (same fan-out shape as
-    ``evaluate_run``): per-query precision/recall/F(beta) + KBA utility."""
-    j = _judged(run, qrels, min_rel).cache()
-    perq = j.groupBy("qid").agg(
-        F.sum("is_rel").alias("num_rel_ret"),
-        F.count("*").alias("num_ret"),
-    )
-    nr = num_rel(qrels, min_rel)
-    pr = (
-        perq.join(nr, "qid", "left")
-        .fillna({"num_rel": 0})
-        .select(
-            "qid",
-            (F.col("num_rel_ret") / F.col("num_ret")).alias("precision"),
-            F.when(F.col("num_rel") > 0,
-                   F.col("num_rel_ret") / F.col("num_rel"))
-            .otherwise(0.0).alias("recall"),
-            F.greatest(
-                F.lit(floor),
-                (2.0 * F.col("num_rel_ret") - F.col("num_ret"))
-                .cast("double"),
-            ).alias("utility"),
-        )
-    )
-    return pr.select(
-        "qid",
-        f1(F.col("precision"), F.col("recall"), beta).alias("f1"),
-        "utility",
-    )
+    """E3+E4 off one ``_per_query`` pass: per-query F(beta) over
+    precision and recall (recall 0 when the query has no relevant qrels)
+    + KBA utility."""
+    precision = F.col("num_rel_ret") / F.col("num_ret")
+    recall = F.when(F.col("num_rel") > 0,
+                    F.col("num_rel_ret") / F.col("num_rel")).otherwise(0.0)
+    return _per_query(run, qrels, min_rel).select(
+        "qid", f1(precision, recall, beta).alias("f1"), _utility(floor))
 
 
 def ndcg(run: DataFrame, qrels: DataFrame, k: int = 10) -> DataFrame:
@@ -300,8 +251,7 @@ def kendall_tau(run_a: DataFrame, run_b: DataFrame) -> DataFrame:
     b = run_b.select("qid", "docno", F.col("rank").alias("rb"))
     # Compute-once: the pair self-join would otherwise re-derive BOTH
     # full input pipelines on each side (r3 plan audit: 70 exchanges
-    # when the inputs are two complete retrieval runs — the same
-    # disease eval_map_pk had, fixed identically at ir_eval.py:65-66).
+    # when the inputs are two complete retrieval runs).
     # The joined frame is tiny (<= k rows per query), so materializing
     # it truncates the lineage at negligible cost; on a cluster this is
     # where the matched run would be checkpointed.

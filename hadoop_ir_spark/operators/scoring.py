@@ -246,9 +246,13 @@ def score_gslis(matched: DataFrame, qstats: DataFrame, doc_len: DataFrame,
 
     # every (doc, query) pair: tiny per-query constants table cross-joined
     # onto per-doc lengths (broadcast nested loop, no shuffle), then the
-    # matched deltas patched in with a left join.
+    # matched deltas patched in with a left join. The join is pinned to a
+    # shuffled hash join building on match_sum (already partitioned by its
+    # keys; no sort): unpinned, AQE turned it into a broadcast join only
+    # when match_sum's stage happened to finish before the frame's shuffle
+    # was submitted, so one call ran 15 or 16 jobs on the same input.
     frame = doc_len.crossJoin(F.broadcast(qconst))
-    out = frame.join(match_sum, ["qid", "docno"], "left").select(
+    out = frame.join(match_sum.hint("shuffle_hash"), ["qid", "docno"], "left").select(
         "qid",
         "docno",
         (

@@ -15,8 +15,7 @@ from hadoop_ir_spark.catalog import (
     SQL_RUN_DIRICHLET,
     TOP_K,
     dirichlet_topk,
-    parallel_frames,
-    qrels_df,
+    eval_inputs,
     register,
 )
 from hadoop_ir_spark.operators import evaluate, rank, rerank, scoring
@@ -184,10 +183,7 @@ FROM pr
 def q_eval_f1_utility(spark, sf_dir):
     """E3 + E4 over the Dirichlet run (recall denominator num_rel; missing
     qrels → recall 0 → F1 0, the Eval.java:82-111 degenerate-case rule)."""
-    run, qrels = parallel_frames(
-        lambda: dirichlet_topk(spark, sf_dir).localCheckpoint(),
-        lambda: qrels_df(spark, sf_dir).localCheckpoint())
-    out = evaluate.f1_utility(run, qrels)
+    out = evaluate.f1_utility(*eval_inputs(spark, sf_dir))
     return out.select(
         "qid",
         F.round("f1", 6).alias("f1"),

@@ -16,6 +16,7 @@ from hadoop_ir_spark.catalog import (
     SQL_RUN_DIRICHLET,
     TOP_K,
     dirichlet_topk,
+    eval_inputs,
     parallel_frames,
     qrels_df,
     register,
@@ -58,16 +59,10 @@ SELECT p.qid, p.num_rel_ret, p.num_ret,
 FROM perq p LEFT JOIN nr USING (qid)
 """)
 def q_eval_precision_recall(spark, sf_dir):
-    # compute-once fan-out: the run (full retrieval pipeline) and qrels
-    # (postings scan) are each consumed by several metric branches.
-    # localCheckpoint truncates the lineage so every branch reads the
-    # materialized few-rows-per-query frame instead of re-planning the
-    # whole retrieval (r2 plan audit: 79 exchanges for eval_map_pk).
-    # On a cluster this is exactly where the run would be checkpointed.
-    run, qrels = parallel_frames(
-        lambda: dirichlet_topk(spark, sf_dir).localCheckpoint(),
-        lambda: qrels_df(spark, sf_dir).localCheckpoint())
-    out = evaluate.precision_recall(run, qrels)
+    # checkpointed inputs (catalog.eval_inputs): the metrics read the
+    # materialized few-rows-per-query run in one pass (evaluate._per_query)
+    # instead of planning the retrieval into the metric plan
+    out = evaluate.precision_recall(*eval_inputs(spark, sf_dir))
     return out.select(
         "qid",
         F.col("num_rel_ret").cast("long").alias("num_rel_ret"),
@@ -122,11 +117,8 @@ SELECT ap.qid, ap.ap,
 FROM ap LEFT JOIN pk10 USING (qid) LEFT JOIN pk20 USING (qid)
 """)
 def q_eval_map_pk(spark, sf_dir):
-    # compute-once fan-out: see evaluate.evaluate_run's scale note
-    run, qrels = parallel_frames(
-        lambda: dirichlet_topk(spark, sf_dir).localCheckpoint(),
-        lambda: qrels_df(spark, sf_dir).localCheckpoint())
-    out = evaluate.evaluate_run(run, qrels, ks=(10, 20))
+    # checkpointed inputs, one-pass metrics: see q_eval_precision_recall
+    out = evaluate.evaluate_run(*eval_inputs(spark, sf_dir), ks=(10, 20))
     return out.select(
         "qid",
         F.round("ap", 6).alias("ap"),
@@ -281,11 +273,10 @@ FROM qids q LEFT JOIN dcg d USING (qid) LEFT JOIN idcg i USING (qid)
 """)
 def q_eval_ndcg(spark, sf_dir):
     """nDCG@10 with graded qrels over the Dirichlet flagship run —
-    the graded companion to eval_map_pk (same compute-once fan-out)."""
-    run, qrels = parallel_frames(
-        lambda: dirichlet_topk(spark, sf_dir).localCheckpoint(),
-        lambda: qrels_df(spark, sf_dir).localCheckpoint())
-    out = evaluate.ndcg(run, qrels, k=NDCG_K)
+    the graded companion to eval_map_pk, over the same checkpointed
+    inputs (ndcg reads each of them twice: the run for its gains and its
+    qid set, the graded qrels for the run join and the ideal order)."""
+    out = evaluate.ndcg(*eval_inputs(spark, sf_dir), k=NDCG_K)
     return out.select(
         "qid",
         F.round("dcg", 6).alias("dcg"),
@@ -320,9 +311,10 @@ def q_rrf_fusion_topk(spark, sf_dir):
     rank_correlation's rank-comparison."""
     from hadoop_ir_spark.catalog import QUERIES
 
-    run_d, run_b = parallel_frames(
-        lambda: dirichlet_topk(spark, sf_dir).localCheckpoint(),
-        lambda: QUERIES["bm25_topk"](spark, sf_dir).localCheckpoint())
+    # both runs' collects fill the one QTERMS scan cache: build them here,
+    # checkpoint them concurrently (as catalog.eval_inputs does)
+    run_d, run_b = dirichlet_topk(spark, sf_dir), QUERIES["bm25_topk"](spark, sf_dir)
+    run_d, run_b = parallel_frames(run_d.localCheckpoint, run_b.localCheckpoint)
     out = evaluate.rrf_fusion([run_d, run_b], k=TOP_K, c=RRF_C)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
@@ -458,7 +450,7 @@ def q_query_clarity(spark, sf_dir):
     # compute-once fan-out: the run feeds the broadcast restriction, and
     # the postings frame feeds coll_len + tstats + the run join — without
     # the checkpoint the retrieval pipeline re-plans under every branch
-    # (the eval_map_pk disease; 54 exchanges before, ~20 after)
+    # (the round-2 eval_map_pk disease; 54 exchanges before, ~20 after)
     run = (dirichlet_topk(spark, sf_dir, k=TOP_K)
            .select("qid", "docno").localCheckpoint())
     post = statsops.postings(docs, id_col="doc_id").cache()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,6 +82,14 @@ def test_simhash_identical_and_banded_equals_brute(spark):
     fps = dedup.simhash_fingerprints(post)
     rows = {r["docno"]: r["fingerprint"] for r in fps.collect()}
     assert rows[1] == rows[2]
+    # each fingerprint equals a pure-Python simhash over hash60 terms
+    for docno, terms in {1: {"alpha": 3, "beta": 1},
+                         3: {"gamma": 5, "delta": 2}}.items():
+        h = {t: int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in terms}
+        want = sum(1 << i for i in range(dedup.SIMHASH_BITS)
+                   if sum((2 * (h[t] >> i & 1) - 1) * tf
+                          for t, tf in terms.items()) > 0)
+        assert rows[docno] == want
     brute = {(r["docno_a"], r["docno_b"], r["hamming"])
              for r in dedup.simhash_near_dups(fps, max_hamming=3, bands=None).collect()}
     banded = {(r["docno_a"], r["docno_b"], r["hamming"])

@@ -65,6 +65,42 @@ def test_utility(run, qrels):
     assert out["q2"] == pytest.approx(-2.0)
 
 
+def test_evaluate_run_hand_computed(run, qrels):
+    out = {r["qid"]: r for r in evaluate.evaluate_run(run, qrels, ks=(2,)).collect()}
+    assert out["q1"]["ap"] == pytest.approx((1.0 + 2 / 3) / 3)
+    assert out["q1"]["p_at_2"] == pytest.approx(0.5)       # d9 rel, d8 not
+    assert out["q2"]["ap"] is None      # no relevant docs: NULL, not 0
+    assert out["q2"]["p_at_2"] == 0.0
+
+
+def test_evaluate_run_equals_ap_plus_precision_at_k(run, qrels):
+    ks = (1, 2, 3, 10)
+    got = {tuple(r) for r in evaluate.evaluate_run(run, qrels, ks=ks).collect()}
+    want = evaluate.average_precision(run, qrels)
+    for k in ks:
+        want = want.join(evaluate.precision_at_k(run, qrels, k), "qid", "left")
+    assert got == {tuple(r) for r in want.collect()}
+
+
+def test_evaluate_run_is_one_pass_and_leaves_no_cache(spark, run, qrels):
+    """On checkpointed inputs one call runs at most 5 jobs (qrels shuffle,
+    two broadcasts, the run's window shuffle, the result) and caches
+    nothing; the cached metric fan-out it replaced ran 11 and left its
+    judged frame in the cache."""
+    sc = spark.sparkContext
+    run, qrels = run.localCheckpoint(), qrels.localCheckpoint()
+    spark.catalog.clearCache()
+    group = "test-evaluate-run-one-pass"
+    sc.setJobGroup(group, "evaluate_run")
+    try:
+        evaluate.evaluate_run(run, qrels).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_f1_expression(spark):
     df = spark.createDataFrame([(0.5, 0.25)], "p double, r double")
     v = df.select(evaluate.f1(F.col("p"), F.col("r")).alias("f")).collect()[0]["f"]

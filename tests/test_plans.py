@@ -93,10 +93,11 @@ def test_rp_lsh_no_cross_join(spark, sf_dir):
 
 def test_eval_map_pk_plan_is_checkpoint_fanout(spark, sf_dir):
     # regression for the round-2 plan bloat: re-planned retrieval per
-    # metric branch put 79 exchanges in this plan; the checkpointed
-    # fan-out keeps it small
+    # metric branch put 79 exchanges in this plan. Over the checkpointed
+    # inputs the one-pass metrics hold 5: the qrels shuffle by qid, its
+    # reuse, the two broadcasts and the run's window shuffle
     plan = _plan(spark, sf_dir, "eval_map_pk")
-    assert plan.count("Exchange") <= 25
+    assert plan.count("Exchange") <= 5
 
 
 def test_semantic_dedup_sharded_equijoin(spark, sf_dir):
