@@ -85,8 +85,8 @@ def test_evaluate_run_equals_ap_plus_precision_at_k(run, qrels):
 def test_evaluate_run_is_one_pass_and_leaves_no_cache(spark, run, qrels):
     """On checkpointed inputs one call runs at most 5 jobs (qrels shuffle,
     two broadcasts, the run's window shuffle, the result) and caches
-    nothing; the cached metric fan-out it replaced ran 11 and left its
-    judged frame in the cache."""
+    nothing; the cached metric fan-out it replaced ran 11-17 and left
+    its judged frame in the cache."""
     sc = spark.sparkContext
     run, qrels = run.localCheckpoint(), qrels.localCheckpoint()
     spark.catalog.clearCache()
