@@ -11,10 +11,8 @@ Five families, all shuffle-conscious:
 - ngram:     exact Jaccard over shingle sets via shingle equi-join
 - embedding: cosine near-dup pairs over a vector column
 
-Hashing: every function takes its hash from ``hash60`` (portable: first 15
-hex digits of md5 → 60-bit int, reproducible in DuckDB for the oracle gate)
-or native ``xxhash64`` (`portable=False`, JVM-fast, the 100 TB path — same
-algebra, different fingerprints).
+Hashing: every function takes its hash from ``hash60`` (first 15 hex
+digits of md5 → 60-bit int, reproducible in DuckDB for the oracle gate).
 
 Scale notes:
 - the shingle equi-join (J: pairs sharing a shingle) is the classic
@@ -42,17 +40,6 @@ def hash60(col: Column, salt: int | None = None) -> Column:
     if salt is not None:
         col = F.concat(F.lit(str(salt)), F.lit(":"), col)
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def native_hash(col: Column, salt: int | None = None) -> Column:
-    """xxhash64 — the JVM-fast variant for production scale."""
-    if salt is not None:
-        return F.xxhash64(F.lit(salt), col)
-    return F.xxhash64(col)
-
-
-def _hash(portable: bool):
-    return hash60 if portable else native_hash
 
 
 # --------------------------------------------------------------------------
@@ -152,15 +139,14 @@ MERSENNE_31 = (1 << 31) - 1
 def minhash_permutation(base: Column, i: int) -> Column:
     """Affine permutation over Z_p (p = 2^31−1) of a base hash: the classic
     minhash family h_i(x) = (a_i·x + b_i) mod p. One expensive base hash
-    per shingle, num_hashes cheap integer transforms — 24× fewer md5/xxhash
+    per shingle, num_hashes cheap integer transforms — 24× fewer md5
     evaluations than salting the hash per permutation."""
     a = 2 * i + 1
     b = i * 0x9E3779B1 % MERSENNE_31
     return (F.lit(a) * (base % MERSENNE_31) + F.lit(b)) % MERSENNE_31
 
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = 24,
-                       portable: bool = True) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = 24) -> DataFrame:
     """(docno, sig: array<bigint>[num_hashes]) — one groupBy(docno) with
     num_hashes min() aggregates (map-side partial, single shuffle); each
     permutation is an affine transform of a single base hash per shingle.
@@ -168,9 +154,8 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 24,
     The base hash is hoisted into a pre-agg projection: aggregate
     expressions get no common-subexpression elimination, so embedding it
     in each min() would evaluate the hash num_hashes× per row."""
-    h = _hash(portable)
     hashed = sh.select(
-        "docno", (h(F.col("shingle")) % MERSENNE_31).alias("_base")
+        "docno", (hash60(F.col("shingle")) % MERSENNE_31).alias("_base")
     )
     aggs = [
         F.min((F.lit(2 * i + 1) * F.col("_base")
@@ -251,55 +236,25 @@ def lsh_candidates_from_keys(banded: DataFrame) -> DataFrame:
     return pairs.select("p.docno_a", "p.docno_b").distinct()
 
 
-def _materialize(df: DataFrame, mode: str) -> DataFrame:
-    """Branch-point materialization policy.
-
-    - ``cache``: executor-memory cache — right for interactive / small-SF
-      runs; evictable, and recomputation re-derives the full lineage.
-    - ``checkpoint``: truncates lineage so a branch can NEVER silently
-      re-derive the upstream shingle+hash scan — the 100 TB-safe choice.
-      Uses a reliable ``checkpoint()`` when the context has a checkpoint
-      dir configured, else ``localCheckpoint`` (executor-local, no HDFS
-      round-trip, non-fault-tolerant).
-    - ``none``: leave the plan alone (lets AQE see the whole DAG; each
-      branch recomputes).
-    """
-    if mode == "cache":
-        return df.cache()
-    if mode == "checkpoint":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isDefined():
-            return df.checkpoint()
-        return df.localCheckpoint()
-    if mode == "none":
-        return df
-    raise ValueError(f"unknown materialize mode {mode!r}")
-
-
 def minhash_near_dups(docs: DataFrame, tau: float = 0.9, k: int = 3,
                       num_hashes: int = 24, bands: int = 8,
-                      id_col: str = "docno", text_col: str = "text",
-                      portable: bool = True,
-                      materialize: str = "cache") -> DataFrame:
+                      id_col: str = "docno",
+                      text_col: str = "text") -> DataFrame:
     """Full MinHash-LSH pipeline: shingle → sign → band → candidates →
     exact-Jaccard verify ≥ tau. → (docno_a, docno_b, jaccard).
 
-    ``materialize`` picks the branch-point policy (see ``_materialize``):
-    sigs feeds both sides of the bucket expansion and sets both sides of
-    the verify join, so without materialization each branch re-derives the
-    full shingle+hash lineage."""
-    sh = _materialize(
-        shingles(docs, k=k, id_col=id_col, text_col=text_col), materialize
-    )
-    sigs = _materialize(
-        minhash_signatures(sh, num_hashes=num_hashes, portable=portable),
-        materialize,
-    )
+    The shingles, signatures and shingle sets are localCheckpointed (the
+    dedup store's fingerprint pass does the same): sigs feeds both sides
+    of the bucket expansion and sets both sides of the verify join, so
+    without materialization each branch re-derives the full shingle+hash
+    lineage. Unlike a cache, a local checkpoint does not stay registered
+    in the session until someone unpersists it."""
+    sh = shingles(docs, k=k, id_col=id_col,
+                  text_col=text_col).localCheckpoint()
+    sigs = minhash_signatures(sh, num_hashes=num_hashes).localCheckpoint()
     cand = lsh_candidates(sigs, bands=bands)
-    sets = _materialize(
-        sh.groupBy("docno").agg(F.collect_set("shingle").alias("s")),
-        materialize,
-    )
+    sets = (sh.groupBy("docno").agg(F.collect_set("shingle").alias("s"))
+            .localCheckpoint())
     verified = (
         cand
         .join(sets.select(F.col("docno").alias("docno_a"),
@@ -322,8 +277,8 @@ def minhash_near_dups(docs: DataFrame, tau: float = 0.9, k: int = 3,
 SIMHASH_BITS = 60  # portable hash width (fits signed 64-bit on both engines)
 
 
-def simhash_fingerprints(post: DataFrame, bits: int = SIMHASH_BITS,
-                         portable: bool = True) -> DataFrame:
+def simhash_fingerprints(post: DataFrame,
+                         bits: int = SIMHASH_BITS) -> DataFrame:
     """(docno, fingerprint): per-term hash bits weighted ±tf, sign per bit.
 
     Column form: ``bits`` sum-aggregates in one groupBy(docno) — no row
@@ -334,7 +289,7 @@ def simhash_fingerprints(post: DataFrame, bits: int = SIMHASH_BITS,
     builders, but one JVM call per expression instead of one per operator,
     which cuts the driver time of building the plan."""
     hashed = post.select(
-        "docno", "tf", _hash(portable)(F.col("term")).alias("_h")
+        "docno", "tf", hash60(F.col("term")).alias("_h")
     )
     sums = hashed.groupBy("docno").agg(*[
         F.expr(f"sum(((shiftright(_h, {i}) & 1) * 2 - 1) * tf) AS b{i}")

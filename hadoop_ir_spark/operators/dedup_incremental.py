@@ -501,19 +501,18 @@ class _SnapAttempt:
                 **self.edits})
 
 
-def _params(k, num_hashes, bands, min_len, portable,
-            win_k, win_w) -> dict:
+def _params(k, num_hashes, bands, min_len, win_k, win_w) -> dict:
     return {"k": k, "num_hashes": num_hashes, "bands": bands,
-            "min_len": min_len, "portable": portable,
-            "win_k": win_k, "win_w": win_w}
+            "min_len": min_len, "win_k": win_k, "win_w": win_w}
 
 
-def _check_params(man: dict, params: dict) -> None:
-    if man.get("params") != params:
-        raise ValueError(
-            f"dedup-index parameter mismatch: index was built with "
-            f"{man.get('params')}, update called with {params} — mixed "
-            f"shingle/signature parameters would corrupt the store")
+def _store_params(index_dir: str, snaps=None) -> tuple[dict, list[int]]:
+    """One manifest read: the fingerprint parameters the store was built
+    with (``_params``; new docs must be fingerprinted with exactly these
+    to meet the stored rows) and ``snaps``, or the visible snaps when it
+    is None."""
+    man = _read_manifest(index_dir)
+    return man["params"], list(man["snaps"] if snaps is None else snaps)
 
 
 def _visible_snaps(index_dir: str, snaps) -> list[int]:
@@ -523,21 +522,18 @@ def _visible_snaps(index_dir: str, snaps) -> list[int]:
 
 def _union_snaps(spark: SparkSession, index_dir: str, table: str,
                  snaps: list[int]) -> DataFrame | None:
-    """Union of a table's visible snap dirs with the snap id attached.
-    Missing dirs are skipped (an update that only removed docs writes
-    no row-table dir for its snap id). allowMissingColumns tolerates
-    dirs written before an additive schema change (r12 added the
-    ``src`` provenance column to ann_assign/ann_codes — a pre-r12 dir's
-    rows surface it as null, which every consumer treats as 'train')."""
-    out = None
-    for sid in snaps:
-        p = os.path.join(index_dir, table, f"snap={sid}")
-        if not os.path.isdir(p):
-            continue
-        df = spark.read.parquet(p).withColumn("_snap", F.lit(sid))
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True)
-    return out
+    """Union of a table's visible snap dirs with the snap id attached as
+    ``_snap``, read as one parquet relation (one schema inference, so
+    one Spark job, however many snaps are visible; every writer of a
+    table writes the same columns). Missing dirs are skipped (an update
+    that only removed docs writes no row-table dir for its snap id)."""
+    tdir = os.path.join(index_dir, table)
+    dirs = [p for p in (os.path.join(tdir, f"snap={sid}") for sid in snaps)
+            if os.path.isdir(p)]
+    if not dirs:
+        return None
+    df = spark.read.option("basePath", tdir).parquet(*dirs)
+    return df.withColumn("_snap", F.col("snap").cast("int")).drop("snap")
 
 
 def _live_rows(spark: SparkSession, index_dir: str, table: str,
@@ -725,11 +721,10 @@ def seed_gram_stream(docs: DataFrame, min_len: int = 8,
     )
 
 
-def _simhash_fps(d: DataFrame, portable: bool) -> DataFrame:
+def _simhash_fps(d: DataFrame) -> DataFrame:
     from hadoop_ir_spark.operators import stats
 
-    return dedup.simhash_fingerprints(
-        stats.postings(d), portable=portable)
+    return dedup.simhash_fingerprints(stats.postings(d))
 
 
 def _norm_emb(embeddings: DataFrame, emb_id_col: str,
@@ -740,23 +735,22 @@ def _norm_emb(embeddings: DataFrame, emb_id_col: str,
 
 
 def _fingerprint_frames(d: DataFrame, *, k: int, num_hashes: int,
-                        bands: int, min_len: int, portable: bool,
-                        win_k: int, win_w: int) -> dict[str, DataFrame]:
+                        bands: int, min_len: int, win_k: int,
+                        win_w: int) -> dict[str, DataFrame]:
     """One tokenize/sign pass over a (delta-sized) corpus → the seven
     core fingerprint frames. Shingles and winnow fingerprints are
     checkpointed where two frames derive from one materialization (the
     r8 layout's write-then-reread, without the reread)."""
     ch = d.select("docno", F.md5("text").alias("content_hash"))
     sh = dedup.shingles(d, k=k).localCheckpoint()
-    sigs = dedup.minhash_signatures(sh, num_hashes=num_hashes,
-                                    portable=portable)
+    sigs = dedup.minhash_signatures(sh, num_hashes=num_hashes)
     bk = dedup.band_key_frame(sigs, bands=bands)
     sg = (seed_gram_stream(d, min_len=min_len)
           .groupBy("gh").agg(F.count(F.lit(1)).cast("long").alias("n")))
     wfp = winnow_fingerprints(d, k=win_k, w=win_w).localCheckpoint()
     wdf = wfp.groupBy("fp").agg(F.count(F.lit(1)).cast("long").alias("df"))
     return {"content_hashes": ch, "shingles": sh, "band_keys": bk,
-            "seed_grams": sg, "simhash": _simhash_fps(d, portable),
+            "seed_grams": sg, "simhash": _simhash_fps(d),
             "winnow_fps": wfp, "winnow_df": wdf}
 
 
@@ -764,7 +758,6 @@ def build_dedup_index(docs: DataFrame, out_dir: str, *, k: int = 3,
                       num_hashes: int = 24, bands: int = 8,
                       min_len: int = 8, id_col: str = "docno",
                       text_col: str = "text",
-                      portable: bool = True,
                       win_k: int = 5, win_w: int = 4,
                       embeddings: DataFrame | None = None,
                       emb_id_col: str = "docno",
@@ -773,13 +766,16 @@ def build_dedup_index(docs: DataFrame, out_dir: str, *, k: int = 3,
     table plus the manifest, replacing any store at ``out_dir``.
     ``embeddings`` (optional) persists the standing vector store
     alongside the text fingerprints so ``embedding_incremental`` is
-    index-served like its siblings."""
+    index-served like its siblings.
+
+    The fingerprint parameters (shingle ``k``, ``num_hashes``, ``bands``,
+    seed-gram ``min_len``, winnowing ``win_k`` / ``win_w``) are recorded
+    in the manifest; every fold and incremental query of the store reads
+    them from there."""
     d = _norm(docs, id_col, text_col)
     os.makedirs(out_dir, exist_ok=True)
-    frames = _fingerprint_frames(d, k=k, num_hashes=num_hashes,
-                                 bands=bands, min_len=min_len,
-                                 portable=portable, win_k=win_k,
-                                 win_w=win_w)
+    params = _params(k, num_hashes, bands, min_len, win_k, win_w)
+    frames = _fingerprint_frames(d, **params)
     if embeddings is not None:
         frames[EMBEDDINGS_TABLE] = _norm_emb(embeddings, emb_id_col,
                                              emb_vec_col)
@@ -787,17 +783,12 @@ def build_dedup_index(docs: DataFrame, out_dir: str, *, k: int = 3,
         for t, df in frames.items():
             att.write(df, t)
         att.edits.update(last_batch_id=None, last_batch_snap=None,
-                         params=_params(k, num_hashes, bands, min_len,
-                                        portable, win_k, win_w))
+                         params=params)
 
 
 def update_dedup_index(spark: SparkSession, index_dir: str,
-                       new_docs: DataFrame | None = None, *, k: int = 3,
-                       num_hashes: int = 24, bands: int = 8,
-                       min_len: int = 8, id_col: str = "docno",
-                       text_col: str = "text",
-                       portable: bool = True,
-                       win_k: int = 5, win_w: int = 4,
+                       new_docs: DataFrame | None = None, *,
+                       id_col: str = "docno", text_col: str = "text",
                        removed_docs: DataFrame | None = None,
                        new_embeddings: DataFrame | None = None,
                        emb_id_col: str = "docno",
@@ -809,7 +800,9 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
     standing tables are never read, shuffled, or rewritten (the r8
     layout's full union + repartitionByRange + overwrite of all five
     tables per weekly snapshot was the one standing-corpus-proportional
-    cost left in the family).
+    cost left in the family). New and removed docs are fingerprinted
+    with the parameters ``build_dedup_index`` recorded in the manifest,
+    so every snap of the store is made with the same ones.
 
     ``new_docs`` are added; ``removed_docs`` are retracted (the
     takedown/defect path — pass the removed documents WITH the text
@@ -853,8 +846,7 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
     if new_docs is None and removed_docs is None and new_embeddings is None:
         raise ValueError("update_dedup_index: nothing to add or remove")
     man = _read_manifest(index_dir)
-    _check_params(man, _params(k, num_hashes, bands, min_len, portable,
-                               win_k, win_w))
+    params = man["params"]
     with _SnapAttempt(index_dir, man) as att:
         if batch_id is not None:
             # the replay cursor must name the BATCH's snap, not merely
@@ -865,10 +857,7 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
         deltas: dict[str, list[DataFrame]] = {t: [] for t in DELTA_TABLES}
         if new_docs is not None:
             d = _norm(new_docs, id_col, text_col)
-            frames = _fingerprint_frames(d, k=k, num_hashes=num_hashes,
-                                         bands=bands, min_len=min_len,
-                                         portable=portable, win_k=win_k,
-                                         win_w=win_w)
+            frames = _fingerprint_frames(d, **params)
             for t in DELTA_TABLES:
                 deltas[t].append(frames.pop(t))
             for t, df in frames.items():
@@ -908,11 +897,12 @@ def update_dedup_index(spark: SparkSession, index_dir: str,
             r = _norm(removed_docs, id_col, text_col)
             att.write(r.select("docno").distinct(), TOMBSTONES)
             deltas["seed_grams"].append(
-                seed_gram_stream(r, min_len=min_len)
+                seed_gram_stream(r, min_len=params["min_len"])
                 .groupBy("gh")
                 .agg((-F.count(F.lit(1))).cast("long").alias("n")))
             deltas["winnow_df"].append(
-                winnow_fingerprints(r, k=win_k, w=win_w)
+                winnow_fingerprints(r, k=params["win_k"],
+                                    w=params["win_w"])
                 .groupBy("fp")
                 .agg((-F.count(F.lit(1))).cast("long").alias("df")))
         for t, parts in deltas.items():
@@ -1141,10 +1131,8 @@ def vacuum_dedup_index(index_dir: str, *, min_age_s: float = 0.0,
 # ---------------------------------------------------------------------------
 
 def dedup_incremental(new_docs: DataFrame, index_dir: str, *,
-                      tau: float = 0.9, k: int = 3, num_hashes: int = 24,
-                      bands: int = 8, id_col: str = "docno",
-                      text_col: str = "text",
-                      portable: bool = True, snaps=None) -> DataFrame:
+                      tau: float = 0.9, id_col: str = "docno",
+                      text_col: str = "text", snaps=None) -> DataFrame:
     """(docno, status) for every NEW-snapshot doc: ``dropped`` iff it has
     an exact-content or Jaccard >= tau partner of lower precedence (any
     indexed old doc, or a lower-docno new doc), ``kept`` otherwise —
@@ -1154,15 +1142,16 @@ def dedup_incremental(new_docs: DataFrame, index_dir: str, *,
     Plan: snapshot-proportional work (shingle/sign/band the new docs,
     one shuffle each); old-side access is two pruned equi-joins —
     band_keys on (band, key) for candidates, shingles on the candidate
-    old docnos for verification. MinHash recall at (num_hashes, bands)
-    is the standard LSH trade; the catalog parameterization keeps every
-    graded pair far above the S-curve knee (margin pinned in
-    tests/test_incremental_margin.py — ADVICE r8). ``snaps`` overrides
-    the visible snapshot list (the streaming replay path reconstructs
-    the pre-fold view with it)."""
+    old docnos for verification; the new docs are shingled and signed
+    with the store's recorded (k, num_hashes, bands). MinHash recall at
+    (num_hashes, bands) is the standard LSH trade; the catalog
+    parameterization keeps every graded pair far above the S-curve knee
+    (margin pinned in tests/test_incremental_margin.py — ADVICE r8).
+    ``snaps`` overrides the visible snapshot list (the streaming replay
+    path reconstructs the pre-fold view with it)."""
     spark = new_docs.sparkSession
     d = _norm(new_docs, id_col, text_col)
-    snaps = _visible_snaps(index_dir, snaps)
+    p, snaps = _store_params(index_dir, snaps)
     old_ch = _live_rows(spark, index_dir, "content_hashes", snaps)
     old_bk = _live_rows(spark, index_dir, "band_keys", snaps)
     old_sh = _live_rows(spark, index_dir, "shingles", snaps)
@@ -1182,10 +1171,10 @@ def dedup_incremental(new_docs: DataFrame, index_dir: str, *,
     )
 
     # --- near-dup path ----------------------------------------------
-    sh_new = dedup.shingles(d, k=k).localCheckpoint()  # sign + 3 verify uses
-    sigs = dedup.minhash_signatures(sh_new, num_hashes=num_hashes,
-                                    portable=portable)
-    bk_new = dedup.band_key_frame(sigs, bands=bands).localCheckpoint()
+    # sign + 3 verify uses
+    sh_new = dedup.shingles(d, k=p["k"]).localCheckpoint()
+    sigs = dedup.minhash_signatures(sh_new, num_hashes=p["num_hashes"])
+    bk_new = dedup.band_key_frame(sigs, bands=p["bands"]).localCheckpoint()
 
     # new-vs-new candidates: the standard bucket expansion, new docs only
     cand_nn = dedup.lsh_candidates_from_keys(bk_new)
@@ -1243,7 +1232,7 @@ def dedup_incremental(new_docs: DataFrame, index_dir: str, *,
 def simhash_incremental(new_docs: DataFrame, index_dir: str, *,
                         max_hamming: int = 3, bands: int | None = None,
                         id_col: str = "docno", text_col: str = "text",
-                        portable: bool = True, snaps=None) -> DataFrame:
+                        snaps=None) -> DataFrame:
     """(docno, status) for the NEW snapshot under SimHash semantics:
     ``dropped`` iff a doc of lower precedence (any indexed old doc, or
     a lower-docno new doc) sits within Hamming ``max_hamming`` of its
@@ -1260,7 +1249,7 @@ def simhash_incremental(new_docs: DataFrame, index_dir: str, *,
     bands = bands if bands is not None else max_hamming + 1
     spark = new_docs.sparkSession
     d = _norm(new_docs, id_col, text_col)
-    fps_new = _simhash_fps(d, portable).localCheckpoint()
+    fps_new = _simhash_fps(d).localCheckpoint()
     fps_old = _live_rows(spark, index_dir, "simhash",
                          _visible_snaps(index_dir, snaps))
 
@@ -1403,21 +1392,22 @@ def _old_gram_counts(spark: SparkSession, index_dir: str, snaps,
 
 
 def incremental_dup_spans(new_docs: DataFrame, index_dir: str, *,
-                          min_len: int = 8, id_col: str = "docno",
-                          text_col: str = "text", snaps=None) -> DataFrame:
+                          id_col: str = "docno", text_col: str = "text",
+                          snaps=None) -> DataFrame:
     """(docno, span_start, span_end, span_len) for the NEW snapshot:
-    maximal token spans whose L-grams occur >= 2 times across
-    old ∪ new — ``winnow.duplicated_spans`` semantics with the old
-    side served ENTIRELY from the index's seed-gram count log: a gram
-    is duplicated iff ``n_new(gh) + n_old(gh) >= 2``, which is exactly
-    the from-scratch count over the union. Grouping is on the 60-bit
+    maximal token spans whose L-grams (L = the store's ``min_len``)
+    occur >= 2 times across old ∪ new — ``winnow.duplicated_spans``
+    semantics with the old side served ENTIRELY from the index's
+    seed-gram count log: a gram is duplicated iff
+    ``n_new(gh) + n_old(gh) >= 2``, which is exactly the from-scratch
+    count over the union. Grouping is on the 60-bit
     portable gram hash on BOTH sides (the index stores hashes, not
     L-token strings — see ``seed_gram_stream``). Linear in the
     snapshot's duplicated positions; the old corpus is never read."""
     d = _norm(new_docs, id_col, text_col)
     spark = new_docs.sparkSession
-    snaps = _visible_snaps(index_dir, snaps)
-    g = seed_gram_stream(d, min_len=min_len).localCheckpoint()
+    p, snaps = _store_params(index_dir, snaps)
+    g = seed_gram_stream(d, min_len=p["min_len"]).localCheckpoint()
     newg = g.groupBy("gh").agg(F.count(F.lit(1)).alias("_nn"))
     old = _old_gram_counts(spark, index_dir, snaps, newg)
     dupg = (
@@ -1426,11 +1416,11 @@ def incremental_dup_spans(new_docs: DataFrame, index_dir: str, *,
         .select("gh")
     )
     dup = g.join(dupg, "gh").select("docno", "pos")
-    return _merge_islands(dup, min_len)
+    return _merge_islands(dup, p["min_len"])
 
 
 def incremental_clean_keep_first(new_docs: DataFrame, index_dir: str, *,
-                                 min_len: int = 8, id_col: str = "docno",
+                                 id_col: str = "docno",
                                  text_col: str = "text",
                                  snaps=None) -> DataFrame:
     """(docno, clean_text, n_tokens, n_removed) for the NEW snapshot:
@@ -1462,8 +1452,9 @@ def incremental_clean_keep_first(new_docs: DataFrame, index_dir: str, *,
     linear in the snapshot's duplicated positions."""
     d = _norm(new_docs, id_col, text_col)
     spark = new_docs.sparkSession
-    snaps = _visible_snaps(index_dir, snaps)
-    g = seed_gram_stream(d, min_len=min_len).localCheckpoint()
+    p, snaps = _store_params(index_dir, snaps)
+    L = p["min_len"]
+    g = seed_gram_stream(d, min_len=L).localCheckpoint()
     gstats = g.groupBy("gh").agg(
         F.count(F.lit(1)).alias("_nn"),
         F.min(F.struct("docno", "pos")).alias("_min"))
@@ -1481,8 +1472,8 @@ def incremental_clean_keep_first(new_docs: DataFrame, index_dir: str, *,
                      & (F.col("pos") == F.col("_min.pos")))
         .select("docno", "pos")
     )
-    spans_all = _merge_islands(seeds.select("docno", "pos"), min_len)
-    spans_canon = _merge_islands(canon, min_len)
+    spans_all = _merge_islands(seeds.select("docno", "pos"), L)
+    spans_canon = _merge_islands(canon, L)
     toks = d.select(
         "docno", F.posexplode(tokens_col("text")).alias("pos", "term"))
     return _excise_keep_first(toks, spans_all, spans_canon)
@@ -3014,9 +3005,9 @@ def incremental_winnow_pairs(new_docs: DataFrame, index_dir: str, *,
     pairs (``winnow.span_dup_pairs`` semantics) of the from-scratch run
     over old ∪ new, RESTRICTED to pairs involving >= 1 NEW doc — the
     winnowing member of the incremental family (r9; the last
-    single-corpus detector without a cross-snapshot twin). Fingerprint
-    parameters (win_k, win_w) come from the index manifest so the new
-    side fingerprints exactly like the stored rows.
+    single-corpus detector without a cross-snapshot twin). The new side
+    is fingerprinted with the store's recorded (win_k, win_w), read from
+    the manifest, so it fingerprints exactly like the stored rows.
 
     Equivalence argument: a pair involving a new doc can only form on
     fingerprints the NEW doc selected, so the df-cap needs union df for
@@ -3029,12 +3020,10 @@ def incremental_winnow_pairs(new_docs: DataFrame, index_dir: str, *,
     from-scratch count exactly. Snapshot-proportional: the old side
     enters through one pruned fp equi-join and the df log."""
     spark = new_docs.sparkSession
-    man = _read_manifest(index_dir)
-    win_k = man["params"]["win_k"]
-    win_w = man["params"]["win_w"]
+    p, snaps = _store_params(index_dir, snaps)
     d = _norm(new_docs, id_col, text_col)
-    snaps = _visible_snaps(index_dir, snaps)
-    fps_new = winnow_fingerprints(d, k=win_k, w=win_w).localCheckpoint()
+    fps_new = winnow_fingerprints(d, k=p["win_k"],
+                                  w=p["win_w"]).localCheckpoint()
     dfn = fps_new.groupBy("fp").agg(F.count(F.lit(1)).alias("_dfn"))
     df_old = _old_delta_counts(spark, index_dir, snaps, dfn, "winnow_df")
     rare = (
@@ -3087,11 +3076,8 @@ def _write_statuses(statuses: DataFrame, statuses_dir: str,
 
 def streaming_dedup_incremental(new_docs_stream: DataFrame,
                                 index_dir: str, statuses_dir: str, *,
-                                tau: float = 0.9, k: int = 3,
-                                num_hashes: int = 24, bands: int = 8,
-                                min_len: int = 8, id_col: str = "docno",
+                                tau: float = 0.9, id_col: str = "docno",
                                 text_col: str = "text",
-                                portable: bool = True,
                                 checkpoint_dir: str | None = None,
                                 compact_every: int | None = None,
                                 emb_col: str | None = None):
@@ -3140,9 +3126,7 @@ def streaming_dedup_incremental(new_docs_stream: DataFrame,
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _apply_dedup_batch(batch_df, batch_id, index_dir, statuses_dir,
-                           tau=tau, k=k, num_hashes=num_hashes,
-                           bands=bands, min_len=min_len, id_col=id_col,
-                           text_col=text_col, portable=portable,
+                           tau=tau, id_col=id_col, text_col=text_col,
                            compact_every=compact_every, emb_col=emb_col)
 
     writer = (new_docs_stream.writeStream.foreachBatch(apply_batch)
@@ -3154,11 +3138,8 @@ def streaming_dedup_incremental(new_docs_stream: DataFrame,
 
 def _apply_dedup_batch(batch_df: DataFrame, batch_id: int,
                        index_dir: str, statuses_dir: str, *,
-                       tau: float = 0.9, k: int = 3,
-                       num_hashes: int = 24, bands: int = 8,
-                       min_len: int = 8, id_col: str = "docno",
+                       tau: float = 0.9, id_col: str = "docno",
                        text_col: str = "text",
-                       portable: bool = True,
                        compact_every: int | None = None,
                        emb_col: str | None = None) -> None:
     """One micro-batch: statuses → fold → manifest swap, idempotent on
@@ -3190,19 +3171,15 @@ def _apply_dedup_batch(batch_df: DataFrame, batch_id: int,
                 f"cannot be reconstructed")
         pre = [s for s in man["snaps"] if s != lbs]
         statuses = dedup_incremental(
-            batch, index_dir, tau=tau, k=k, num_hashes=num_hashes,
-            bands=bands, id_col=id_col, text_col=text_col,
-            portable=portable, snaps=pre)
+            batch, index_dir, tau=tau, id_col=id_col, text_col=text_col,
+            snaps=pre)
         _write_statuses(statuses, statuses_dir, batch_id)
         return
     statuses = dedup_incremental(
-        batch, index_dir, tau=tau, k=k, num_hashes=num_hashes,
-        bands=bands, id_col=id_col, text_col=text_col, portable=portable)
+        batch, index_dir, tau=tau, id_col=id_col, text_col=text_col)
     _write_statuses(statuses, statuses_dir, batch_id)
-    update_dedup_index(spark, index_dir, batch, k=k,
-                       num_hashes=num_hashes, bands=bands,
-                       min_len=min_len, id_col=id_col, text_col=text_col,
-                       portable=portable, batch_id=batch_id,
+    update_dedup_index(spark, index_dir, batch, id_col=id_col,
+                       text_col=text_col, batch_id=batch_id,
                        new_embeddings=(batch if emb_col else None),
                        emb_id_col=id_col, emb_vec_col=emb_col or "")
     if compact_every is not None and \

@@ -84,7 +84,8 @@ def span_dup_pairs(fps: DataFrame, max_df: int = 50,
     The fingerprint frame feeds the df-cap aggregate AND the pair join,
     so it is checkpointed here — without it both branches re-derive the
     md5-per-gram winnowing lineage (measured 2.0× on the Zipf fixture:
-    7.3s → 3.6s), the same multi-consumer rule as dedup._materialize."""
+    7.3s → 3.6s), the same multi-consumer rule as
+    dedup.minhash_near_dups."""
     fps = fps.localCheckpoint()
     rare = (
         fps.groupBy("fp").agg(F.count("*").alias("_df"))

@@ -140,7 +140,7 @@ def q_minhash_lsh(spark, sf_dir):
     force is not a sound grader here)."""
     out = dedup.minhash_near_dups(
         _docs(spark, sf_dir), tau=MINHASH_TAU, k=3,
-        num_hashes=24, bands=8, id_col="doc_id", portable=True,
+        num_hashes=24, bands=8, id_col="doc_id",
     )
     return out.withColumn("jaccard", F.round("jaccard", 6))
 
@@ -169,7 +169,7 @@ WHERE a.docno < b.docno
 """)
 def q_simhash(spark, sf_dir):
     post = stats.postings(_docs(spark, sf_dir), id_col="doc_id")
-    fps = dedup.simhash_fingerprints(post, portable=True)
+    fps = dedup.simhash_fingerprints(post)
     out = dedup.simhash_near_dups(
         fps, max_hamming=SIMHASH_MAX_HAMMING, bands=SIMHASH_MAX_HAMMING + 1
     )

@@ -131,7 +131,7 @@ def _folded_index_dir(spark, sf_dir: str) -> str:
                                min_len=INC_SPAN_LEN, id_col="doc_id")
         dinc.update_dedup_index(spark, out,
                                 docs.filter(F.col("doc_id") % 3 == 2),
-                                min_len=INC_SPAN_LEN, id_col="doc_id")
+                                id_col="doc_id")
         return out
     return catalog.memo_store(sf_dir, "folded", build)
 
@@ -308,8 +308,7 @@ def q_incremental_dup_spans(spark, sf_dir):
     way, restricted to new docnos."""
     idx_dir = _dedup_index_dir(spark, sf_dir)
     return dinc.incremental_dup_spans(
-        _new_docs(spark, sf_dir), idx_dir, min_len=INC_SPAN_LEN,
-        id_col="doc_id")
+        _new_docs(spark, sf_dir), idx_dir, id_col="doc_id")
 
 
 @register("incremental_keep_first_clean", f"""
@@ -410,8 +409,7 @@ def q_incremental_keep_first_clean(spark, sf_dir):
     as CTEs, restricted to the new snapshot."""
     idx_dir = _dedup_index_dir(spark, sf_dir)
     return dinc.incremental_clean_keep_first(
-        _new_docs(spark, sf_dir), idx_dir, min_len=INC_SPAN_LEN,
-        id_col="doc_id")
+        _new_docs(spark, sf_dir), idx_dir, id_col="doc_id")
 
 
 # winnowing member (r9): fingerprint params come from the index build
@@ -610,7 +608,7 @@ def _ann_store(spark, sf_dir: str, tag: str, train) -> str:
             embeddings=standing, emb_id_col="vec_id")
         train(out, standing)
         dinc.update_dedup_index(
-            spark, out, min_len=INC_SPAN_LEN,
+            spark, out,
             new_embeddings=emb.filter(F.col("vec_id") % 3 == 0),
             emb_id_col="vec_id")
         return out
@@ -1807,18 +1805,17 @@ def _cc_split_index_dir(spark, sf_dir: str) -> tuple[str, list[int]]:
                                min_len=INC_SPAN_LEN, id_col="doc_id")
         dinc.build_cc_labels(spark, out, tau=INC_TAU)
         dinc.update_dedup_index(spark, out, _new_docs(spark, sf_dir),
-                                min_len=INC_SPAN_LEN, id_col="doc_id")
+                                id_col="doc_id")
         pre_chain = list(dinc._read_manifest(out)["snaps"])
         chain = spark.createDataFrame(_CC_CHAIN,
                                       "doc_id long, text string")
-        dinc.update_dedup_index(spark, out, chain,
-                                min_len=INC_SPAN_LEN, id_col="doc_id")
+        dinc.update_dedup_index(spark, out, chain, id_col="doc_id")
         rm = (_old_docs(spark, sf_dir)
               .unionByName(_new_docs(spark, sf_dir))
               .unionByName(chain)
               .filter(F.col("doc_id") % _CC_SPLIT_MOD == _CC_SPLIT_REM))
         dinc.update_dedup_index(spark, out, removed_docs=rm,
-                                min_len=INC_SPAN_LEN, id_col="doc_id")
+                                id_col="doc_id")
         return out, pre_chain
     return catalog.memo_store(sf_dir, "ccsplit", build)
 

@@ -125,7 +125,7 @@ def q_minhash_zipf(spark, sf_dir):
     pipeline (see module comment on why replay, not brute force)."""
     out = dedup.minhash_near_dups(
         _zipf_docs(spark), tau=ZIPF_MINHASH_TAU, k=3,
-        num_hashes=24, bands=8, id_col="doc_id", portable=True)
+        num_hashes=24, bands=8, id_col="doc_id")
     return out.withColumn("jaccard", F.round("jaccard", 6))
 
 
@@ -194,7 +194,7 @@ def q_simhash_zipf(spark, sf_dir):
     from hadoop_ir_spark.operators import stats
 
     post = stats.postings(_zipf_docs(spark), id_col="doc_id")
-    fps = dedup.simhash_fingerprints(post, portable=True)
+    fps = dedup.simhash_fingerprints(post)
     out = dedup.simhash_near_dups(
         fps, max_hamming=ZIPF_SIMHASH_K, bands=ZIPF_SIMHASH_K + 1)
     return out.withColumn("hamming", F.col("hamming").cast("int"))

@@ -121,26 +121,6 @@ def test_embedding_near_dups(spark):
     assert out == {(1, 2)}
 
 
-def test_minhash_materialize_modes_agree(spark):
-    """cache / checkpoint / none branch-point policies produce identical
-    pairs (checkpoint = lineage-truncating, the cluster-scale option)."""
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " + ("x" if i % 2 else "y"))
-         for i in range(8)] + [(100, "completely different text here entirely")],
-        "docno long, text string",
-    )
-    outs = []
-    for mode in ("cache", "checkpoint", "none"):
-        got = {(r["docno_a"], r["docno_b"])
-               for r in dedup.minhash_near_dups(
-                   docs, tau=0.5, materialize=mode).collect()}
-        outs.append(got)
-    assert outs[0] == outs[1] == outs[2]
-    assert outs[0]  # the near-identical docs must pair up
-    with pytest.raises(ValueError):
-        dedup.minhash_near_dups(docs, materialize="bogus")
-
-
 def test_embedding_near_dups_blocked_matches_brute_force(spark):
     """Triangle-blocked path vs a numpy brute force, with enough vectors
     to populate several (p, q) block-pair groups — and a plan check that

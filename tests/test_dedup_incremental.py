@@ -30,7 +30,7 @@ def _shingle_set(text, k=3):
     return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
 
 
-def _scratch_statuses(old, new, tau=0.9):
+def _scratch_statuses(old, new, tau=0.9, k=3):
     """Brute-force from-scratch rule on old ∪ new: a NEW doc drops iff
     an exact-text or Jaccard >= tau partner of lower precedence exists
     (precedence = (snapshot, docno))."""
@@ -40,14 +40,14 @@ def _scratch_statuses(old, new, tau=0.9):
         if not isn:
             continue
         dropped = False
-        s = _shingle_set(t)
+        s = _shingle_set(t, k)
         for isn2, d2, t2 in uni:
             if (isn2, d2) >= (isn, d):
                 continue
             if t2 == t:
                 dropped = True
                 break
-            s2 = _shingle_set(t2)
+            s2 = _shingle_set(t2, k)
             if s and s2:
                 j = len(s & s2) / len(s | s2)
                 if j >= tau:
@@ -127,12 +127,73 @@ def test_update_index_equals_rebuild(spark, tmp_path, snapshots):
     assert got == {100: "dropped"}
 
 
-def test_update_index_param_mismatch_raises(spark, tmp_path, snapshots):
+def test_store_params_come_from_the_manifest(spark, tmp_path, snapshots):
+    """A fold and every incremental query fingerprint new docs with the
+    parameters the store was built with, read from its manifest: on a
+    store built with non-default k, min_len, win_k and win_w, each query
+    equals its from-scratch counterpart run with those values."""
+    from hadoop_ir_spark.operators.winnow import (
+        duplicated_spans,
+        span_dup_pairs,
+        winnow_fingerprints,
+    )
+
+    k, L, win_k, win_w = 4, 6, 4, 3
     old, new = snapshots
+    span = " ".join(f"ps{i}" for i in range(7))   # duplicated at L=6 only
+    folded = [(30, f"{span} folded tail fa fb fc fd fe ff")]
+    new = new + [(13, f"nx ny {span} nz")]
     idx = str(tmp_path / "idx")
-    dinc.build_dedup_index(_df(spark, old), idx, k=3)
-    with pytest.raises(ValueError, match="parameter mismatch"):
-        dinc.update_dedup_index(spark, idx, _df(spark, new), k=4)
+    dinc.build_dedup_index(_df(spark, old), idx, k=k, min_len=L,
+                           win_k=win_k, win_w=win_w)
+    dinc.update_dedup_index(spark, idx, _df(spark, folded))
+    indexed, new_ids = old + folded, {d for d, _ in new}
+
+    got = {r["docno"]: r["status"]
+           for r in dinc.dedup_incremental(_df(spark, new), idx).collect()}
+    assert got == _scratch_statuses(indexed, new, k=k)
+    assert got[1] == "dropped"
+
+    spans = {tuple(r) for r in dinc.incremental_dup_spans(
+        _df(spark, new), idx).collect()}
+    assert spans == {tuple(r) for r in duplicated_spans(
+        _df(spark, indexed + new), min_len=L).collect()
+        if r["docno"] in new_ids}
+    assert (13, 2, 8, 7) in spans
+
+    clean = {r["docno"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
+             for r in dinc.incremental_clean_keep_first(
+                 _df(spark, new), idx).collect()}
+    assert clean == _scratch_keep_first(spark, indexed, new, min_len=L)
+
+    pairs = {tuple(r) for r in dinc.incremental_winnow_pairs(
+        _df(spark, new), idx, min_shared=1).collect()}
+    fps = winnow_fingerprints(_df(spark, indexed + new), k=win_k, w=win_w)
+    assert pairs == {tuple(r) for r in span_dup_pairs(
+        fps, max_df=50, min_shared=1).collect()
+        if r["doc_a"] in new_ids or r["doc_b"] in new_ids}
+    assert (13, 30) in {p[:2] for p in pairs}
+
+
+def test_union_snaps_is_one_read(spark, tmp_path):
+    """A table's visible snap dirs are read as one parquet relation: one
+    schema-inference job however many snaps are visible, each row tagged
+    with its snap id as ``_snap``, missing dirs skipped."""
+    idx = str(tmp_path / "idx")
+    for sid in (0, 2, 3):
+        spark.createDataFrame([(sid,)], "docno long").write.parquet(
+            os.path.join(idx, dinc.TOMBSTONES, f"snap={sid}"))
+    sc = spark.sparkContext
+    group = "test-union-snaps-one-read"
+    sc.setJobGroup(group, "_union_snaps")
+    try:
+        df = dinc._union_snaps(spark, idx, dinc.TOMBSTONES, [0, 1, 2, 3])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert df.columns == ["docno", "_snap"]
+    assert sorted(map(tuple, df.collect())) == [(0, 0), (2, 2), (3, 3)]
 
 
 def test_incremental_dup_spans_equals_scratch(spark, tmp_path):
@@ -150,7 +211,7 @@ def test_incremental_dup_spans_equals_scratch(spark, tmp_path):
     idx = str(tmp_path / "idx")
     dinc.build_dedup_index(_df(spark, old), idx, min_len=8)
     got = {tuple(r) for r in dinc.incremental_dup_spans(
-        _df(spark, new), idx, min_len=8).collect()}
+        _df(spark, new), idx).collect()}
     new_ids = {d for d, _ in new}
     want = {tuple(r) for r in duplicated_spans(
         _df(spark, old + new), min_len=8).collect()
@@ -198,7 +259,7 @@ def test_incremental_keep_first_equals_scratch(spark, tmp_path):
     dinc.build_dedup_index(_df(spark, old), idx, min_len=8)
     got = {r["docno"]: (r["clean_text"], r["n_tokens"], r["n_removed"])
            for r in dinc.incremental_clean_keep_first(
-               _df(spark, new), idx, min_len=8).collect()}
+               _df(spark, new), idx).collect()}
     assert got == _scratch_keep_first(spark, old, new)
     # spelled out: old-side ownership excises the new copy...
     assert "p1" not in got[1][0] and got[1][2] > 0
@@ -224,7 +285,7 @@ def test_keep_first_conservation_across_snapshots(spark, tmp_path,
     dinc.build_dedup_index(_df(spark, old), idx, min_len=L)
     cleaned = {r["docno"]: r["clean_text"]
                for r in dinc.incremental_clean_keep_first(
-                   _df(spark, new), idx, min_len=L).collect()}
+                   _df(spark, new), idx).collect()}
 
     def grams(text):
         toks = text.lower().split()
@@ -259,14 +320,14 @@ def test_keep_first_after_retraction(spark, tmp_path):
     # before retraction: both new copies excised (old owns the span)
     before = {r["docno"]: r["clean_text"]
               for r in dinc.incremental_clean_keep_first(
-                  _df(spark, new), idx, min_len=8).collect()}
+                  _df(spark, new), idx).collect()}
     assert "r1" not in before[1] and "r1" not in before[2]
     # retract the owner; doc 1 (earliest new) becomes canonical
     dinc.update_dedup_index(spark, idx,
                             removed_docs=_df(spark, [old[0]]))
     after = {r["docno"]: r["clean_text"]
              for r in dinc.incremental_clean_keep_first(
-                 _df(spark, new), idx, min_len=8).collect()}
+                 _df(spark, new), idx).collect()}
     assert "r1" in after[1] and "r1" not in after[2]
     survivors = [old[1]]
     assert after == {d: v[0] for d, v in
@@ -428,7 +489,7 @@ def test_simhash_incremental_equals_from_scratch(spark, tmp_path,
         _df(spark, new), idx, max_hamming=3).collect()}
 
     uni = _df(spark, old + new)
-    fps = dedup.simhash_fingerprints(stats.postings(uni), portable=True)
+    fps = dedup.simhash_fingerprints(stats.postings(uni))
     pairs = dedup.simhash_near_dups(fps, max_hamming=3,
                                     bands=None).collect()   # brute force
     prec = {d: (0, d) for d, _ in old} | {d: (1, d) for d, _ in new}

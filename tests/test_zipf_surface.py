@@ -136,8 +136,7 @@ def test_simhash_banding_bucket_skew_on_zipf(spark, zipf_docs):
 
     bands = ZIPF_SIMHASH_K + 1
     fps = dedup.simhash_fingerprints(
-        stats.postings(zipf_docs, id_col="doc_id"),
-        portable=True).localCheckpoint()
+        stats.postings(zipf_docs, id_col="doc_id")).localCheckpoint()
     sizes = (dedup.simhash_band_frame(fps, bands)
              .groupBy("band", "key").count().localCheckpoint())
     mx = sizes.agg(F.max("count")).first()[0]
